@@ -1283,10 +1283,11 @@ def dedup_clusters(
     their own singleton cluster.
 
     Scale shape: candidate pairs from the banded equi-join
-    (``minhash_lsh_pairs``), components via the pointer-doubling
-    label-propagation engine (``webgraph.connected_components`` —
-    O(log n) rounds over contracted edges), final assignment one LEFT
-    join from the corpus id list."""
+    (``minhash_lsh_pairs``), components via
+    ``webgraph.connected_components`` (min-label propagation over
+    contracted edges, then pointer jumping until no label changes; it
+    raises when ``max_iter`` rounds are not enough), final assignment one
+    LEFT join from the corpus id list."""
     from .webgraph import connected_components
 
     pairs = minhash_lsh_pairs(

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .webgraph import connected_components
+
 
 def connected_components_1d(
     n: int, edge_fn: Callable[[int, int], bool]
@@ -280,11 +282,8 @@ def detect_lines_distributed(
       tolerance shares a band — an equi-join on (doc, band), with the
       exact predicate (including the reference's tolerance SWAP,
       shape_operations.py:126-130) as the join filter;
-    * components by min-label propagation with pointer doubling: labels
-      start as the block id; each round every node takes the min label in
-      its neighborhood and EDGES CONTRACT onto current labels, so chains
-      collapse geometrically (O(log n) rounds in practice, ``max_iter``
-      bound + early stop on a converged round);
+    * components by ``webgraph.connected_components`` keyed by
+      ``key_cols``; a block with no edge is its own component;
     * aggregate per component = union-reduce (min/max corners) + count,
       line_id = rank of the component's first block id per document.
 
@@ -292,7 +291,6 @@ def detect_lines_distributed(
     contract as ``detect_lines``; equality with the per-document kernel is
     pinned by tests."""
     eff_y_tol, eff_x_tol = x_tolerance, y_tolerance  # reference swap
-    keys = [F.col(c) for c in key_cols]
 
     base = df.select(
         *key_cols,
@@ -333,95 +331,14 @@ def detect_lines_distributed(
             F.col("a.bid").alias("u"),
             F.col("b.bid").alias("v"),
         )
-        .dropDuplicates(key_cols + ["u", "v"])
     )
 
-    # min-label propagation with contraction + pointer doubling.  The
-    # plain one-hop variant moves a min label one edge per round (O(n)
-    # rounds on a chain — useless); composing L := L∘L each round doubles
-    # the propagation distance → O(log n) rounds.  Every round's outputs
-    # are localCheckpoint'ed BEFORE reuse so the lineage (and scheduler
-    # cost) stays constant per round.
-    labels = base.select(*key_cols, F.col("bid"), F.col("bid").alias("lbl"))
-    cur_edges = edges.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # 1-hop: neighborhood minimum (undirected)
-        nbr = cur_edges.select(
-            *key_cols, F.col("u").alias("bid"), F.col("v").alias("nl")
-        ).unionByName(
-            cur_edges.select(
-                *key_cols, F.col("v").alias("bid"), F.col("u").alias("nl")
-            )
-        )
-        new_labels = (
-            labels.join(nbr, on=key_cols + ["bid"], how="left")
-            .groupBy(*key_cols, "bid")
-            .agg(F.least(F.min("lbl"), F.min("nl")).alias("lbl"))
-        )
-        # pointer doubling: lbl := lbl(lbl)
-        ptr = new_labels.select(
-            *key_cols, F.col("bid").alias("lbl"), F.col("lbl").alias("_l2")
-        )
-        new_labels = (
-            new_labels.join(ptr, on=key_cols + ["lbl"], how="left")
-            .select(
-                *key_cols,
-                "bid",
-                F.coalesce(F.col("_l2"), F.col("lbl")).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # contract edges onto the (checkpointed) labels
-        lu = new_labels.select(
-            *key_cols, F.col("bid").alias("u"), F.col("lbl").alias("lu")
-        )
-        lv = new_labels.select(
-            *key_cols, F.col("bid").alias("v"), F.col("lbl").alias("lv")
-        )
-        contracted = (
-            cur_edges.join(lu, on=key_cols + ["u"])
-            .join(lv, on=key_cols + ["v"])
-            .where(F.col("lu") != F.col("lv"))
-            .select(
-                *key_cols,
-                F.least("lu", "lv").alias("u"),
-                F.greatest("lu", "lv").alias("v"),
-            )
-            .dropDuplicates(key_cols + ["u", "v"])
-            .localCheckpoint(eager=True)
-        )
-        remaining = contracted.count()  # driver scalar per round, by design
-        labels = new_labels
-        cur_edges = contracted
-        if remaining == 0:
-            break
-
-    # resolve label chains by pointer jumping: a leaf's label may point at
-    # a representative whose own label kept dropping during contraction —
-    # substitute lbl := label(lbl) with doubling until fixpoint
-    for _ in range(max_iter):
-        ptr = labels.select(
-            *key_cols, F.col("bid").alias("lbl"), F.col("lbl").alias("_lbl2")
-        )
-        jumped = (
-            labels.join(ptr, on=key_cols + ["lbl"], how="left")
-            .select(
-                *key_cols,
-                "bid",
-                F.coalesce(F.col("_lbl2"), F.col("lbl")).alias("lbl"),
-                (F.coalesce(F.col("_lbl2"), F.col("lbl")) != F.col("lbl"))
-                .cast("int")
-                .alias("_chg"),
-            )
-        )
-        jumped = jumped.localCheckpoint(eager=True)
-        changed = jumped.agg(F.sum("_chg")).collect()[0][0] or 0
-        labels = jumped.drop("_chg")
-        if changed == 0:
-            break
-
-    joined = base.join(
-        labels.select(*key_cols, "bid", "lbl"), on=key_cols + ["bid"]
+    labels = connected_components(
+        edges, max_iter=max_iter, key_cols=key_cols
+    ).withColumnRenamed("id", "bid")
+    # blocks with no edge are their own line
+    joined = base.join(labels, on=key_cols + ["bid"], how="left").withColumn(
+        "lbl", F.coalesce(F.col("lbl"), F.col("bid"))
     )
     comp = joined.groupBy(*key_cols, "lbl").agg(
         F.min("bx1").alias("x_1"),

@@ -30,6 +30,8 @@ is bounded by n_edges / UNIT per iteration (≪ 1e-6 here).
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -236,80 +238,108 @@ def url_dedup(
 # ---------------------------------------------------------------------------
 
 
+def _jump(labels: DataFrame, keys: list) -> DataFrame:
+    """One pointer-jumping pass, ``lbl := lbl(lbl)``, with ``_moved``
+    marking the nodes whose label changed.  Every label is itself a node
+    of ``labels``, so the inner join keeps every row."""
+    ptr = labels.select(
+        *keys, F.col("id").alias("lbl"), F.col("lbl").alias("_l2")
+    )
+    return labels.join(ptr, on=keys + ["lbl"]).select(
+        *keys, "id", F.col("_l2").alias("lbl"),
+        (F.col("_l2") != F.col("lbl")).alias("_moved"),
+    )
+
+
 def connected_components(
-    edges: DataFrame, u: str = "u", v: str = "v", max_iter: int = 25
+    edges: DataFrame,
+    u: str = "u",
+    v: str = "v",
+    max_iter: int = 25,
+    key_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Undirected connected components over a global edge list →
-    (id, lbl) where ``lbl`` is the minimum node id reachable — the
-    canonical component representative.
+    """Undirected connected components over an edge list →
+    ``key_cols + (id, lbl)``, where ``lbl`` is the minimum node id of the
+    component.  Each ``key_cols`` value is its own graph: the same id
+    under two key values stays in two components.  Self-loops are
+    dropped, and nodes that appear in no other edge are not in the
+    output.
 
-    Same engine as ``grouping.detect_lines_distributed`` minus the
-    per-document key: min-label propagation with POINTER DOUBLING
-    (lbl := lbl(lbl)) so chains collapse in O(log n) rounds, edges
-    CONTRACTED onto current labels each round, every round's outputs
-    ``localCheckpoint``-ed (constant lineage).
+    Min-label propagation over contracted edges.  Each round every edge
+    endpoint takes the minimum of its label and its neighbours, one
+    pointer-jumping pass (``lbl := lbl(lbl)``) doubles how far labels
+    travel, and the edges are rewritten onto the new labels, dropping
+    those whose ends now agree.  The loop stops once no edge is left.
+    Nodes that left the edge set earlier can still point at a label that
+    has dropped since, so pointers are then jumped until no label
+    changes.  Every round's outputs are ``localCheckpoint``-ed, which
+    keeps the lineage constant; the checkpoints are lazy, so the stage
+    that next reads one fills it and no separate count job runs.
 
-    Convergence probe (r6): the loop exits when the CONTRACTED edge set
-    is empty — a ``limit(1).count()`` over the already-checkpointed
-    ``cur``, zero shuffles.  Equivalence with the former
-    labels-changed probe (a per-round shuffle join of two label
-    tables): contracted-empty means every edge's endpoints share a
-    label, so labels are constant on each component; the component's
-    minimum node m always has lbl(m) = m (labels only decrease and are
-    bounded below by the component min), hence the constant IS the
-    component min and no further round can change any label.
-    Conversely, while two distinct labels remain adjacent the
-    contraction keeps that edge.  The probe also exits one round
-    earlier than labels-changed (which needed an extra no-op round to
-    observe stability); the labels at exit are identical.  ``max_iter``
-    still bounds the O(log n) loop."""
-    e = (
-        edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
+    Raises ``RuntimeError`` when ``max_iter`` rounds, or ``max_iter``
+    jumping passes, end before the labels reach a fixpoint."""
+    keys = list(key_cols)
+    cur = (
+        edges.select(
+            *keys,
+            F.least(u, v).alias("u"),
+            F.greatest(u, v).alias("v"),
+        )
         .where(F.col("u") != F.col("v"))
-        .distinct()
+        .dropDuplicates()
+        .localCheckpoint(eager=False)
     )
-    nodes = (
-        e.select(F.col("u").alias("id"))
-        .union(e.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    labels = nodes.select("id", F.col("id").alias("lbl")).localCheckpoint(
-        eager=True
-    )
-    cur = e.localCheckpoint(eager=True)
+    labels = None
     for _ in range(max_iter):
         nbr = cur.select(
-            F.col("u").alias("id"), F.col("v").alias("nl")
+            *keys, F.col("u").alias("id"), F.col("v").alias("lbl")
         ).unionByName(
-            cur.select(F.col("v").alias("id"), F.col("u").alias("nl"))
+            cur.select(
+                *keys, F.col("v").alias("id"), F.col("u").alias("lbl")
+            )
         )
-        new = (
-            labels.join(nbr, on="id", how="left")
-            .groupBy("id")
-            .agg(F.least(F.min("lbl"), F.min("nl")).alias("lbl"))
+        if labels is not None:
+            nbr = nbr.unionByName(labels.select(*keys, "id", "lbl"))
+        hop = nbr.groupBy(*keys, "id").agg(
+            F.least(F.col("id"), F.min("lbl")).alias("lbl")
         )
-        ptr = new.select(
-            F.col("id").alias("lbl"), F.col("lbl").alias("_l2")
+        labels = _jump(hop, keys).localCheckpoint(eager=False)
+        lu = labels.select(
+            *keys, F.col("id").alias("u"), F.col("lbl").alias("lu")
         )
-        new = (
-            new.join(ptr, on="lbl", how="left")
-            .select("id", F.coalesce(F.col("_l2"), F.col("lbl")).alias("lbl"))
-            .localCheckpoint(eager=True)
+        lv = labels.select(
+            *keys, F.col("id").alias("v"), F.col("lbl").alias("lv")
         )
-        labels = new
-        lu = labels.select(F.col("id").alias("u"), F.col("lbl").alias("lu"))
-        lv = labels.select(F.col("id").alias("v"), F.col("lbl").alias("lv"))
         cur = (
-            cur.join(lu, on="u")
-            .join(lv, on="v")
-            .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            cur.join(lu, on=keys + ["u"])
+            .join(lv, on=keys + ["v"])
+            .where(F.col("lu") != F.col("lv"))
+            .select(
+                *keys,
+                F.least("lu", "lv").alias("u"),
+                F.greatest("lu", "lv").alias("v"),
+            )
+            .dropDuplicates()
+            .localCheckpoint(eager=False)
         )
-        if cur.limit(1).count() == 0:
+        if cur.isEmpty():
             break
-    return labels
+    else:
+        raise RuntimeError(
+            f"connected_components: edges left after max_iter={max_iter}"
+            " rounds"
+        )
+    # a pass that moves no label leaves lbl(lbl) = lbl everywhere
+    for _ in range(max_iter):
+        if labels.where("_moved").isEmpty():
+            return labels.drop("_moved")
+        labels = _jump(labels.drop("_moved"), keys).localCheckpoint(
+            eager=False
+        )
+    raise RuntimeError(
+        f"connected_components: labels still moving after max_iter={max_iter}"
+        " jumps"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,6 @@
 from .extract import extract_main_text  # noqa: F401
 from .reading_order import (  # noqa: F401
-    order_blocks_xy_cut,
     reading_order_columnar,
     xy_cut_indices,
-    xy_cut_texts,
 )
-from .segment import segment_html, segment_pages  # noqa: F401
+from .segment import segment_pages  # noqa: F401

@@ -35,8 +35,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .reading_order import reading_order_columnar, xy_cut_texts
-from .segment import BOILERPLATE_TYPES, segment_pages
+from .reading_order import reading_order_columnar, xy_cut_joined
+from .segment import BOILERPLATE_TYPES
 
 LINK_DENSITY_MAX = 0.5
 BAND_FRAC = 0.12
@@ -87,47 +87,17 @@ def drop_boilerplate(df: DataFrame) -> DataFrame:
     return df.withColumn("main_blocks", main)
 
 
-def assemble_text(
-    df: DataFrame,
-    blocks_col: str = "main_blocks",
-    reading_order: str = "xy_cut",
-) -> DataFrame:
-    """Reading order + space-join text assembly.
-
-    reading_order='xy_cut' (default): the generalized recursive XY-cut
-    (Arrow UDF).  'columnar': the documented 2-column recipe as pure
-    expressions (SURVEY §2.10) — zero Python, for pipelines known to be
-    ≤2-column; equivalent on such layouts (pinned by test)."""
-    if reading_order == "columnar":
-        ordered = reading_order_columnar(
-            F.col(blocks_col), F.col("page_data.width")
-        )
-        texts = F.filter(
-            F.transform(ordered, lambda b: b["text"]),
-            lambda t: t.isNotNull() & (t != ""),
-        )
-        out = df.withColumn("extracted_text", F.concat_ws(" ", texts))
-    else:
-        ordered_texts = xy_cut_texts(F.col(blocks_col))
-        out = df.withColumn(
-            "extracted_text", F.concat_ws(" ", ordered_texts)
-        )
-    return out.withColumn("n_blocks", F.size(F.col(blocks_col)))
-
-
 def _extract_lean(df: DataFrame, reading_order: str) -> DataFrame:
     """Hot-path extraction over the FLAT segmentation arrays — identical
     semantics to the struct path (pinned by the byte-identity tests), but
     the per-block structs are 8 fields zipped once instead of 19-field
     TEXTBLOCKs with null casts; the struct API path (`drop_boilerplate` on
     `blocks`) remains the public surface for layout processing."""
-    from .reading_order import xy_cut_joined
-
     z = F.arrays_zip(
-        F.col("_bx1").alias("x1"),
-        F.col("_by1").alias("y1"),
-        F.col("_bx2").alias("x2"),
-        F.col("_by2").alias("y2"),
+        F.col("_bx1").alias("x_1"),
+        F.col("_by1").alias("y_1"),
+        F.col("_bx2").alias("x_2"),
+        F.col("_by2").alias("y_2"),
         F.col("_btext").alias("text"),
         F.col("_btype").alias("type"),
         F.col("_bscore").alias("score"),
@@ -136,44 +106,15 @@ def _extract_lean(df: DataFrame, reading_order: str) -> DataFrame:
     figs = F.filter(F.col("_z"), lambda r: r["type"] == "Figure")
     df = df.withColumn("_figs", figs)
     page_w, page_h = F.col("page_w"), F.col("page_h")
-
-    def keep(r):
-        typed_ok = ~r["type"].isin(*BOILERPLATE_TYPES, "Figure")
-        link_ok = r["score"] >= (1.0 - LINK_DENSITY_MAX)
-        w = r["x2"] - r["x1"]
-        is_band = (w >= BAND_WIDTH_FRAC * page_w) & (
-            (r["y2"] <= BAND_FRAC * page_h)
-            | (r["y1"] >= (1 - BAND_FRAC) * page_h)
-        )
-        cx = (r["x1"] + r["x2"]) / 2.0
-        cy = (r["y1"] + r["y2"]) / 2.0
-        in_fig = F.exists(
-            F.col("_figs"),
-            lambda f: (f["x1"] <= cx)
-            & (cx <= f["x2"])
-            & (f["y1"] <= cy)
-            & (cy <= f["y2"]),
-        )
-        return typed_ok & link_ok & ~is_band & ~in_fig
-
-    df = df.withColumn("_main", F.filter(F.col("_z"), keep))
+    df = df.withColumn(
+        "_main",
+        F.filter(
+            F.col("_z"),
+            lambda r: keep_main_block(r, F.col("_figs"), page_w, page_h),
+        ),
+    )
     if reading_order == "columnar":
-        half = page_w / 2.0 * 1.05
-
-        def cmp(a, b):
-            ka = F.struct(
-                ((a["x1"] + a["x2"]) / 2.0 > half).cast("int").alias("c"),
-                a["y1"].alias("y"),
-                a["x1"].alias("x"),
-            )
-            kb = F.struct(
-                ((b["x1"] + b["x2"]) / 2.0 > half).cast("int").alias("c"),
-                b["y1"].alias("y"),
-                b["x1"].alias("x"),
-            )
-            return F.when(ka < kb, -1).when(ka > kb, 1).otherwise(0)
-
-        ordered = F.array_sort(F.col("_main"), cmp)
+        ordered = reading_order_columnar(F.col("_main"), page_w)
         texts = F.filter(
             F.transform(ordered, lambda r: r["text"]),
             lambda t: t.isNotNull() & (t != ""),
@@ -183,10 +124,10 @@ def _extract_lean(df: DataFrame, reading_order: str) -> DataFrame:
         df = df.withColumn(
             "extracted_text",
             xy_cut_joined(
-                F.transform(F.col("_main"), lambda r: r["x1"]),
-                F.transform(F.col("_main"), lambda r: r["y1"]),
-                F.transform(F.col("_main"), lambda r: r["x2"]),
-                F.transform(F.col("_main"), lambda r: r["y2"]),
+                F.transform(F.col("_main"), lambda r: r["x_1"]),
+                F.transform(F.col("_main"), lambda r: r["y_1"]),
+                F.transform(F.col("_main"), lambda r: r["x_2"]),
+                F.transform(F.col("_main"), lambda r: r["y_2"]),
                 F.transform(F.col("_main"), lambda r: r["text"]),
             ),
         )

@@ -9,10 +9,9 @@ block projections — whose degenerate case IS the 2-column recipe.
 
 Two implementations:
 
-* ``xy_cut_order`` — pandas UDF (UDF slot #3): per-document numpy recursion
-  over the block bboxes; returns the permutation as ``array<int>`` so only
-  integers cross the Arrow boundary (texts are re-ordered columnar with
-  ``transform`` + ``element_at``).
+* ``xy_cut_joined`` — pandas UDF (UDF slot #3): per-document numpy
+  recursion over the block bboxes, fused with the ' '-join so one string
+  per document crosses the Arrow boundary.
 * ``reading_order_columnar`` — the pure-expression fallback:
   ``array_sort`` by (column-bucket, y_1, x_1), exactly the documented
   2-column recipe.
@@ -27,7 +26,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType
 
 GAP_EPS = 0.5  # minimum projection gap (px) that constitutes a cut
 
@@ -91,77 +89,6 @@ def xy_cut_indices(
     return out
 
 
-@pandas_udf(ArrayType(IntegerType()))
-def xy_cut_order(
-    xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series
-) -> pd.Series:
-    res = []
-    for a, b, c, d in zip(xs1, ys1, xs2, ys2):
-        if a is None or len(a) == 0:
-            res.append([])
-            continue
-        res.append(
-            xy_cut_indices(
-                np.asarray(a, dtype="float64"),
-                np.asarray(b, dtype="float64"),
-                np.asarray(c, dtype="float64"),
-                np.asarray(d, dtype="float64"),
-            )
-        )
-    return pd.Series(res)
-
-
-def _make_texts_udf():
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def xy_cut_texts_udf(
-        xs1: pd.Series,
-        ys1: pd.Series,
-        xs2: pd.Series,
-        ys2: pd.Series,
-        texts: pd.Series,
-    ) -> pd.Series:
-        res = []
-        for a, b, c, d, t in zip(xs1, ys1, xs2, ys2, texts):
-            if a is None or len(a) == 0:
-                res.append([])
-                continue
-            order = xy_cut_indices(
-                np.asarray(a, dtype="float64"),
-                np.asarray(b, dtype="float64"),
-                np.asarray(c, dtype="float64"),
-                np.asarray(d, dtype="float64"),
-            )
-            res.append([t[i] for i in order if t[i]])
-        return pd.Series(res)
-
-    return xy_cut_texts_udf
-
-
-_texts_udf = None
-
-
-def xy_cut_texts(blocks: Column) -> Column:
-    """blocks array<TEXTBLOCK> → array<string> of the blocks' texts in
-    XY-cut reading order, empty/null texts removed.
-
-    NB a Python UDF result cannot feed a higher-order function
-    (Spark cannot extract the UDF from inside transform/filter), so the
-    text selection happens inside the UDF and the caller finishes with the
-    plain ``concat_ws`` expression."""
-    global _texts_udf
-    if _texts_udf is None:
-        _texts_udf = _make_texts_udf()
-    return _texts_udf(
-        F.transform(blocks, lambda b: b["x_1"]),
-        F.transform(blocks, lambda b: b["y_1"]),
-        F.transform(blocks, lambda b: b["x_2"]),
-        F.transform(blocks, lambda b: b["y_2"]),
-        F.transform(blocks, lambda b: b["text"]),
-    )
-
-
 def _make_joined_udf():
     from pyspark.sql.types import StringType
 
@@ -201,40 +128,6 @@ def xy_cut_joined(xs1, ys1, xs2, ys2, texts) -> Column:
     if _joined_udf is None:
         _joined_udf = _make_joined_udf()
     return _joined_udf(xs1, ys1, xs2, ys2, texts)
-
-
-def _make_blocks_udf():
-    from ..schema import TEXTBLOCK
-
-    @pandas_udf(ArrayType(TEXTBLOCK))
-    def xy_cut_blocks_udf(blocks: pd.Series) -> pd.Series:
-        res = []
-        for blist in blocks:
-            if blist is None or len(blist) == 0:
-                res.append(blist)
-                continue
-            x1 = np.array([b["x_1"] for b in blist], dtype="float64")
-            y1 = np.array([b["y_1"] for b in blist], dtype="float64")
-            x2 = np.array([b["x_2"] for b in blist], dtype="float64")
-            y2 = np.array([b["y_2"] for b in blist], dtype="float64")
-            order = xy_cut_indices(x1, y1, x2, y2)
-            res.append([blist[i] for i in order])
-        return pd.Series(res)
-
-    return xy_cut_blocks_udf
-
-
-_blocks_udf = None
-
-
-def order_blocks_xy_cut(blocks: Column) -> Column:
-    """blocks array<TEXTBLOCK> → same array in XY-cut reading order.  The
-    struct array round-trips through Arrow (fatter than ``xy_cut_texts`` —
-    prefer that one when only the text is needed)."""
-    global _blocks_udf
-    if _blocks_udf is None:
-        _blocks_udf = _make_blocks_udf()
-    return _blocks_udf(blocks)
 
 
 def reading_order_columnar(blocks: Column, page_w: Column) -> Column:

@@ -19,7 +19,7 @@ every element carrying a ``data-box`` attribute becomes one TEXTBLOCK with
   i.e. a content-confidence score in the detector-score slot,
 * ``id`` = document-order index, ``parent`` = enclosing data-box block id.
 
-Arrow-batched pandas UDF (per-row python inside an Arrow batch — the
+One ``mapInArrow`` stage (per-row python inside an Arrow batch — the
 sanctioned vectorized pattern; never a row-at-a-time Spark UDF).
 """
 
@@ -28,13 +28,10 @@ from __future__ import annotations
 from html.parser import HTMLParser
 from typing import List, Optional
 
-import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-from ..schema import FIELD_NAMES, LAYOUT, TEXTBLOCK
+from ..schema import FIELD_NAMES
 from ..sources.charset import decode_payload
 
 TAG_TYPE = {
@@ -142,25 +139,6 @@ def parse_page(html: str):
         )
         rows.append(row)
     return p.page_w, p.page_h, rows
-
-
-@pandas_udf(LAYOUT)
-def segment_html(html: pd.Series) -> pd.DataFrame:
-    """Scalar pandas-UDF form: html → LAYOUT struct.  Prefer
-    ``segment_pages`` (mapInPandas) inside pipelines — see its docstring."""
-    pages = []
-    blocks = []
-    for payload in html:
-        if payload is None:
-            pages.append(None)
-            blocks.append([])
-            continue
-        if isinstance(payload, (bytes, bytearray)):
-            payload = decode_payload(payload)
-        w, h, rows = parse_page(payload)
-        pages.append({"width": w, "height": h, "index": 0})
-        blocks.append(rows)
-    return pd.DataFrame({"page_data": pages, "blocks": blocks})
 
 
 import re as _re
@@ -288,15 +266,12 @@ class _FastParser:
         self._a_depth = a_depth
 
 
-def parse_page_arrays(html: str, parser_cls=None):
+def parse_page_arrays(html: str):
     """Parse one page → (page_w, page_h, column lists).  The flat-array
-    twin of ``parse_page`` used by the hot path (see ``segment_pages``).
-    ``parser_cls`` selects the tokenizer: the default fast tag tokenizer,
-    or ``_SegmentParser`` (html.parser — the reference implementation,
-    also selectable via ``LPS_SEGMENT_IMPL=htmlparser`` for the scaling
-    bench's compute-dense config); both emit identical events (equivalence
-    pinned by tests/test_extract.py)."""
-    p = (parser_cls or _FastParser)()
+    twin of ``parse_page`` used by the hot path (see ``segment_pages``),
+    on the fast tag tokenizer; ``parse_page`` runs the same walk on
+    html.parser."""
+    p = _FastParser()
     p.feed(html)
     x1, y1, x2, y2 = [], [], [], []
     texts, types, parents, scores = [], [], [], []
@@ -328,9 +303,9 @@ _ARRAY_COLS = [
 ]
 
 
-def _segment_batch(payloads, parser_cls):
+def _segment_batch(payloads):
     """Parse one Arrow batch's html payloads → (page_w list, page_h list,
-    {array_col: list-of-lists}).  Shared by both UDF transports."""
+    {array_col: list-of-lists})."""
     cols = {n: [] for n, _ in _ARRAY_COLS}
     ws, hs = [], []
     for payload in payloads:
@@ -342,25 +317,12 @@ def _segment_batch(payloads, parser_cls):
             continue
         if isinstance(payload, (bytes, bytearray)):
             payload = decode_payload(payload)
-        w, h, arrs = parse_page_arrays(payload, parser_cls)
+        w, h, arrs = parse_page_arrays(payload)
         ws.append(w)
         hs.append(h)
         for (n, _t), arr in zip(_ARRAY_COLS, arrs):
             cols[n].append(arr)
     return ws, hs, cols
-
-
-def _selected_parser():
-    # resolved on the DRIVER and captured by the closure (executor env is
-    # not guaranteed): the html.parser reference implementation is
-    # selectable for the scaling bench's compute-dense config
-    import os as _os
-
-    return (
-        _SegmentParser
-        if _os.environ.get("LPS_SEGMENT_IMPL", "").lower() == "htmlparser"
-        else _FastParser
-    )
 
 
 def segment_pages_arrays(pages_df, html_col: str = "html") -> "DataFrame":
@@ -377,11 +339,7 @@ def segment_pages_arrays(pages_df, html_col: str = "html") -> "DataFrame":
     lists cross to the JVM as directly-built ``pyarrow`` ListArrays
     instead of pandas object columns (which pay a per-row
     python-object→Arrow conversion) — measured 18% off the whole
-    segmentation stage at sf0.1, bit-identical output (pinned by the
-    byte-identity tests; ``LPS_SEGMENT_STAGE=pandas`` keeps the old
-    transport selectable for A/B)."""
-    import os as _os
-
+    segmentation stage at sf0.1, bit-identical output."""
     from pyspark.sql.types import _parse_datatype_string
 
     passthrough = [f for f in pages_df.schema.fields if f.name != html_col]
@@ -397,21 +355,6 @@ def segment_pages_arrays(pages_df, html_col: str = "html") -> "DataFrame":
         ]
     )
     names = [f.name for f in passthrough]
-    parser_cls = _selected_parser()
-
-    if _os.environ.get("LPS_SEGMENT_STAGE", "").lower() == "pandas":
-
-        def gen_pd(batches):
-            for pdf in batches:
-                ws, hs, cols = _segment_batch(pdf[html_col], parser_cls)
-                out = pdf[names].copy()
-                out["page_w"] = ws
-                out["page_h"] = hs
-                for n, _t in _ARRAY_COLS:
-                    out[n] = cols[n]
-                yield out
-
-        return pages_df.mapInPandas(gen_pd, schema=out_schema)
 
     def gen(batches):
         import pyarrow as pa
@@ -423,7 +366,7 @@ def segment_pages_arrays(pages_df, html_col: str = "html") -> "DataFrame":
         }
         for b in batches:
             payloads = b.column(b.schema.get_field_index(html_col)).to_pylist()
-            ws, hs, cols = _segment_batch(payloads, parser_cls)
+            ws, hs, cols = _segment_batch(payloads)
             arrays = [b.column(b.schema.get_field_index(n)) for n in names]
             arrays.append(pa.array(ws, pa.float64()))
             arrays.append(pa.array(hs, pa.float64()))
@@ -475,8 +418,6 @@ def attach_blocks(df) -> "DataFrame":
     # and zip_with null-pads — guard so an empty page maps to an empty
     # Layout (reference returns Layout([]) for block-less pages), not one
     # phantom all-NULL block
-    from pyspark.sql.types import ArrayType
-
     blocks = F.when(F.size(F.col("_bx1")) > 0, zipped).otherwise(
         F.array().cast(ArrayType(S.TEXTBLOCK))
     )
@@ -491,10 +432,10 @@ def attach_blocks(df) -> "DataFrame":
 
 def segment_pages(pages_df, html_col: str = "html") -> "DataFrame":
     """pages(url, …, html) → (all columns except html) + (page_data,
-    blocks).  One narrow Arrow stage (mapInPandas) + JVM-side struct
+    blocks).  One narrow Arrow stage (mapInArrow) + JVM-side struct
     assembly, no shuffle.
 
-    Implemented as ``mapInPandas`` rather than a scalar struct-returning
+    Implemented as ``mapInArrow`` rather than a scalar struct-returning
     pandas UDF for two reasons: (1) the fat ``html`` payload column is
     dropped AT the Arrow boundary instead of being carried through the
     plan; (2) the stage output is a fresh set of plain attributes, so

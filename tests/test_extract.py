@@ -241,26 +241,3 @@ def test_charset_utf8_payloads_unchanged(spark):
     )
     out = segment_pages(df).collect()[0]
     assert out.blocks[0].text == "héllo wörld"
-
-
-def test_pandas_transport_ab_identical(spark, monkeypatch):
-    """The LPS_SEGMENT_STAGE=pandas fallback transport (mapInPandas) must
-    stay value-identical to the default mapInArrow transport — it is the
-    A/B lever for the r5 transport switch, and nothing else exercises it.
-    The env var is read at PLAN BUILD time, so monkeypatching around the
-    two segment_pages_arrays calls selects the transport per plan."""
-    from layout_parser_spark.plans.segment import segment_pages_arrays
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(60)
-    pages = synth_pages(docs).select("doc_id", "url", "html")
-
-    def run():
-        rows = segment_pages_arrays(pages).orderBy("doc_id").collect()
-        return [r.asDict(recursive=True) for r in rows]
-
-    monkeypatch.delenv("LPS_SEGMENT_STAGE", raising=False)
-    arrow_rows = run()
-    monkeypatch.setenv("LPS_SEGMENT_STAGE", "pandas")
-    pandas_rows = run()
-    assert arrow_rows == pandas_rows
-    assert len(arrow_rows) == 60

@@ -122,17 +122,119 @@ def test_url_dedup_collapses_variants(spark):
     }
 
 
+#: the graph from ADVICE.md: a loop that stops once no contracted edge is
+#: left, with no pointer jumping after it, gives node 58 the label 36
+ADVICE_EDGES = [(7, 39), (7, 49), (32, 49), (36, 39), (36, 45), (45, 46),
+                (46, 58)]
+
+
 def test_connected_components_chain_and_singleton(spark):
     """A 5-node chain (worst case for 1-hop propagation) collapses to
-    min-label in O(log n) pointer-doubling rounds; separate pair forms
-    its own component."""
+    min-label and a separate pair forms its own component; the ADVICE
+    graph collapses to 7; the same ids under two key values stay two
+    graphs."""
     from layout_parser_spark.operators.webgraph import connected_components
 
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "u long, v long"
+    for edges, expected in [
+        ([(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)],
+         {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}),
+        (ADVICE_EDGES, {n: 7 for e in ADVICE_EDGES for n in e}),
+    ]:
+        e = spark.createDataFrame(edges, "u long, v long")
+        out = {r.id: r.lbl for r in connected_components(e).collect()}
+        assert out == expected, edges
+
+    keyed = spark.createDataFrame(
+        [(0, 1, 2), (0, 2, 3), (1, 3, 4), (1, 1, 9)], "g long, u long, v long"
     )
-    out = {r.id: r.lbl for r in connected_components(e).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    out = {(r.g, r.id): r.lbl
+           for r in connected_components(keyed, key_cols=["g"]).collect()}
+    assert out == {(0, 1): 1, (0, 2): 1, (0, 3): 1,
+                   (1, 1): 1, (1, 9): 1, (1, 3): 3, (1, 4): 3}
+
+
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _property_graphs():
+    """200 seeded random graphs of 5-40 edges over shuffled ids, chains of
+    2-128 nodes in random id order, and stars centred on the smallest,
+    the largest and a middle id."""
+    import random
+
+    rng = random.Random(20261017)
+    graphs = []
+    for _ in range(200):
+        n = rng.randint(4, 40)
+        ids = rng.sample(range(1000), n)
+        graphs.append([(rng.choice(ids), rng.choice(ids))
+                       for _ in range(rng.randint(5, 40))])
+    for n in (2, 3, 4, 5, 7, 8, 9, 16, 31, 32, 33, 64, 100, 127, 128):
+        ids = rng.sample(range(1000), n)
+        chain = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+        rng.shuffle(chain)
+        graphs.append(chain)
+    for n in (2, 5, 40):
+        ids = sorted(rng.sample(range(1000), n + 1))
+        for c in (ids[0], ids[-1], ids[n // 2]):
+            graphs.append([(c, x) for x in ids if x != c])
+    return graphs
+
+
+def test_connected_components_matches_union_find(spark):
+    """Labels equal a plain-Python union-find on every property graph:
+    keyed by graph index over overlapping ids, and unkeyed over the
+    disjoint union (graph g's ids shifted by g * 1000).  A batch runs
+    every graph for as many rounds as its slowest one, and those extra
+    rounds collapse label chains a lone graph would keep, so the first
+    16 graphs also run one at a time."""
+    from layout_parser_spark.operators.webgraph import connected_components
+
+    graphs = _property_graphs()
+    # self-loops are dropped, so a node with only a self-loop is absent
+    want = [_union_find([e for e in es if e[0] != e[1]]) for es in graphs]
+    keyed = spark.createDataFrame(
+        [(g, a, b) for g, es in enumerate(graphs) for a, b in es],
+        "g long, u long, v long",
+    )
+    got = {(r.g, r.id): r.lbl
+           for r in connected_components(keyed, key_cols=["g"]).collect()}
+    assert got == {(g, x): lbl for g, uf in enumerate(want)
+                   for x, lbl in uf.items()}
+
+    flat = keyed.selectExpr("u + g * 1000 AS u", "v + g * 1000 AS v")
+    got = {r.id: r.lbl for r in connected_components(flat).collect()}
+    assert got == {g * 1000 + x: g * 1000 + lbl
+                   for g, uf in enumerate(want) for x, lbl in uf.items()}
+
+    for g in range(16):
+        e = keyed.where(f"g = {g}")
+        got = {r.id: r.lbl for r in connected_components(e).collect()}
+        assert got == want[g], g
+
+
+def test_connected_components_raises_when_max_iter_runs_out(spark):
+    from layout_parser_spark.operators.webgraph import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "u long, v long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(chain, max_iter=1)
 
 
 def test_dedup_clusters_transitive(spark):
