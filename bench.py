@@ -707,7 +707,7 @@ PLAN_SHAPE_PATTERNS = [
     (
         "python stages",
         r"(ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
-        r"|PythonMapInArrow)",
+        r"|MapInArrow)",
     ),
 ]
 
@@ -746,7 +746,7 @@ scale-invariant; AQE may fuse differently at volume but the JOIN
 STRATEGY and exchange count shown here are what the optimizer commits
 to).  CartesianProduct must be 0 everywhere; BNLJ only against O(1)
 broadcast sides (see tests/test_plan_lint.py's allow-list).  Python
-stages are the designed Arrow slots (segmentation, perspective, XY-cut,
+stages are the designed Arrow slots (the page kernels, perspective,
 media decode) — everything else is JVM codegen.
 
 Self-join counts are STATIC-plan counts: for the dedup self-joins

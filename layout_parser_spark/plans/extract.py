@@ -1,25 +1,31 @@
 """The flagship extraction pipeline (north rule): pages → main-content text.
 
-Stage layout (one narrow Arrow stage + expressions; shuffle only for the
-optional salt repartition):
+Stage layout (one narrow Arrow stage; shuffle only for the optional salt
+repartition):
 
 1. [optional] salted repartition ``pmod(xxhash64(url, salt), S)`` — defuses
-   host-level skew before the heavy UDF stage (BASELINE.json north_rule).
-2. segment: html → page_data + blocks (plans/segment.py, Arrow UDF).
-3. boilerplate drop — ALL columnar expressions (Catalyst-optimized):
-   a. typed boilerplate: type ∈ {Header, Footer, Nav, Aside, Figure};
-   b. link-dense blocks: score < 1 − link_density_max (nav/ads);
-   c. full-width top/bottom bands: width ≥ 90% of page AND within the top
-      or bottom 12% of the page;
-   d. geometric figure containment: center-point ``is_in`` any Figure
-      region (the reference recipe's ``b.is_in(b_fig)`` drop,
-      docs/example/deep_layout_parsing) — an EXISTS over the per-page
-      figure regions using the engine's is_in predicate.
-4. reading order: XY-cut permutation (plans/reading_order.py).
-5. text assembly: ``concat_ws(' ', texts-in-order)`` — the Tesseract
-   space-join rule (ocr/tesseract_agent.py:157 ``str.cat(sep=" ")``); block
-   texts were whitespace-normalized at segmentation, so per-url output is
-   byte-deterministic.
+   host-level skew before the Arrow stage (BASELINE.json north_rule).
+2. one ``mapInArrow`` kernel (``segment.map_pages``) that, per page, runs
+   a. segment: html → page size + flat block arrays
+      (``segment.parse_page_arrays``);
+   b. boilerplate drop (``keep_block``):
+      - typed boilerplate: type ∈ {Header, Footer, Nav, Aside, Figure};
+      - link-dense blocks: score < 1 − link_density_max (nav/ads);
+      - full-width top/bottom bands: width ≥ 90% of page AND within the
+        top or bottom 12% of the page;
+      - geometric figure containment: center-point ``is_in`` any Figure
+        region (the reference recipe's ``b.is_in(b_fig)`` drop,
+        docs/example/deep_layout_parsing);
+   c. reading order: XY-cut permutation (plans/reading_order.py);
+   d. text assembly: ``' '.join`` of the non-empty texts in order — the
+      Tesseract space-join rule (ocr/tesseract_agent.py:157
+      ``str.cat(sep=" ")``); block texts were whitespace-normalized at
+      segmentation, so per-url output is byte-deterministic.
+
+The same keep policy is also a Column predicate, ``keep_main_block``: the
+only form that runs on a struct ``blocks`` column (``drop_boilerplate``
+over ``segment_pages`` or detector output).  Both read the constants
+below; their agreement is pinned by tests/test_extract.py.
 
 The per-url invariant (BASELINE.json input_hint): extracted_text is
 byte-identical to what the reference's semantics produce — enforced by
@@ -34,19 +40,25 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField
 
-from .reading_order import reading_order_columnar, xy_cut_joined
-from .segment import BOILERPLATE_TYPES
+from .reading_order import join_in_reading_order
+from .segment import map_pages, parse_page_arrays
 
+#: types that the boilerplate stage drops outright (figures go too, and
+#: so do the blocks centred inside a figure)
+BOILERPLATE_TYPES = ("Header", "Footer", "Nav", "Aside")
 LINK_DENSITY_MAX = 0.5
 BAND_FRAC = 0.12
 BAND_WIDTH_FRAC = 0.9
+
+_DROPPED_TYPES = (*BOILERPLATE_TYPES, "Figure")
 
 
 def keep_main_block(
     b: Column, figures: Column, page_w: Column, page_h: Column
 ) -> Column:
-    """Boolean keep-predicate for one block (see module doc, step 3).
+    """Boolean keep-predicate for one block (see module doc, step 2b).
 
     The figure-containment test is the rectangle×rectangle center case of
     the general ``is_in(b, f, center=True)`` predicate
@@ -56,7 +68,7 @@ def keep_main_block(
     per (block × figure) pair in the hot path.  ``functions.predicates
     .is_in`` remains the general API (tested equivalent on rectangles in
     tests/test_extract.py)."""
-    typed_ok = ~b["type"].isin(*BOILERPLATE_TYPES, "Figure")
+    typed_ok = ~b["type"].isin(*_DROPPED_TYPES)
     link_ok = b["score"] >= (1.0 - LINK_DENSITY_MAX)
     w = b["x_2"] - b["x_1"]
     is_band = (w >= BAND_WIDTH_FRAC * page_w) & (
@@ -74,6 +86,27 @@ def keep_main_block(
     return typed_ok & link_ok & ~is_band & ~in_figure
 
 
+def keep_block(box, type_, score, figures, page_w, page_h) -> bool:
+    """``keep_main_block`` for one parsed block: ``box`` is its
+    (x_1, y_1, x_2, y_2), ``figures`` the page's Figure boxes.  A page
+    without an ``<html>`` tag has no size (``page_w`` None); there the
+    Column predicate's band test is NULL, so no block is kept."""
+    if type_ in _DROPPED_TYPES or score < 1.0 - LINK_DENSITY_MAX:
+        return False
+    if page_w is None:
+        return False
+    x1, y1, x2, y2 = box
+    if x2 - x1 >= BAND_WIDTH_FRAC * page_w and (
+        y2 <= BAND_FRAC * page_h or y1 >= (1 - BAND_FRAC) * page_h
+    ):
+        return False
+    cx = (x1 + x2) / 2.0
+    cy = (y1 + y2) / 2.0
+    return not any(
+        fx1 <= cx <= fx2 and fy1 <= cy <= fy2 for fx1, fy1, fx2, fy2 in figures
+    )
+
+
 def drop_boilerplate(df: DataFrame) -> DataFrame:
     """blocks → main_blocks (columnar higher-order-function filtering)."""
     figures = F.filter(F.col("blocks"), lambda b: b["type"] == "Figure")
@@ -87,70 +120,36 @@ def drop_boilerplate(df: DataFrame) -> DataFrame:
     return df.withColumn("main_blocks", main)
 
 
-def _extract_lean(df: DataFrame, reading_order: str) -> DataFrame:
-    """Hot-path extraction over the FLAT segmentation arrays — identical
-    semantics to the struct path (pinned by the byte-identity tests), but
-    the per-block structs are 8 fields zipped once instead of 19-field
-    TEXTBLOCKs with null casts; the struct API path (`drop_boilerplate` on
-    `blocks`) remains the public surface for layout processing."""
-    z = F.arrays_zip(
-        F.col("_bx1").alias("x_1"),
-        F.col("_by1").alias("y_1"),
-        F.col("_bx2").alias("x_2"),
-        F.col("_by2").alias("y_2"),
-        F.col("_btext").alias("text"),
-        F.col("_btype").alias("type"),
-        F.col("_bscore").alias("score"),
-    )
-    df = df.withColumn("_z", z)
-    figs = F.filter(F.col("_z"), lambda r: r["type"] == "Figure")
-    df = df.withColumn("_figs", figs)
-    page_w, page_h = F.col("page_w"), F.col("page_h")
-    df = df.withColumn(
-        "_main",
-        F.filter(
-            F.col("_z"),
-            lambda r: keep_main_block(r, F.col("_figs"), page_w, page_h),
-        ),
-    )
-    if reading_order == "columnar":
-        ordered = reading_order_columnar(F.col("_main"), page_w)
-        texts = F.filter(
-            F.transform(ordered, lambda r: r["text"]),
-            lambda t: t.isNotNull() & (t != ""),
-        )
-        df = df.withColumn("extracted_text", F.concat_ws(" ", texts))
-    else:
-        df = df.withColumn(
-            "extracted_text",
-            xy_cut_joined(
-                F.transform(F.col("_main"), lambda r: r["x_1"]),
-                F.transform(F.col("_main"), lambda r: r["y_1"]),
-                F.transform(F.col("_main"), lambda r: r["x_2"]),
-                F.transform(F.col("_main"), lambda r: r["y_2"]),
-                F.transform(F.col("_main"), lambda r: r["text"]),
-            ),
-        )
-    df = df.withColumn("n_blocks", F.size("_main"))
-    from .segment import _ARRAY_COLS
+def _extract_page(html: str):
+    """One page → (extracted_text, n_blocks)."""
+    w, h, (x1, y1, x2, y2, texts, types, _, scores) = parse_page_arrays(html)
+    boxes = list(zip(x1, y1, x2, y2))
+    figures = [b for b, t in zip(boxes, types) if t == "Figure"]
+    kept = [
+        i
+        for i, (b, t, s) in enumerate(zip(boxes, types, scores))
+        if keep_block(b, t, s, figures, w, h)
+    ]
+    cols = ([a[i] for i in kept] for a in (x1, y1, x2, y2, texts))
+    return join_in_reading_order(*cols), len(kept)
 
-    return df.drop(
-        "_z", "_figs", "_main", "page_w", "page_h",
-        *[n for n, _ in _ARRAY_COLS],
-    )
+
+_EXTRACT_FIELDS = [
+    StructField("extracted_text", StringType()),
+    StructField("n_blocks", IntegerType()),
+]
 
 
 def extract_main_text(
     pages: DataFrame,
     salt_partitions: Optional[int] = None,
     salt_round: int = 0,
-    reading_order: str = "xy_cut",
 ) -> DataFrame:
     """pages(url, warc_ts, html, …) → (url, …, extracted_text, n_blocks).
 
     ``salt_partitions`` adds the explicit salted repartition
-    ``pmod(xxhash64(url, salt_round), S)`` before the UDF stage — on a real
-    cluster this spreads hot hosts across executors; leave None for
+    ``pmod(xxhash64(url, salt_round), S)`` before the Arrow stage — on a
+    real cluster this spreads hot hosts across executors; leave None for
     single-stage narrow execution when the input is already well
     partitioned (e.g. Iceberg ``bucket(N, url)``).
     """
@@ -163,7 +162,4 @@ def extract_main_text(
                 F.lit(salt_partitions),
             ),
         )
-    from .segment import segment_pages_arrays
-
-    df = segment_pages_arrays(df)
-    return _extract_lean(df, reading_order)
+    return map_pages(df, _extract_page, _EXTRACT_FIELDS)

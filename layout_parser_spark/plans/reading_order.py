@@ -7,14 +7,13 @@ each column by ``coordinates[1]``, concatenate.  The engine generalizes the
 recipe to a recursive XY-cut — alternating-axis largest-gap splitting over
 block projections — whose degenerate case IS the 2-column recipe.
 
-Two implementations:
-
-* ``xy_cut_joined`` — pandas UDF (UDF slot #3): per-document numpy
-  recursion over the block bboxes, fused with the ' '-join so one string
-  per document crosses the Arrow boundary.
-* ``reading_order_columnar`` — the pure-expression fallback:
-  ``array_sort`` by (column-bucket, y_1, x_1), exactly the documented
-  2-column recipe.
+``join_in_reading_order`` orders one page's blocks by XY-cut and
+space-joins their texts.  The extraction kernel (plans/extract.py) calls
+it per page inside its single Arrow stage; ``xy_cut_joined`` is the same
+function as a pandas UDF over array columns, for main blocks that come out
+of ``drop_boilerplate`` on the struct API.  The documented 2-column recipe
+itself is kept by tests/oracle_extract.py, the independent oracle the
+engine is checked against.
 """
 
 from __future__ import annotations
@@ -23,9 +22,8 @@ from typing import List
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
 
 GAP_EPS = 0.5  # minimum projection gap (px) that constitutes a cut
 
@@ -89,57 +87,25 @@ def xy_cut_indices(
     return out
 
 
-def _make_joined_udf():
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def xy_cut_joined_udf(
-        xs1: pd.Series,
-        ys1: pd.Series,
-        xs2: pd.Series,
-        ys2: pd.Series,
-        texts: pd.Series,
-    ) -> pd.Series:
-        res = []
-        for a, b, c, d, t in zip(xs1, ys1, xs2, ys2, texts):
-            if a is None or len(a) == 0:
-                res.append("")
-                continue
-            order = xy_cut_indices(
-                np.asarray(a, dtype="float64"),
-                np.asarray(b, dtype="float64"),
-                np.asarray(c, dtype="float64"),
-                np.asarray(d, dtype="float64"),
-            )
-            res.append(" ".join(t[i] for i in order if t[i]))
-        return pd.Series(res)
-
-    return xy_cut_joined_udf
+def join_in_reading_order(x1, y1, x2, y2, texts) -> str:
+    """One page's blocks in XY-cut order, non-empty texts ' '-joined."""
+    if x1 is None or len(x1) == 0:
+        return ""
+    order = xy_cut_indices(
+        np.asarray(x1, dtype="float64"),
+        np.asarray(y1, dtype="float64"),
+        np.asarray(x2, dtype="float64"),
+        np.asarray(y2, dtype="float64"),
+    )
+    return " ".join(texts[i] for i in order if texts[i])
 
 
-_joined_udf = None
-
-
-def xy_cut_joined(xs1, ys1, xs2, ys2, texts) -> Column:
-    """XY-cut order + ' '-join fused in one UDF returning the final
-    string (the extraction hot path — one scalar out instead of an
-    array)."""
-    global _joined_udf
-    if _joined_udf is None:
-        _joined_udf = _make_joined_udf()
-    return _joined_udf(xs1, ys1, xs2, ys2, texts)
-
-
-def reading_order_columnar(blocks: Column, page_w: Column) -> Column:
-    """Pure-expression fallback: the documented 2-column recipe — bucket by
-    center_x vs ``w/2*1.05`` then sort (bucket, y_1, x_1).  No Python."""
-    half = page_w / 2.0 * 1.05
-
-    def cmp(a, b):
-        a_bucket = ((a["x_1"] + a["x_2"]) / 2.0 > half).cast("int")
-        b_bucket = ((b["x_1"] + b["x_2"]) / 2.0 > half).cast("int")
-        ka = F.struct(a_bucket.alias("c"), a["y_1"].alias("y"), a["x_1"].alias("x"))
-        kb = F.struct(b_bucket.alias("c"), b["y_1"].alias("y"), b["x_1"].alias("x"))
-        return F.when(ka < kb, -1).when(ka > kb, 1).otherwise(0)
-
-    return F.array_sort(blocks, cmp)
+@pandas_udf(StringType())
+def xy_cut_joined(
+    xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series,
+    texts: pd.Series,
+) -> pd.Series:
+    """``join_in_reading_order`` per row of five block-array columns."""
+    return pd.Series(
+        [join_in_reading_order(*page) for page in zip(xs1, ys1, xs2, ys2, texts)]
+    )

@@ -19,17 +19,32 @@ every element carrying a ``data-box`` attribute becomes one TEXTBLOCK with
   i.e. a content-confidence score in the detector-score slot,
 * ``id`` = document-order index, ``parent`` = enclosing data-box block id.
 
-One ``mapInArrow`` stage (per-row python inside an Arrow batch — the
-sanctioned vectorized pattern; never a row-at-a-time Spark UDF).
+A ``data-box`` that is not 4 finite numbers opens no block, and a
+``data-w``/``data-h`` that is not a finite number reads as 0.0: crawled
+html is outside input, and one bad attribute must not fail a Spark task.
+
+``map_pages`` is the one Arrow transport of the page kernels: one
+``mapInArrow`` stage (per-row python inside an Arrow batch — the
+sanctioned vectorized pattern; never a row-at-a-time Spark UDF), shared by
+``segment_pages_arrays`` here and the extraction kernel in
+plans/extract.py.
 """
 
 from __future__ import annotations
 
 from html.parser import HTMLParser
+from math import isfinite
 from typing import List, Optional
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..schema import FIELD_NAMES
 from ..sources.charset import decode_payload
@@ -48,8 +63,29 @@ TAG_TYPE = {
     "li": "List",
 }
 
-#: types that the boilerplate stage drops outright
-BOILERPLATE_TYPES = ("Header", "Footer", "Nav", "Aside")
+
+def _dim(value) -> float:
+    """``data-w``/``data-h`` → float; missing, non-numeric or non-finite
+    reads as 0.0."""
+    try:
+        v = float(value)
+    except (TypeError, ValueError):
+        return 0.0
+    return v if isfinite(v) else 0.0
+
+
+def _box(value):
+    """``data-box`` → 4 finite floats, or None: the element opens no
+    block.  Non-finite values are refused because Spark orders NaN above
+    every number while Python comparisons with NaN are false, so the
+    Python and Column keep predicates would disagree on them."""
+    try:
+        x1, y1, x2, y2 = map(float, value.split(","))
+    except ValueError:  # not a number, or not exactly 4 of them
+        return None
+    if isfinite(x1) and isfinite(y1) and isfinite(x2) and isfinite(y2):
+        return x1, y1, x2, y2
+    return None
 
 
 class _Block:
@@ -79,14 +115,13 @@ class _SegmentParser(HTMLParser):
     def handle_starttag(self, tag, attrs):
         d = dict(attrs)
         if tag == "html":
-            self.page_w = float(d.get("data-w") or 0)
-            self.page_h = float(d.get("data-h") or 0)
+            self.page_w = _dim(d.get("data-w"))
+            self.page_h = _dim(d.get("data-h"))
             return
         if tag == "a":
             self._a_depth += 1
-        box = d.get("data-box")
-        if box is not None:
-            coords = tuple(float(v) for v in box.split(","))
+        coords = _box(d.get("data-box") or "")
+        if coords is not None:
             parent = self._stack[-1] if self._stack else None
             blk = _Block(coords, TAG_TYPE.get(tag, "Text"), parent,
                          len(self.blocks))
@@ -98,10 +133,7 @@ class _SegmentParser(HTMLParser):
             self._a_depth = max(0, self._a_depth - 1)
             return
         # close the innermost open data-box element for structural tags
-        if self._stack and tag in (
-            "p", "div", "header", "footer", "nav", "aside", "figure",
-            "h1", "h2", "h3", "table", "ul", "li", "span",
-        ):
+        if self._stack and tag in _STRUCTURAL:
             self._stack.pop()
 
     def handle_data(self, data):
@@ -196,18 +228,12 @@ class _FastParser:
         self._stack = []
         self._a_depth = 0
 
-    def _endtag(self, tag: str) -> None:
-        if tag == "a":
-            self._a_depth = max(0, self._a_depth - 1)
-        elif self._stack and tag in _STRUCTURAL:
-            self._stack.pop()
-
     def feed(self, html: str) -> None:
         # Hot loop (the whole-corpus CPU bottleneck — BENCH/PLANS.md r5):
         # instance/state lookups are hoisted into locals, the three match
-        # groups come from ONE .groups() call, and _endtag is inlined at
-        # both call sites; semantics are byte-identical to the method
-        # form (pinned by the engine==HTMLParser-oracle parity tests).
+        # groups come from ONE .groups() call, and the end-tag rule of
+        # ``_SegmentParser.handle_endtag`` is inlined at both call sites
+        # (parity pinned by the engine==HTMLParser-oracle tests).
         from html import unescape
 
         if "<!--" in html:  # comments are not tags; drop them up front
@@ -233,7 +259,7 @@ class _FastParser:
             closing, tag, attrs = m.groups()
             tag = tag.lower()
             if closing:
-                if tag == "a":  # == _endtag, on the hoisted locals
+                if tag == "a":  # the end-tag rule, on the hoisted locals
                     if a_depth > 0:
                         a_depth -= 1
                 elif stack and tag in structural:
@@ -242,14 +268,14 @@ class _FastParser:
             if tag == "html":
                 w = _W_RE.search(attrs)
                 h = _H_RE.search(attrs)
-                self.page_w = float(_attr_val(w)) if w else 0.0
-                self.page_h = float(_attr_val(h)) if h else 0.0
+                self.page_w = _dim(_attr_val(w)) if w else 0.0
+                self.page_h = _dim(_attr_val(h)) if h else 0.0
                 continue
             if tag == "a":
                 a_depth += 1
             box = box_search(attrs)
-            if box is not None:
-                coords = tuple(map(float, _attr_val(box).split(",")))
+            coords = _box(_attr_val(box)) if box is not None else None
+            if coords is not None:
                 parent = stack[-1] if stack else None
                 blk = _Block(
                     coords, tag_type.get(tag, "Text"), parent, len(blocks)
@@ -258,7 +284,7 @@ class _FastParser:
                 stack.append(blk.order)
             # self-closing: HTMLParser fires starttag then endtag
             if attrs.rstrip().endswith("/"):
-                if tag == "a":  # == _endtag, on the hoisted locals
+                if tag == "a":  # the end-tag rule, on the hoisted locals
                     if a_depth > 0:
                         a_depth -= 1
                 elif stack and tag in structural:
@@ -268,9 +294,9 @@ class _FastParser:
 
 def parse_page_arrays(html: str):
     """Parse one page → (page_w, page_h, column lists).  The flat-array
-    twin of ``parse_page`` used by the hot path (see ``segment_pages``),
-    on the fast tag tokenizer; ``parse_page`` runs the same walk on
-    html.parser."""
+    twin of ``parse_page`` used by the page kernels (``segment_pages_arrays``
+    and the extraction kernel), on the fast tag tokenizer; ``parse_page``
+    runs the same walk on html.parser."""
     p = _FastParser()
     p.feed(html)
     x1, y1, x2, y2 = [], [], [], []
@@ -292,91 +318,72 @@ def parse_page_arrays(html: str):
 
 
 _ARRAY_COLS = [
-    ("_bx1", "array<double>"),
-    ("_by1", "array<double>"),
-    ("_bx2", "array<double>"),
-    ("_by2", "array<double>"),
-    ("_btext", "array<string>"),
-    ("_btype", "array<string>"),
-    ("_bparent", "array<bigint>"),
-    ("_bscore", "array<double>"),
+    ("_bx1", DoubleType()),
+    ("_by1", DoubleType()),
+    ("_bx2", DoubleType()),
+    ("_by2", DoubleType()),
+    ("_btext", StringType()),
+    ("_btype", StringType()),
+    ("_bparent", LongType()),
+    ("_bscore", DoubleType()),
 ]
 
+_SEGMENT_FIELDS = [
+    StructField("page_w", DoubleType()),
+    StructField("page_h", DoubleType()),
+] + [StructField(n, ArrayType(t)) for n, t in _ARRAY_COLS]
 
-def _segment_batch(payloads):
-    """Parse one Arrow batch's html payloads → (page_w list, page_h list,
-    {array_col: list-of-lists})."""
-    cols = {n: [] for n, _ in _ARRAY_COLS}
-    ws, hs = [], []
-    for payload in payloads:
-        if payload is None:
-            ws.append(None)
-            hs.append(None)
-            for (n, _t) in _ARRAY_COLS:
-                cols[n].append([])
-            continue
-        if isinstance(payload, (bytes, bytearray)):
-            payload = decode_payload(payload)
-        w, h, arrs = parse_page_arrays(payload)
-        ws.append(w)
-        hs.append(h)
-        for (n, _t), arr in zip(_ARRAY_COLS, arrs):
-            cols[n].append(arr)
-    return ws, hs, cols
+
+def map_pages(pages_df, page_fn, fields, html_col: str = "html") -> "DataFrame":
+    """One narrow ``mapInArrow`` stage over pages: decode each
+    ``html_col`` payload (``decode_payload``; NULL reads as the empty
+    page), call ``page_fn(html)`` → one value per field of ``fields``, and
+    emit every other input column unchanged plus ``fields``.  The fat
+    html column is dropped AT the Arrow boundary.
+
+    Why ``mapInArrow`` rather than ``mapInPandas`` (r5): the output
+    lists cross to the JVM as directly-built ``pyarrow`` arrays instead
+    of pandas object columns (which pay a per-row python-object→Arrow
+    conversion) — measured 18% off the whole segmentation stage at
+    sf0.1, bit-identical output."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    passthrough = [f for f in pages_df.schema.fields if f.name != html_col]
+    schema = StructType(passthrough + list(fields))
+    names = schema.fieldNames()
+    pa_types = [to_arrow_type(f.dataType) for f in fields]
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            rows = [
+                page_fn("" if p is None else decode_payload(p))
+                for p in b.column(html_col).to_pylist()
+            ]
+            cols = list(zip(*rows)) or [()] * len(pa_types)
+            arrays = [b.column(f.name) for f in passthrough]
+            arrays += [pa.array(c, t) for c, t in zip(cols, pa_types)]
+            yield pa.RecordBatch.from_arrays(arrays, names)
+
+    return pages_df.mapInArrow(gen, schema=schema)
+
+
+def _segment_page(html: str):
+    w, h, arrays = parse_page_arrays(html)
+    return (w, h, *arrays)
 
 
 def segment_pages_arrays(pages_df, html_col: str = "html") -> "DataFrame":
     """pages(…, html) → (all columns except html) + page_w/page_h + 8 flat
-    primitive block arrays.  One narrow Arrow stage (mapInArrow).
+    primitive block arrays.  One narrow Arrow stage (``map_pages``).
 
     Why flat arrays instead of ARRAY<TEXTBLOCK>: converting per-block
     python dicts into Arrow nested structs costs more than the HTML parse
     itself at scale (~5M dict objects per 400k docs).  Primitive lists
     convert near-memcpy-fast; the TEXTBLOCK structs are then assembled
-    JVM-side by ``attach_blocks`` inside whole-stage codegen.
-
-    Why ``mapInArrow`` rather than ``mapInPandas`` (r5): the output
-    lists cross to the JVM as directly-built ``pyarrow`` ListArrays
-    instead of pandas object columns (which pay a per-row
-    python-object→Arrow conversion) — measured 18% off the whole
-    segmentation stage at sf0.1, bit-identical output."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    passthrough = [f for f in pages_df.schema.fields if f.name != html_col]
-    out_schema = StructType(
-        passthrough
-        + [
-            StructField("page_w", DoubleType(), True),
-            StructField("page_h", DoubleType(), True),
-        ]
-        + [
-            StructField(n, _parse_datatype_string(t), True)
-            for n, t in _ARRAY_COLS
-        ]
-    )
-    names = [f.name for f in passthrough]
-
-    def gen(batches):
-        import pyarrow as pa
-
-        pa_types = {
-            "array<string>": pa.list_(pa.string()),
-            "array<double>": pa.list_(pa.float64()),
-            "array<bigint>": pa.list_(pa.int64()),
-        }
-        for b in batches:
-            payloads = b.column(b.schema.get_field_index(html_col)).to_pylist()
-            ws, hs, cols = _segment_batch(payloads)
-            arrays = [b.column(b.schema.get_field_index(n)) for n in names]
-            arrays.append(pa.array(ws, pa.float64()))
-            arrays.append(pa.array(hs, pa.float64()))
-            for n, t in _ARRAY_COLS:
-                arrays.append(pa.array(cols[n], pa_types[t]))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names + ["page_w", "page_h"] + [n for n, _ in _ARRAY_COLS]
-            )
-
-    return pages_df.mapInArrow(gen, schema=out_schema)
+    JVM-side by ``attach_blocks`` inside whole-stage codegen."""
+    return map_pages(pages_df, _segment_page, _SEGMENT_FIELDS, html_col)
 
 
 def attach_blocks(df) -> "DataFrame":

@@ -124,18 +124,6 @@ def test_specialized_fig_predicate_equals_is_in(ev):
         assert d[f"g{i}"] == d[f"s{i}"], (i, d)
 
 
-def test_columnar_reading_order_equivalent(spark):
-    """The pure-expression 2-column recipe must agree with the XY-cut UDF
-    on the synthetic (≤2-column) corpus — both byte-identical to source."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(100)
-    pages = synth_pages(docs)
-    out = extract_main_text(pages, reading_order="columnar").select(
-        "doc_id", "text", "extracted_text"
-    )
-    rows = out.collect()
-    assert all(r.extracted_text == r.text for r in rows)
-
-
 def test_zero_block_page_yields_empty_layout(spark):
     """A page with no data-box elements must produce an EMPTY blocks array
     (reference returns Layout([])), not one phantom all-NULL block."""
@@ -241,3 +229,135 @@ def test_charset_utf8_payloads_unchanged(spark):
     )
     out = segment_pages(df).collect()[0]
     assert out.blocks[0].text == "héllo wörld"
+
+
+#: outside-input attribute values that must neither raise nor open a block
+MALFORMED_PAGES = [
+    '<html data-w="" data-h="600"><p data-box="1,2,30,40">empty width</p></html>',
+    "<html data-w=abc data-h='inf'><p data-box='1,2,30,40'>bad dims</p></html>",
+    '<html data-w="nan" data-h="-inf"><p data-box="1,2,30,40">nan dims</p></html>',
+    '<html data-w="800" data-h="600"><p data-box="0,0,1">three</p>'
+    '<p data-box="5,5,50,50">kept</p></html>',
+    '<html data-w="800" data-h="600"><p data-box="0,0,1,z">letter</p></html>',
+    '<html data-w="800" data-h="600"><p data-box="">empty box</p></html>',
+    '<html data-w="800" data-h="600"><p data-box="0,0,1,2,3">five</p></html>',
+    '<html data-w="800" data-h="600"><p data-box="0,nan,10,20">nan</p>'
+    '<p data-box="inf,0,10,20">inf</p></html>',
+    '<html data-w="800" data-h="600"><div data-box="10,100,400,300">outer '
+    '<span data-box="1,2">inner</span> tail</div></html>',
+]
+
+
+def _page_columns(html):
+    """``parse_page`` output in ``parse_page_arrays``' column layout."""
+    w, h, rows = parse_page(html)
+    keys = ("x_1", "y_1", "x_2", "y_2", "text", "type", "parent", "score")
+    return w, h, tuple([r[k] for r in rows] for k in keys)
+
+
+def test_malformed_attributes_parse_like_html_parser():
+    """A non-numeric or non-finite data-w/data-h reads as 0.0 and a
+    data-box that is not 4 finite numbers opens no block, in both
+    parsers."""
+    from layout_parser_spark.plans.segment import parse_page_arrays
+
+    for html in MALFORMED_PAGES:
+        assert parse_page_arrays(html) == _page_columns(html), html
+    w, h, cols = parse_page_arrays(MALFORMED_PAGES[0])
+    assert (w, h, cols[4]) == (0.0, 600.0, ["empty width"])
+    w, h, cols = parse_page_arrays(MALFORMED_PAGES[2])
+    assert (w, h) == (0.0, 0.0)
+    assert parse_page_arrays(MALFORMED_PAGES[3])[2][4] == ["kept"]
+    assert parse_page_arrays(MALFORMED_PAGES[7])[2][0] == []
+
+
+def test_malformed_attributes_keep_every_row(spark):
+    """One bad page must not fail the Spark task: every url of the
+    batch comes back."""
+    pages = spark.createDataFrame(
+        [(f"u{i}", html) for i, html in enumerate(MALFORMED_PAGES)],
+        "url string, html string",
+    )
+    urls = [r.url for r in extract_main_text(pages).collect()]
+    assert sorted(urls) == sorted(f"u{i}" for i in range(len(MALFORMED_PAGES)))
+
+
+def _edge_pages():
+    """Hand-built pages on the boundaries of every keep rule."""
+    head = '<html data-w="1000" data-h="1000">'
+    return [
+        # width exactly 0.9*w: band at y_2 == 0.12*h and y_1 == 0.88*h,
+        # plus the same width mid-page and one narrower band
+        head + '<p data-box="0,0,900,120">top band</p>'
+        '<p data-box="0,880,900,1000">bottom band</p>'
+        '<p data-box="0,400,900,500">wide middle</p>'
+        '<p data-box="0,0,899,120">narrow top</p>'
+        '<p data-box="0,0,900,121">deep top</p></html>',
+        # score exactly 0.5 (half the characters inside an anchor)
+        head + '<p data-box="10,300,500,340">ab<a href="x">cd</a></p>'
+        '<p data-box="10,400,500,440">a<a href="x">bcd</a></p></html>',
+        # caption centres on each figure edge, and just outside it
+        head + '<figure data-box="100,200,500,600">'
+        '<p data-box="450,300,550,340">on right edge</p></figure>'
+        '<p data-box="50,150,150,250">on corner</p>'
+        '<p data-box="451,300,551,340">past edge</p>'
+        '<p data-box="200,560,300,640">on bottom edge</p>'
+        '<p data-box="600,200,900,260">beside</p></html>',
+        head + "<body></body></html>",  # zero blocks
+        None,  # null html
+        '<html data-h="800"><p data-box="10,10,100,30">no width</p>'
+        '<p data-box="10,400,100,430">lower</p></html>',
+        '<p data-box="10,10,100,30">no html tag</p>',
+    ]
+
+
+def test_kernel_matches_struct_api(spark):
+    """The kernel's Python keep predicate and the Column predicate of the
+    struct API agree: extract_main_text == segment_pages →
+    drop_boilerplate → xy_cut_joined, for text AND n_blocks."""
+    import random
+
+    from layout_parser_spark.plans.extract import drop_boilerplate
+    from layout_parser_spark.plans.reading_order import xy_cut_joined
+    from layout_parser_spark.plans.segment import segment_pages
+
+    rng = random.Random(20261017)
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    rendered = [
+        render_page_html(
+            rng.randrange(10**6),
+            " ".join(rng.choice(words) for _ in range(rng.randrange(1, 400))),
+        )
+        for _ in range(40)
+    ]
+    pages = [
+        (f"{kind}{i}", html)
+        for kind, htmls in (("r", rendered), ("e", _edge_pages()),
+                            ("m", MALFORMED_PAGES))
+        for i, html in enumerate(htmls)
+    ]
+    df = spark.createDataFrame(pages, "url string, html string")
+    kernel = {
+        r.url: (r.extracted_text, r.n_blocks)
+        for r in extract_main_text(df).collect()
+    }
+    main = drop_boilerplate(segment_pages(df))
+    def field(k):
+        return F.transform("main_blocks", lambda b: b[k])
+
+    cols = [field(k) for k in ("x_1", "y_1", "x_2", "y_2", "text")]
+    struct = {
+        r.url: (r.t, r.n)
+        for r in main.select(
+            "url",
+            xy_cut_joined(*cols).alias("t"),
+            F.size("main_blocks").alias("n"),
+        ).collect()
+    }
+    assert kernel == struct
+    edge = [kernel[f"e{i}"] for i in range(7)]
+    assert edge[0] == ("narrow top deep top wide middle", 3)
+    assert edge[1] == ("abcd", 1)
+    assert edge[2] == ("past edge beside", 2)
+    # no data-w: every block reads as full width, so only the bands go
+    assert edge[3:] == [("", 0), ("", 0), ("lower", 1), ("", 0)]
