@@ -133,6 +133,8 @@ def main(argv=None) -> int:
                 salt_partitions=args.salt_partitions,
                 salt_round=args.salt_round,
             ).select("url", "warc_ts", "lang", "extracted_text", "n_blocks")
+        # materialized: the corpus write, the stats write and the collect
+        # below scan it instead of re-running the funnel
         annotated = curate_corpus(
             corpus,
             minhash_threshold=args.minhash_threshold,

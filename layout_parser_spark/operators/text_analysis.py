@@ -423,9 +423,12 @@ def hashed_linear_score(
     Scale shape: explode + map-side lookup + hash aggregate on the doc
     id; weight vectors up to ~10^6 dims fit comfortably as a broadcast
     literal."""
+    import numpy as np
+
     from .dedup import md5_lane60
 
-    W = F.array(*[F.lit(w) for w in model_weights(dim, seed)])
+    # one py4j call for the whole literal, not one per weight
+    W = F.lit(np.array(model_weights(dim, seed), dtype=np.int32))
     toksd = df.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks")
     )

@@ -18,10 +18,28 @@ Every row carries per-stage boolean flags, so the curated corpus AND
 the funnel statistics come from the SAME annotated DataFrame — one
 pipeline, no per-stage recounting passes over the input.
 
+``curate_corpus`` is an eager operator: it runs Spark jobs when called
+and returns a materialized table.  At call time it
+
+* reads the input once and runs the url and exact windows, and
+  ``localCheckpoint``-s the flagged frame;
+* runs ``minhash_lsh_pairs``' signature checkpoint over the exact-stage
+  survivors (read from that checkpoint);
+* runs the connected-components loop: its convergence probes and
+  per-round checkpoints;
+* joins clusters and quality scores onto the flagged frame and
+  ``localCheckpoint``-s the annotated result.
+
+Every consumer of the result (``curation_stats``, ``.where("keep")``
+writes, collects) scans that last checkpoint: the input scan and both
+windows never run again.  Like the component loop's checkpoints, the two
+``localCheckpoint``-s keep their blocks in executor storage, not in
+reliable storage, so they do not survive the loss of an executor: a job
+that then reads a lost block fails instead of recomputing it.
+
 Scale shape: stages 1-2 are window/hash-agg equi-shuffles on canonical
 url / digest; stage 3 is the banded equi-join + O(log n) component
-rounds; stage 4 is map-side + one combinable agg.  Nothing driver-side
-except the component loop's convergence probes.
+rounds; stage 4 is map-side + one combinable agg.
 """
 
 from __future__ import annotations
@@ -48,9 +66,14 @@ def curate_corpus(
     Flags are cumulative: each stage flag means "survived through that
     stage", so ``keep`` equals ``quality_keep`` (kept as an explicit
     conjunction for auditability) and ``curation_stats`` is a monotone
-    funnel.  Rows cut by an earlier stage carry NULL ``cluster_id`` /
+    funnel.  Rows cut before the near-dup stage carry NULL
+    ``cluster_id`` and rows cut before the quality stage NULL
     ``quality_score`` — later stages never compute on losers.  The
-    curated corpus is ``curate_corpus(df).where("keep")``."""
+    curated corpus is ``curate_corpus(df).where("keep")``.
+
+    Runs the whole funnel before it returns (the module docstring lists
+    the jobs) and returns a ``localCheckpoint``-ed table, which is lost
+    with the executor that holds it."""
     from ..operators.dedup import dedup_clusters
     from ..operators.text_analysis import hashed_linear_score, tokens
     from ..operators.webgraph import canonicalize_url
@@ -73,6 +96,10 @@ def curate_corpus(
         "exact_keep",
         F.col("url_keep") & (F.row_number().over(w_digest) == 1),
     )
+    # the flagged frame feeds the LSH signature job, the cluster join and
+    # the score input: materialize it so the input scan and both windows
+    # run once
+    d = d.localCheckpoint(eager=True)
 
     survivors = d.where(F.col("exact_keep")).select(
         F.col(url_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -84,21 +111,20 @@ def curate_corpus(
         F.col("cluster_id"),
         F.col("is_keeper").alias("cluster_keep"),
     )
-    # Flags are CUMULATIVE (each flag = survived up to and including its
-    # stage), so curation_stats reads as a proper funnel, and — since the
-    # cluster/quality joins key on the raw url — a url_keep=false re-fetch
-    # sharing a url with a surviving keeper can never inherit downstream
-    # survivor flags.  Cumulative gating also guarantees the joins are
-    # 1:1: url-stage dedup leaves at most one survivor per url, so the
-    # survivor-derived cluster/score tables have unique url keys.
-    d = d.join(clusters, on=url_col, how="left").withColumn(
-        "cluster_keep",
-        F.col("exact_keep")
+    # The cluster and score tables come from survivors, whose urls are
+    # unique (url-stage dedup leaves at most one survivor per url), so
+    # both joins are 1:1 on the survivor side.  They key on the raw url,
+    # though, so a url_keep=false re-fetch of a survivor's url matches
+    # the survivor's row: every joined column is gated on the row's own
+    # flag from the stage before.
+    d = d.join(clusters, on=url_col, how="left").withColumns({
+        "cluster_id": F.when(F.col("exact_keep"), F.col("cluster_id")),
+        "cluster_keep": F.col("exact_keep")
         & F.coalesce(F.col("cluster_keep"), F.lit(False)),
-    )
+    })
 
-    # score only cluster survivors: join-safe (unique urls) and the right
-    # scale shape — the classifier runs on survivors, not the whole crawl
+    # score only cluster survivors: the classifier runs on survivors,
+    # not the whole crawl
     scores = hashed_linear_score(
         d.where(F.col("cluster_keep")).select(
             F.col(url_col).alias("doc_id"), F.col(text_col).alias("text")
@@ -112,6 +138,10 @@ def curate_corpus(
     )
     d = (
         d.join(scores, on=url_col, how="left")
+        .withColumn(
+            "quality_score",
+            F.when(F.col("cluster_keep"), F.col("quality_score")),
+        )
         .withColumn("n_tokens", F.size(tokens(F.col(text_col))))
         .withColumn(
             "quality_keep",
@@ -125,12 +155,13 @@ def curate_corpus(
         "keep",
         F.col("url_keep") & F.col("exact_keep")
         & F.col("cluster_keep") & F.col("quality_keep"),
-    )
+    ).localCheckpoint(eager=True)
 
 
 def curation_stats(annotated: DataFrame) -> DataFrame:
     """One-row funnel report over ``curate_corpus`` output — a single
-    combinable aggregate (no per-stage recount jobs)."""
+    combinable aggregate over the materialized table (no per-stage
+    recount jobs, no re-run of the funnel)."""
     cnt = lambda c: F.sum(F.col(c).cast("long")).alias(c)  # noqa: E731
     return annotated.agg(
         F.count(F.lit(1)).alias("n_input"),

@@ -231,7 +231,9 @@ def test_dedup_stream_within_watermark(spark, tmp_path):
 def test_curate_corpus_funnel(spark, tmp_path):
     """End-to-end curation funnel: URL variants collapse, exact copies
     collapse, near-dups cluster to one representative, junk fails the
-    quality gate — flags AND the one-row stats agree."""
+    quality gate — flags AND the one-row stats agree.  curate_corpus
+    returns a materialized table, so building it, the collect and the
+    stats read the input parquet in exactly one scan."""
     import json
     import subprocess
     import sys
@@ -259,16 +261,35 @@ def test_curate_corpus_funnel(spark, tmp_path):
         ("https://e.com/other", "2024-01-01T00:00:00",
          "completely different article text about columnar engines and "
          "the joy of equi-joins in the morning light of the data center"),
+        # a later re-fetch of the url-stage survivor's own raw url
+        ("https://a.com/x?utm_source=m", "2024-03-01T00:00:00", good),
     ]
-    df = spark.createDataFrame(
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(
         rows, "url string, warc_ts string, extracted_text string"
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    ann = curate_corpus(df, minhash_threshold=0.5, min_tokens=5)
-    flags = {r.url: r for r in ann.collect()}
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts")).write.parquet(path)
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    since = max((e.executionId() for e in executions()), default=-1)
+    ann = curate_corpus(
+        spark.read.parquet(path), minhash_threshold=0.5, min_tokens=5
+    )
+    got = ann.collect()
+    (refetch,) = [r for r in got if r.warc_ts.month == 3]
+    flags = {r.url: r for r in got if r.warc_ts.month != 3}
 
     # url stage: earliest fetch per canonical keeps (utm variant, day 1)
     assert flags["https://a.com/x?utm_source=m"].url_keep
     assert not flags["https://a.com/x"].url_keep
+    # the re-fetch loses the url stage and inherits nothing from the
+    # survivor that shares its raw url
+    assert not refetch.url_keep and not refetch.keep
+    assert refetch.cluster_id is None and refetch.quality_score is None
     # exact stage: b.com/copy duplicates the a.com text
     assert not flags["https://b.com/copy"].exact_keep
     # near-dup: c.com/near clusters with the a.com survivor and loses
@@ -298,7 +319,16 @@ def test_curate_corpus_funnel(spark, tmp_path):
     assert kept == expected_kept
 
     st = curation_stats(ann).collect()[0]
-    assert st.n_input == 6
+    assert st.n_input == 7
     assert st.url_keep == 5 and st.exact_keep == 4
     assert st.cluster_keep == 3
     assert st.keep == len(kept)
+
+    scans = sum(
+        1
+        for e in executions() if e.executionId() > since
+        for line in e.physicalPlanDescription().splitlines()
+        if "Location:" in line and path in line
+    )
+    assert scans == 1
+
