@@ -1104,7 +1104,8 @@ def q_gcv_symbols(spark, sf: str) -> DataFrame:
     the exchanges, so the parse+explode subtree executes twice (no
     ReusedExchange) — accepted for a certification query; a production
     pipeline with multiple symbol-table consumers stages it once
-    (write/checkpoint between passes, the materialize_grams pattern)."""
+    (write/checkpoint between passes, as ``ngram_jaccard_pairs`` persists
+    its shingle table)."""
     from layout_parser_spark.operators.ocr_agg import gather_full_text
     from layout_parser_spark.sources.gcv import (
         gcv_symbol_tokens,
@@ -1392,7 +1393,6 @@ def q_dedup_ngram_jaccard(spark, sf: str) -> DataFrame:
         threshold=0.01,
         block_col="source",
         max_shingle_df=NGRAM_MAX_SHINGLE_DF,
-        materialize_shingles=True,
     )
 
 
@@ -2099,16 +2099,11 @@ def q_decontaminate(spark, sf: str) -> DataFrame:
     """Benchmark decontamination: train docs flagged by n-gram overlap
     with the (deterministically chosen) eval subset.  n=3 here because the
     synthetic docs are ~54 tokens; production uses the standard 13."""
-    from layout_parser_spark.operators.dedup import (
-        ngram_overlap_counts_flagged,
-    )
+    from layout_parser_spark.operators.dedup import ngram_overlap_counts
 
     d = _t(spark, sf, "documents")
-    return ngram_overlap_counts_flagged(
-        d,
-        F.pmod(F.col("doc_id"), F.lit(97)) == 0,
-        n=3,
-        materialize_shingles=True,
+    return ngram_overlap_counts(
+        d, F.pmod(F.col("doc_id"), F.lit(97)) == 0, n=3
     )
 
 

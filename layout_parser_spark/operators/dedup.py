@@ -28,10 +28,11 @@ DuckDB oracles detect duplicates from the RAW segment/gram text
 instead, so a green row doubles as a collision-freeness certificate
 for the xxhash64 lane.
 
-Everything is columnar expressions + hash aggregates; Python appears in
-exactly one DESIGNED Arrow slot (the vectorized MinHash signature
-kernel, bit-identical twin of the pure-Column fold — see
-``minhash_signatures_vectorized``), never row-at-a-time.
+Python runs in Arrow batches only, never row-at-a-time: the MinHash and
+SimHash signature stages are one fused text → signature kernel each
+(``minhash_signatures_from_text``, ``simhash_from_text_vectorized``), and
+embedding cosine is scored by one ``applyInPandas`` kernel per
+block/bucket.  Everything else is columnar expressions + hash aggregates.
 """
 
 from __future__ import annotations
@@ -42,8 +43,7 @@ from typing import List, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .text_analysis import tokens
+from pyspark.storagelevel import StorageLevel
 
 #: Mersenne prime 2^31−1: Carter-Wegman universe for minhash permutations.
 #: a·x with a,x < 2^31 stays < 2^62 — no overflow in Spark longs or
@@ -111,13 +111,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (array<string>).
-    Fine for literals/tests; pipelines should stage tokens first and use
-    ``shingles_from_tokens`` (see its performance contract)."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 def _staged_shingles(df: DataFrame, text_col: str, id_col: str, n: int,
                      block_col=None) -> DataFrame:
     """(id[, blk], _sh) with tokens and shingles staged through separate
@@ -140,7 +133,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     block_col: str | None = None,
     max_shingle_df: int | None = None,
-    materialize_shingles: bool = False,
 ) -> DataFrame:
     """All (a,b) id pairs with word-n-gram Jaccard ≥ threshold.
 
@@ -182,17 +174,14 @@ def ngram_jaccard_pairs(
         .where(F.col("shingle").isNotNull())
         .select("id", F.col("n_sh"), lane.alias("_lane"))
     )
-    if materialize_shingles:
-        # the exploded shingle table is consumed by up to three subtrees
-        # (df-cap aggregate + both self-join sides): persisting it is the
-        # two-pass production shape (at 10^12 docs this is a materialized
-        # shingle-index table); measured 27% on the sf0.1 bench.  The
-        # cache entry lives until session LRU eviction — callers doing
-        # many dedup passes should unpersist via the returned plan's
-        # lineage or use a real intermediate table.
-        from pyspark.storagelevel import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # the exploded shingle table is consumed by up to three subtrees
+    # (df-cap aggregate + both self-join sides): persisting it is the
+    # two-pass production shape (at 10^12 docs this is a materialized
+    # shingle-index table); measured 27% on the sf0.1 bench.  The cache
+    # entry lives until session LRU eviction — callers doing many dedup
+    # passes should unpersist via the returned plan's lineage or use a
+    # real intermediate table.
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     if max_shingle_df is not None:
         hot = (
             sh.groupBy("_lane")
@@ -235,115 +224,6 @@ def ngram_jaccard_pairs(
     return pairs
 
 
-def minhash_base_hashes(sh: Column) -> Column:
-    """array<long> of per-shingle base hashes x = md5_lane60(s) mod p.
-    ONE md5 per shingle; every permutation below is integer arithmetic
-    over this array.  Stage the result as a named column before calling
-    ``minhash_from_bases`` so the md5 transform is computed once, not
-    re-inlined into the fold."""
-    return F.transform(
-        sh, lambda s: F.pmod(md5_lane60(s), F.lit(MINHASH_P))
-    )
-
-
-def minhash_from_bases(bases: Column, num_hashes: int = 64) -> Column:
-    """array<long> MinHash signature from a BASE-HASH ARRAY attribute:
-    component i = min over x of (a_i·x + b_i) mod p — map-side, no
-    shuffle.  ``bases`` must be a plain attribute.
-
-    Shape: ONE ``aggregate`` fold over the base array whose accumulator
-    is the running component-wise minimum (zip_with least against the
-    per-element permutation vector).  The r3 form — num_hashes separate
-    ``array_min(transform(...))`` passes — allocated num_hashes
-    intermediate arrays per row AND cost ~2 s of py4j build per query
-    construction; the fold is one pass, same values (A/B in
-    BENCH/PLANS.md r4).  MINHASH_P is the fold's +infinity: every
-    permuted value is mod p, so min(p, ...) is the true minimum on any
-    non-empty base array (empty arrays are excluded upstream — the r3
-    form returned NULL components there, the fold returns p)."""
-    perms = minhash_perm_consts(num_hashes)
-
-    def _per_elem(x):
-        # NB: 1-arg lambdas only — a second (even defaulted) parameter
-        # would make Spark pass the element INDEX into it
-        return F.array(
-            *[
-                F.pmod(F.lit(a) * x + F.lit(b), F.lit(MINHASH_P))
-                for a, b in perms
-            ]
-        )
-
-    return F.aggregate(
-        bases,
-        F.array_repeat(F.lit(MINHASH_P).cast("long"), num_hashes),
-        lambda acc, x: F.zip_with(acc, _per_elem(x), lambda u, v: F.least(u, v)),
-    )
-
-
-def minhash_signatures_vectorized(num_hashes: int = 64) -> "Column":
-    """Arrow-kernel twin of ``minhash_from_bases`` — returns a pandas_udf
-    computing the same signatures bit-identically (pinned by test).
-
-    Why a designed Python slot here: Spark higher-order functions
-    evaluate their lambdas INTERPRETED (outside whole-stage codegen), so
-    the k×|shingles| modular arithmetic — ~100 M boxed ops per 5 k docs
-    at k=64 — burns ~3 s where the numpy formulation (one
-    ``(A·x+B) mod p`` matrix per Arrow batch chunk + per-row
-    ``np.minimum.reduceat``) does the identical integer math in ~0.4 s
-    on the same cores.  a·x < 2^62 keeps int64 exact.  Batch memory is
-    bounded by chunking rows to ~200 k flattened elements (~100 MB of
-    64-row matrix per chunk).  Empty/NULL base arrays yield the fold's
-    identity vector [p]*k."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    perms = minhash_perm_consts(num_hashes)
-    A = np.array([a for a, _ in perms], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in perms], dtype=np.int64)[:, None]
-
-    # NB: hint-free signature — under ``from __future__ import
-    # annotations`` stringified hints break pandas_udf eval-type
-    # inference (UNSUPPORTED_SIGNATURE); the return type is the explicit
-    # "array<long>" below
-    def _kernel(bases):
-        out: list = []
-        n = len(bases)
-        i = 0
-        while i < n:
-            j, tot, lens, rows = i, 0, [], []
-            while j < n and tot < 200_000:
-                v = bases.iloc[j]
-                arr = (
-                    np.asarray(v, dtype=np.int64)
-                    if v is not None
-                    else np.empty(0, dtype=np.int64)
-                )
-                if len(arr) == 0:
-                    # placeholder element keeps reduceat offsets valid;
-                    # the row is overwritten with the identity below
-                    rows.append(np.zeros(1, dtype=np.int64))
-                    lens.append((1, True))
-                else:
-                    rows.append(arr)
-                    lens.append((len(arr), False))
-                tot += len(rows[-1])
-                j += 1
-            flat = np.concatenate(rows)
-            M = (A * flat[None, :] + B) % MINHASH_P
-            offs = np.zeros(len(lens), dtype=np.intp)
-            np.cumsum([l for l, _ in lens[:-1]], out=offs[1:])
-            mins = np.minimum.reduceat(M, offs, axis=1)
-            for r, (_, empty) in enumerate(lens):
-                out.append(
-                    [MINHASH_P] * num_hashes if empty else mins[:, r].tolist()
-                )
-            i = j
-        return pd.Series(out)
-
-    return pandas_udf(_kernel, "array<long>")
-
-
 def minhash_signatures_from_text(
     num_hashes: int = 64, n: int = 3
 ) -> "Column":
@@ -351,24 +231,23 @@ def minhash_signatures_from_text(
     md5 base lane → Carter-Wegman minima: raw text in, MinHash
     signature array out, ONE python slot for the whole signature stage.
 
-    Bit-identical to the staged Column pipeline (``_staged_shingles`` →
-    ``minhash_base_hashes`` → ``minhash_signatures_vectorized``), pinned
-    by tests/test_dedup_similarity.py: ``str.split(' ')`` ==
-    ``split(text, ' ')``, ``' '.join`` == ``concat_ws(' ', …)`` (tokens
-    are separator-free so the mapping is bijective), ``hashlib.md5`` of
-    the utf-8 bytes == ``md5(encode(col, 'utf-8'))`` and
-    ``int(hexdigest[:15], 16)`` == ``conv(substring(md5, 1, 15), 16,
-    10)``; the permutation minima use the same int64 matrix kernel as
-    ``minhash_signatures_vectorized``.  The shingle SET is order-
-    insensitive under min-folds, so ``set()`` replaces the fold's
-    first-occurrence ``array_distinct`` order for free.
+    Definition (the DuckDB oracle ``_sql_minhash_lsh`` computes the same
+    values): tokens are ``str.split(' ')`` (== Spark ``split(text, ' ')``,
+    which the zero-shingle filter upstream uses), shingles the distinct
+    ``' '.join`` of n consecutive tokens, base x = md5 lane of the utf-8
+    shingle (``int(hexdigest[:15], 16)`` == ``md5_lane60``) mod p, and
+    component i = min over x of (a_i·x + b_i) mod p.  a·x < 2^62 keeps
+    the int64 matrix ``(A·x + B) mod p`` exact; one matrix per chunk of
+    ~200 k flattened shingles bounds batch memory, and
+    ``np.minimum.reduceat`` takes the per-row minima.  NULL text and
+    docs with fewer than n tokens (zero shingles) return the identity
+    [p]*k; ``minhash_lsh_pairs`` excludes them upstream.  A plain-Python
+    reference pins it in tests/test_dedup_similarity.py.
 
-    Why: the Column shingle+md5 stages evaluate interpreted (HOF
-    lambdas + per-element md5/conv — ~0.7 s of the 2.2 s query at
-    sf1.0/local[32]); hashlib + numpy do the identical math inside the
-    slot that already exists for the minima.  Docs with fewer than n
-    tokens (zero shingles) return the fold identity [p]*k — callers
-    exclude them upstream exactly as before."""
+    Why one kernel: as Column expressions the shingle, md5 and
+    permutation stages evaluate interpreted (HOF lambdas + per-element
+    md5/conv, ~100 M boxed ops per 5 k docs at k=64); hashlib + numpy do
+    the same integer math in one Arrow slot."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -425,14 +304,6 @@ def minhash_signatures_from_text(
         return pd.Series(out)
 
     return pandas_udf(_kernel, "array<long>")
-
-
-def minhash_signature(text: Column, num_hashes: int = 64, n: int = 3) -> Column:
-    """Literal/test convenience; pipelines stage shingles AND base hashes
-    first (this inline form re-derives the md5 per permutation reference)."""
-    return minhash_from_bases(
-        minhash_base_hashes(word_shingles(text, n)), num_hashes
-    )
 
 
 def minhash_lsh_pairs(
@@ -568,103 +439,6 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_from_hashes(hashes: Column, n_toks: Column) -> Column:
-    """60-bit SimHash from a token-hash ARRAY attribute (see
-    shingles_from_tokens performance contract)."""
-
-    def _bit_set(bit):
-        # 1-arg closure (see minhash_signature note)
-        return lambda h: F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1
-
-    # lane b: majority vote of token-hash bit b (2*set_count >= n → 1)
-    lanes = []
-    for bit in range(SIMHASH_BITS):
-        setcnt = F.size(F.filter(hashes, _bit_set(bit)))
-        lanes.append(
-            F.when(
-                (setcnt * 2) >= n_toks,
-                F.shiftleft(F.lit(1).cast("long"), bit),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    out = lanes[0]
-    for lane in lanes[1:]:
-        out = out.bitwiseOR(lane)
-    return out
-
-
-def simhash_vectorized() -> "Column":
-    """Arrow-kernel twin of ``simhash_from_hashes`` — a pandas_udf over
-    (hash_array, n_toks) computing the same 60-bit simhash bit-identically
-    (pinned by test, incl. the empty-array all-bits and NULL→0 cases).
-
-    Why a designed Python slot here: the Column fold runs 60 interpreted
-    ``filter`` passes over the token-hash array per row (~0.9 s of the
-    1.45 s simhash stage at sf0.1), where one numpy bit-unpack +
-    ``np.add.reduceat`` per Arrow chunk does the identical math in
-    ~0.1 s.  Batch memory is bounded by chunking rows to ~200 k flattened
-    elements (~100 MB of 60-row bit matrix per chunk)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    BITS = np.arange(SIMHASH_BITS, dtype=np.int64)
-    WEIGHTS = np.int64(1) << BITS  # distinct powers: packed sum < 2^60
-
-    # hint-free signature — see minhash_signatures_vectorized
-    def _kernel(hashes, n_toks):
-        out: list = []
-        n = len(hashes)
-        i = 0
-        while i < n:
-            j, tot, rows, kinds, nts = i, 0, [], [], []
-            while j < n and tot < 200_000:
-                v = hashes.iloc[j]
-                nt = n_toks.iloc[j]
-                arr = None if v is None else np.asarray(v, dtype=np.int64)
-                if arr is None or len(arr) == 0:
-                    # placeholder keeps reduceat offsets valid; the
-                    # row's counts are overridden to 0 below
-                    rows.append(np.zeros(1, dtype=np.int64))
-                    kinds.append("null" if arr is None else "empty")
-                else:
-                    rows.append(arr)
-                    kinds.append("ok")
-                # NULL n_toks → the fold's when(NULL≥…) is false → 0;
-                # model it as a count no vote can reach (-1 sentinel)
-                nts.append(-1 if nt is None or pd.isna(nt) else int(nt))
-                tot += len(rows[-1])
-                j += 1
-            flat = np.concatenate(rows)
-            bits = (flat[None, :] >> BITS[:, None]) & 1  # (60, N)
-            offs = np.zeros(len(rows), dtype=np.intp)
-            np.cumsum([len(r) for r in rows[:-1]], out=offs[1:])
-            cnt = np.add.reduceat(bits, offs, axis=1)  # (60, n_rows)
-            for r, kind in enumerate(kinds):
-                if kind != "ok":
-                    cnt[:, r] = 0
-            nts_arr = np.array(nts, dtype=np.int64)
-            vote = np.where(
-                nts_arr[None, :] >= 0, (2 * cnt) >= nts_arr[None, :], False
-            )
-            packed = (vote * WEIGHTS[:, None]).sum(axis=0)
-            for r, kind in enumerate(kinds):
-                # NULL hash array: every lane is otherwise(0) in the fold
-                out.append(0 if kind == "null" else int(packed[r]))
-            i = j
-        return pd.Series(out)
-
-    return pandas_udf(_kernel, "long")
-
-
-def simhash64(text: Column) -> Column:
-    """60-bit SimHash over tokens: per bit position, majority vote of the
-    token md5-lane bits.  Literal/test convenience; pipelines stage the
-    hash array first (``simhash_from_hashes``)."""
-    toks = tokens(text)
-    hashes = F.transform(toks, md5_lane60)
-    return simhash_from_hashes(hashes, F.size(toks))
-
-
 def _pairwise_cosine_group_fn(threshold: float):
     """applyInPandas kernel factory for ``embedding_near_dup_pairs``:
     one block/bucket of (id, v, …) rows in, the pairs (id_a, id_b, sim)
@@ -687,9 +461,10 @@ def _pairwise_cosine_group_fn(threshold: float):
       association fixed the results are bit-equal; the per-vector norm
       is computed once per vector from the same input the per-pair fold
       saw, hence the same bits;
-    * pairs the fold scored NULL (a NULL vector, or zip_with length
-      padding) or NaN (zero-norm ±0.0/0.0) never passed the ≥ threshold
-      filter, and here are simply not emitted — identical query output.
+    * pairs the fold scored NULL (zip_with length padding) or NaN
+      (zero-norm ±0.0/0.0) never passed the ≥ threshold filter, and here
+      are simply not emitted — identical query output.  NULL vectors
+      never reach the kernel (``embedding_near_dup_pairs`` filters them).
 
     Pinned by tests/test_dedup_similarity.py (group kernel vs fold on
     adversarial vectors) and the oracle rows at three scales."""
@@ -701,14 +476,13 @@ def _pairwise_cosine_group_fn(threshold: float):
     def _fn(pdf):
         ids_np = pdf["id"].to_numpy()
         vs = pdf["v"].to_numpy()
-        ok = [i for i in range(len(ids_np)) if vs[i] is not None]
         out_a: list = []
         out_b: list = []
         out_s: list = []
         # same-length partitions: a cross-length pair is NULL under
         # zip_with padding and is never emitted
         by_len: dict = {}
-        for i in ok:
+        for i in range(len(vs)):
             by_len.setdefault(len(vs[i]), []).append(i)
         for idx in by_len.values():
             sub_ids = ids_np[idx]
@@ -783,11 +557,14 @@ def embedding_near_dup_pairs(
     fold — see ``_pairwise_cosine_group_fn``."""
     from .similarity import rh_signature
 
+    # A NULL vector has no cosine with anything, so it is dropped before
+    # any grouping: ``rh_signature`` reads it as signature 0, which would
+    # pile every NULL row into bucket (tbl, 0) of every table.
     v = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
         *([F.col(block_col).alias("blk")] if block_col else []),
-    )
+    ).where(F.col("v").isNotNull())
     id_dt = v.schema["id"].dataType.simpleString()
     out_schema = f"id_a {id_dt}, id_b {id_dt}, sim double"
     pair_fn = _pairwise_cosine_group_fn(threshold)
@@ -838,12 +615,9 @@ def embedding_near_dup_pairs(
     # the dedup exchange carries ~24-byte rows.  A pair sharing several
     # buckets is scored once per bucket — identical inputs give a
     # bit-identical score, so dropDuplicates keeping any copy is
-    # value-deterministic.  sig IS NOT NULL mirrors the former inner
-    # join on (tbl, sig) (a NULL embedding has a NULL signature and
-    # never matched).
+    # value-deterministic.
     near = (
-        sigs.where(F.col("sig").isNotNull())
-        .groupBy("tbl", "sig")
+        sigs.groupBy("tbl", "sig")
         .applyInPandas(pair_fn, out_schema)
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -853,11 +627,20 @@ def embedding_near_dup_pairs(
 def simhash_from_text_vectorized() -> "Column":
     """Arrow kernel fusing tokenize → per-token md5 lane → bit-majority
     pack: raw text in, 60-bit simhash out, one python slot for the whole
-    signature stage.  Bit-identical to ``split`` + ``transform(…,
-    md5_lane60)`` + ``simhash_vectorized`` (NULL text → 0 like the
-    fold's NULL-array case); pinned by tests/test_dedup_similarity.py.
-    The per-token interpreted md5/conv transform was the remaining
-    interpreted cost of the simhash stage (~0.7 s at sf1.0)."""
+    signature stage.
+
+    Definition (the DuckDB oracle ``_sql_simhash_buckets`` computes the
+    same values): tokens are ``str.split(' ')``, each hashed to its md5
+    lane (``int(hexdigest[:15], 16)`` == ``md5_lane60``); bit b of the
+    result is set iff 2·(tokens with bit b set) ≥ the token count.  NULL
+    text → 0.  One numpy bit-unpack + ``np.add.reduceat`` per chunk of
+    ~200 k flattened tokens bounds batch memory (~100 MB of 60-row bit
+    matrix).  A plain-Python reference pins it in
+    tests/test_dedup_similarity.py.
+
+    Why one kernel: as Column expressions the per-token md5/conv
+    transform and the 60 per-bit ``filter`` passes evaluate interpreted
+    (~1.8 s over the hash staging at sf0.1 before the kernel existed)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -916,8 +699,7 @@ def simhash_buckets(
     chunks; docs within hamming distance 3 share at least one chunk
     (pigeonhole), so an equi-join on (chunk_idx, chunk) finds all such
     pairs without a cross join.  The signature stage is ONE fused Arrow
-    kernel (``simhash_from_text_vectorized``), bit-identical to the
-    Column fold pipeline.
+    kernel (``simhash_from_text_vectorized``).
 
     Pair UNIQUENESS is by construction, not by a dedup exchange: a pair
     agreeing on several chunks is emitted only from its FIRST agreeing
@@ -982,84 +764,36 @@ def simhash_buckets(
 
 
 def ngram_overlap_counts(
-    train: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-) -> DataFrame:
-    """Benchmark decontamination: per TRAIN document, the number of
-    distinct word n-grams it shares with ANY eval document (the standard
-    13-gram test-set-overlap rule; n is configurable for short-document
-    corpora).  Returns every train doc: (id, n_overlap, contaminated).
-
-    Shape: both sides shingle once; the eval side deduplicates to distinct
-    grams (eval sets are small → Spark broadcasts it); one equi-join on
-    the gram, then a left join back so clean docs report 0.  No cross
-    join anywhere."""
-    tr = _staged_shingles(train, text_col, id_col, n)
-    ev = _staged_shingles(eval_df, text_col, id_col, n)
-    # the overlap join runs on the 8-byte xxhash64 lane of the gram, not
-    # the raw string (internal-lane policy — module docstring; the
-    # oracle joins raw grams, so a green row certifies collision-freeness)
-    tr_sh = (
-        tr.select("id", F.explode_outer("_sh").alias("g"))
-        .where(F.col("g").isNotNull())
-        .select("id", F.xxhash64(F.col("g")).alias("g"))
-    )
-    ev_sh = (
-        ev.select(F.explode_outer("_sh").alias("g"))
-        .where(F.col("g").isNotNull())
-        .select(F.xxhash64(F.col("g")).alias("g"))
-        .distinct()
-    )
-    hits = (
-        tr_sh.join(ev_sh, on="g")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    ids = train.select(F.col(id_col).alias("id"))
-    return (
-        ids.join(hits, on="id", how="left")
-        .select(
-            "id",
-            F.coalesce(F.col("n_overlap"), F.lit(0)).alias("n_overlap"),
-            (F.coalesce(F.col("n_overlap"), F.lit(0)) > 0).alias(
-                "contaminated"
-            ),
-        )
-    )
-
-
-def ngram_overlap_counts_flagged(
     df: DataFrame,
     is_eval: Column,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 13,
-    materialize_shingles: bool = False,
 ) -> DataFrame:
-    """``ngram_overlap_counts`` for the common single-corpus shape (an
-    eval FLAG instead of two tables): the shingle table derives ONCE and
-    both sides filter it — half the scan+parse of the two-table form, and
-    ``materialize_shingles`` persists that single derivation for its two
-    consumers (the two-pass production shape)."""
+    """Benchmark decontamination: per TRAIN document (``is_eval`` false),
+    the number of distinct word n-grams it shares with ANY eval document
+    (``is_eval`` true) — the standard 13-gram test-set-overlap rule; n is
+    configurable for short-document corpora.  Returns every train doc:
+    (id, n_overlap, contaminated).
+
+    Shape: the shingle table derives ONCE from the one corpus and is
+    persisted for its two consumers (the eval side's distinct grams and
+    the train side); one equi-join on the gram, then a left join back so
+    clean docs report 0.  No cross join anywhere."""
     flagged = df.select(
         F.col(id_col), F.col(text_col), is_eval.alias("_is_eval")
     )
     staged = _staged_shingles(flagged, text_col, id_col, n,
                               block_col="_is_eval")
-    # gram strings die in this projection; the join key is the 8-byte
-    # xxhash64 lane (see ngram_overlap_counts)
+    # gram strings die in this projection; the overlap join runs on the
+    # 8-byte xxhash64 lane (internal-lane policy — module docstring; the
+    # oracle joins raw grams, so a green row certifies collision-freeness)
     sh = (
         staged.select("id", "blk", F.explode_outer("_sh").alias("g"))
         .where(F.col("g").isNotNull())
         .select("id", "blk", F.xxhash64(F.col("g")).alias("g"))
     )
-    if materialize_shingles:
-        from pyspark.storagelevel import StorageLevel
-
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     ev = sh.where(F.col("blk")).select("g").distinct()
     tr = sh.where(~F.col("blk")).select("id", "g")
     hits = (
@@ -1151,7 +885,6 @@ def duplicated_span_removal(
     n: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_grams: bool = False,
 ) -> DataFrame:
     """Exact-substring deduplication in the style of Lee et al. 2022
     ("Deduplicating Training Data Makes Language Models Better"): any
@@ -1199,16 +932,6 @@ def duplicated_span_removal(
         # would re-run the whole gram-lane transform (2x gram hashing)
         F.posexplode_outer(gram_lanes).alias("pos", "gl"),
     ).where(F.col("gl").isNotNull())
-    if materialize_grams:
-        # grams feed TWO subtrees (the duplicate-detection aggregate and
-        # the occurrence join), and their exchanges differ, so AQE cannot
-        # reuse one for the other — without this persist the per-gram
-        # xxhash staging runs twice.  Same trade as ngram_jaccard's
-        # materialize_shingles: at 10^12 docs this is a materialized
-        # gram-index table, not an executor cache.
-        from pyspark.storagelevel import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     dup = (
         grams.groupBy("gl")
         .agg(F.count(F.lit(1)).alias("occ"))

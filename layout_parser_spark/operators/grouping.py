@@ -3,11 +3,13 @@
 
 The reference's generalized 1-D connected-component analysis builds an
 O(n²) pairwise score matrix and runs scipy ``connected_components``
-(shape_operations.py:25-77).  The engine runs the SAME per-document
-algorithm inside ``applyInPandas`` keyed by document — a graph op over
-≤10³ blocks/doc is exactly the right granularity for a Python island, and
-it is embarrassingly parallel across documents.  scipy is not a dependency:
-an equivalent union-find produces identical components; component ORDER is
+(shape_operations.py:25-77).  ``gcca_apply`` runs the SAME per-document
+algorithm inside one ``mapInPandas`` kernel per key-hashed partition — a
+graph op over ≤10³ blocks/doc is exactly the right granularity for a
+Python island, and it is embarrassingly parallel across documents.  Line
+detection, whose documents can outgrow that granularity, is relational
+instead (``detect_lines_distributed``).  scipy is not a dependency: an
+equivalent union-find produces identical components; component ORDER is
 pinned to scipy's label order (first-appearance = ascending minimum member
 index) and element order within a component is original sequence order.
 
@@ -107,59 +109,6 @@ def detect_lines_local(
     return gcca_1d(boxes, close, _union_boxes)
 
 
-def detect_lines(
-    df: DataFrame,
-    key: str = "doc_id",
-    blocks_col: str = "blocks",
-    x_tolerance: float = 10,
-    y_tolerance: float = 10,
-) -> DataFrame:
-    """Distributed line detection: per-document CCA via applyInPandas.
-    Input: (key, blocks ARRAY<TEXTBLOCK> of rectangles).
-    Output: (key, line_id, x_1, y_1, x_2, y_2, n_tokens)."""
-    schema = (
-        f"{key} long, line_id int, x_1 double, y_1 double, x_2 double, "
-        "y_2 double, n_tokens int"
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            boxes = [
-                (b["x_1"], b["y_1"], b["x_2"], b["y_2"])
-                for b in (row[blocks_col] or [])
-            ]
-            if not boxes:
-                continue
-            comps = connected_components_1d(
-                len(boxes),
-                lambda i, j: _line_close(
-                    boxes[i], boxes[j], x_tolerance, y_tolerance
-                ),
-            )
-            for li, comp in enumerate(comps):
-                u = _union_boxes([boxes[i] for i in comp])
-                out.append((row[key], li, *u, len(comp)))
-        return pd.DataFrame(
-            out,
-            columns=[key, "line_id", "x_1", "y_1", "x_2", "y_2", "n_tokens"],
-        )
-
-    return df.groupBy(key).applyInPandas(
-        lambda k, pdf: kernel(pdf), schema=schema
-    )
-
-
-def _line_close(a, b, x_tolerance, y_tolerance):
-    eff_y_tol, eff_x_tol = x_tolerance, y_tolerance  # reference swap
-    ya = (a[1] + a[3]) / 2.0
-    yb = (b[1] + b[3]) / 2.0
-    return (
-        abs(ya - yb) <= eff_y_tol
-        and min(abs(a[0] - b[2]), abs(a[2] - b[0])) <= eff_x_tol
-    )
-
-
 def gcca_apply(
     df: DataFrame,
     key_cols: List[str],
@@ -170,10 +119,11 @@ def gcca_apply(
 ) -> DataFrame:
     """Distributed ``generalized_connected_component_analysis_1d``
     (reference shape_operations.py:25-77) with an ARBITRARY Python
-    scoring function — the generic slot that ``detect_lines`` /
-    ``detect_lines_distributed`` specialize.  ``gcca_1d``'s union-find
-    runs over (x_1, y_1, x_2, y_2) tuples per document; embarrassingly
-    parallel across documents.
+    scoring function — the generic slot.  ``detect_lines_local`` is
+    ``gcca_1d`` with the line-detection scoring fixed, and
+    ``detect_lines_distributed`` is that scoring in relational form.
+    ``gcca_1d``'s union-find runs over (x_1, y_1, x_2, y_2) tuples per
+    document; embarrassingly parallel across documents.
 
     Shape: repartition by key, then ONE ``mapInPandas`` kernel per
     partition with a pandas groupby inside — not per-group
@@ -287,9 +237,11 @@ def detect_lines_distributed(
     * aggregate per component = union-reduce (min/max corners) + count,
       line_id = rank of the component's first block id per document.
 
-    Output: key_cols + (line_id, x_1, y_1, x_2, y_2, n_tokens) — the same
-    contract as ``detect_lines``; equality with the per-document kernel is
-    pinned by tests."""
+    Output: key_cols + (line_id, x_1, y_1, x_2, y_2, n_tokens) — the
+    ``detect_lines`` contract query, certified by its DuckDB oracle; per
+    document it equals ``detect_lines_local`` (lines in the same order),
+    pinned by tests/test_dedup_similarity.py::
+    test_detect_lines_distributed_equals_local."""
     eff_y_tol, eff_x_tol = x_tolerance, y_tolerance  # reference swap
 
     base = df.select(

@@ -1,15 +1,27 @@
-"""Property pins for the xxhash64-based operators that have no SQL oracle:
-MinHash+LSH, SimHash, random-hyperplane LSH — plus the grouping/CCA tools
-ported from test_tools.py."""
+"""Property pins for the near-dup, similarity and grouping operators.
+
+MinHash+LSH and SimHash have full DuckDB oracles (``minhash_lsh``,
+``simhash_buckets`` in tests/test_entry_contract.py); here their fused
+signature kernels are also pinned against a plain-Python reference on
+adversarial and seeded random texts.  Random-hyperplane LSH, the
+embedding and n-gram operators, and the grouping/CCA tools ported from
+test_tools.py are pinned by property tests."""
+
+import hashlib
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
 from layout_parser_spark.operators.dedup import (
+    MINHASH_P,
+    SIMHASH_BITS,
     minhash_lsh_pairs,
+    minhash_perm_consts,
+    minhash_signatures_from_text,
     ngram_jaccard_pairs,
     simhash_buckets,
-    word_shingles,
+    simhash_from_text_vectorized,
 )
 from layout_parser_spark.operators.grouping import (
     detect_lines_local,
@@ -22,6 +34,57 @@ BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
     "near the warm fire and dreams of fish"
 )
+
+
+def _lane(s):
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def _ref_minhash(text, k, n):
+    """MinHash by definition: distinct word n-grams of ``split(" ")``,
+    md5 lane mod p, per permutation min (a·x + b) mod p; NULL text or
+    fewer than n tokens → the identity [p]*k."""
+    toks = [] if text is None else text.split(" ")
+    grams = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    if not grams:
+        return [MINHASH_P] * k
+    xs = [_lane(g) % MINHASH_P for g in grams]
+    return [
+        min((a * x + b) % MINHASH_P for x in xs)
+        for a, b in minhash_perm_consts(k)
+    ]
+
+
+def _ref_simhash(text):
+    """SimHash by definition: bit b is set iff 2·(token lanes with bit b
+    set) ≥ the token count of ``split(" ")``; NULL text → 0."""
+    if text is None:
+        return 0
+    lanes = [_lane(t) for t in text.split(" ")]
+    return sum(
+        1 << b
+        for b in range(SIMHASH_BITS)
+        if 2 * sum((h >> b) & 1 for h in lanes) >= len(lanes)
+    )
+
+
+def _random_texts(seed, count):
+    """Seeded texts over a small vocabulary (so shingles repeat), with
+    multibyte and tab tokens and runs of spaces (empty tokens)."""
+    rng = random.Random(seed)
+    vocab = ["a", "b", "fox", "dog", "汉字", "分词", "é", "tab\tx", "", ""]
+    return [
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 40)))
+        for _ in range(count)
+    ]
+
+
+def _kernel_outputs(spark, texts, kernel):
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "id long, text string"
+    )
+    out = df.select("id", kernel(F.col("text")).alias("s")).collect()
+    return {r.id: r.s for r in out}
 
 
 @pytest.fixture(scope="module")
@@ -203,6 +266,18 @@ def test_gcca_apply_matches_local_kernel(spark):
         assert got[doc] == want, f"doc {doc}"
 
 
+def test_gcca_apply_missing_key_col_raises(spark):
+    from layout_parser_spark.operators.grouping import gcca_apply
+
+    df = spark.range(3).select(
+        F.col("id").alias("block_id"),
+        F.lit(0.0).alias("x_1"), F.lit(0.0).alias("y_1"),
+        F.lit(1.0).alias("x_2"), F.lit(1.0).alias("y_2"),
+    )
+    with pytest.raises(ValueError, match=r"key_cols \['nope'\]"):
+        gcca_apply(df, ["nope"], lambda a, b: 1)
+
+
 def test_embedding_near_dup_lsh_path_recall(spark):
     """Unblocked embedding_near_dup_pairs must use LSH candidates (an
     equi-join, never a cross join) and recover most true near-dup pairs;
@@ -238,10 +313,39 @@ def test_embedding_near_dup_lsh_path_recall(spark):
         assert k in exact and abs(exact[k] - v) < 1e-9
 
 
+def test_embedding_null_vectors_filtered_before_grouping(spark):
+    """NULL vectors leave the plan before bucketing/blocking: the random-
+    hyperplane signature of a NULL vector is 0, so without the filter
+    every NULL row would land in bucket (tbl, 0) of every table.  Pairs
+    are unchanged by 50 added NULL rows, and the optimized plan carries
+    the null filter on the vector column."""
+    from layout_parser_spark.operators.dedup import embedding_near_dup_pairs
+
+    rng = random.Random(3)
+    rows = [(i, "x", [rng.gauss(0, 1) for _ in range(8)]) for i in range(40)]
+    nulls = [(100 + i, "x", None) for i in range(50)]
+    schema = "vec_id long, label string, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + nulls, schema)
+
+    def pairs(out):
+        return {(r.id_a, r.id_b): r.cosine_sim for r in out.collect()}
+
+    for kw in ({"dim": 8, "n_planes": 2, "n_tables": 4},
+               {"block_col": "label"}):
+        out = embedding_near_dup_pairs(dirty, threshold=0.2, **kw)
+        got = pairs(out)
+        assert got and got == pairs(
+            embedding_near_dup_pairs(clean, threshold=0.2, **kw)
+        ), kw
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "isnotnull(embedding#" in plan, kw
+
+
 def test_detect_lines_distributed_equals_local(spark):
     """The pure-relational CCA (banded candidate join + min-label
-    propagation) must produce exactly the per-document kernel's lines —
-    same boxes, counts, AND line_id order."""
+    propagation) must produce exactly ``detect_lines_local``'s lines per
+    document — same boxes, counts, AND line_id order."""
     from layout_parser_spark.operators.grouping import (
         detect_lines_distributed,
         detect_lines_local,
@@ -688,132 +792,47 @@ def test_kmv_sketch_properties(spark):
     assert merged_kth == sorted(lane(str(i)) for i in range(20000))[63]
 
 
-def test_minhash_vectorized_kernel_equals_column_fold(spark):
-    """The Arrow signature kernel must be BIT-IDENTICAL to the pure-Column
-    fold (minhash_from_bases) — including the empty-array identity [p]*k
-    — so swapping execution paths can never change LSH results."""
-    from layout_parser_spark.operators.dedup import (
-        MINHASH_P,
-        minhash_from_bases,
-        minhash_signatures_vectorized,
-    )
-
-    # bases are always pmod(lane, p) upstream — the kernel/fold domain is
-    # [0, p): a·x then stays < 2^62, exact in int64/BIGINT alike
-    rows = [
-        (0, [123456789, 987654321, 5, MINHASH_P - 1]),
-        (1, [0]),
-        (2, []),                      # empty → identity vector
-        (3, list(range(1000, 1300))),  # chunk-filler
-        (4, [MINHASH_P - 2, 1, MINHASH_P // 2]),
-    ]
-    df = spark.createDataFrame(rows, "id long, bases array<long>")
-    fold = {r.id: r.sig for r in df.select(
-        "id", minhash_from_bases(F.col("bases"), 16).alias("sig")).collect()}
-    kern = {r.id: r.sig for r in df.select(
-        "id", minhash_signatures_vectorized(16)(F.col("bases")).alias("sig")).collect()}
-    # the fold returns [p]*k for empty input arrays as well
-    assert kern == fold
+#: adversarial texts for both signature kernels: NULL, empty,
+#: whitespace-only, fewer than n tokens, exactly n, multibyte, tabs,
+#: runs of spaces, repeated shingles, a long doc
+EDGE_TEXTS = [
+    None,
+    "",
+    " ",
+    "  ",
+    "a",
+    "a b",
+    "a b c",
+    "dup dup dup dup dup",
+    "x  y   z w",
+    "汉字 分词 测试 汉字 分词",
+    "tab\tinside token here ok",
+    " leading and trailing space ",
+    "the quick brown fox jumps over the lazy dog",
+    "the quick brown fox " * 40,
+    "the " * 200,
+]
 
 
 def test_minhash_fused_text_kernel_equals_staged_pipeline(spark):
-    """The r6 fused text→signature kernel (tokenize+shingle+md5+minima
-    in one Arrow slot) must be BIT-IDENTICAL to the staged Column
-    pipeline (split → shingles_from_tokens → minhash_base_hashes →
-    vectorized minima) on real-ish and adversarial texts, so swapping
-    the signature stage can never change LSH results."""
-    from layout_parser_spark.operators.dedup import (
-        minhash_base_hashes,
-        minhash_signatures_from_text,
-        minhash_signatures_vectorized,
+    """The fused text→signature kernel (tokenize + shingle + md5 +
+    minima in one Arrow slot) equals the step-by-step plain-Python
+    reference ``_ref_minhash`` on adversarial texts, so the signature
+    stage cannot drift from the definition the oracle also computes."""
+    got = _kernel_outputs(
+        spark, EDGE_TEXTS, minhash_signatures_from_text(16, 3)
     )
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "a b c",                       # exactly n tokens → one shingle
-        "dup dup dup dup dup",         # repeated shingles → distinct set
-        "x  y   z w",                  # empty tokens from double spaces
-        "汉字 分词 测试 汉字 分词",       # multibyte utf-8 shingles
-        "tab\tinside token here ok",
-        " leading and trailing space ",
-        "the quick brown fox " * 40,   # long doc, heavy dup shingles
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "id long, text string"
-    )
-    toksd = df.select("id", F.split("text", " ").alias("_toks"))
-    from layout_parser_spark.operators.dedup import shingles_from_tokens
-
-    staged = toksd.select(
-        "id", shingles_from_tokens(F.col("_toks"), 3).alias("_sh")
-    ).select("id", minhash_base_hashes(F.col("_sh")).alias("_bases"))
-    old = {
-        r.id: r.sig
-        for r in staged.select(
-            "id",
-            minhash_signatures_vectorized(16)(F.col("_bases")).alias("sig"),
-        ).collect()
-    }
-    new = {
-        r.id: r.sig
-        for r in df.select(
-            "id",
-            minhash_signatures_from_text(16, 3)(F.col("text")).alias("sig"),
-        ).collect()
-    }
-    # note: docs with < 3 tokens go through the staged path as k<1 →
-    # empty shingles → identity vector; the kernel matches that too
-    assert new == old
+    assert got == {i: _ref_minhash(t, 16, 3) for i, t in enumerate(EDGE_TEXTS)}
 
 
 def test_simhash_fused_text_kernel_equals_staged_pipeline(spark):
-    """The r6 fused text→simhash kernel (tokenize + per-token md5 lane +
-    bit-majority in one Arrow slot) must be BIT-IDENTICAL to the staged
-    pipeline (split → transform(md5_lane60) → simhash_vectorized),
-    including empty/whitespace/multibyte texts."""
-    from layout_parser_spark.operators.dedup import (
-        md5_lane60,
-        simhash_from_text_vectorized,
-        simhash_vectorized,
-    )
-
-    texts = [
-        "",
-        " ",
-        "  ",
-        "a",
-        "the quick brown fox",
-        "dup dup dup",
-        "汉字 分词 测试 汉字",
-        "x  y   z",
-        " lead",
-        "trail ",
-        "the " * 200,
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "id long, text string"
-    )
-    toksd = df.select("id", F.split("text", " ").alias("_toks"))
-    hashed = toksd.select(
-        "id",
-        F.transform("_toks", md5_lane60).alias("_h"),
-        F.size("_toks").alias("_n"),
-    )
-    old = {
-        r.id: r.s
-        for r in hashed.select(
-            "id",
-            simhash_vectorized()(F.col("_h"), F.col("_n")).alias("s"),
-        ).collect()
-    }
-    new = {
-        r.id: r.s
-        for r in df.select(
-            "id",
-            simhash_from_text_vectorized()(F.col("text")).alias("s"),
-        ).collect()
-    }
-    assert new == old
+    """The fused text→simhash kernel (tokenize + per-token md5 lane +
+    bit-majority in one Arrow slot) equals the step-by-step plain-Python
+    reference ``_ref_simhash``, incl. NULL text → 0 and texts made of
+    empty tokens only."""
+    got = _kernel_outputs(spark, EDGE_TEXTS, simhash_from_text_vectorized())
+    assert got == {i: _ref_simhash(t) for i, t in enumerate(EDGE_TEXTS)}
+    assert got[0] == 0
 
 
 def test_simhash_buckets_first_match_uniqueness(spark):
@@ -844,109 +863,15 @@ def test_simhash_buckets_first_match_uniqueness(spark):
             assert r.hamming == 0
 
 
-def test_simhash_vectorized_kernel_equals_column_fold(spark):
-    """The Arrow simhash kernel must be BIT-IDENTICAL to the pure-Column
-    fold (simhash_from_hashes) on every edge the fold defines: normal
-    rows, the empty-array all-bits-set vote (2·0 ≥ 0), NULL hash arrays
-    (every lane falls to otherwise(0)), and NULL n_toks (NULL comparison
-    → false → 0) — so swapping execution paths can never change buckets."""
-    import hashlib
-
-    from layout_parser_spark.operators.dedup import (
-        SIMHASH_BITS,
-        md5_lane60,
-        simhash_from_hashes,
-        simhash_vectorized,
-    )
-
-    lanes = [
-        int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
-        for w in ["alpha", "beta", "gamma", "delta", "alpha"]
-    ]
-    rows = [
-        (0, lanes, 5),
-        (1, lanes[:1], 1),
-        (2, [], 0),                # empty → every majority vote passes
-        (3, None, 0),              # NULL hashes → 0
-        (4, lanes[:3], None),      # NULL n_toks → 0
-        (5, [(1 << SIMHASH_BITS) - 1], 1),  # all-ones lane
-        (6, list(range(7, 700)), 693),      # chunk filler
-    ]
-    df = spark.createDataFrame(rows, "id long, h array<long>, n long")
-    fold = {r.id: r.sim for r in df.select(
-        "id", simhash_from_hashes(F.col("h"), F.col("n")).alias("sim")).collect()}
-    kern = {r.id: r.sim for r in df.select(
-        "id", simhash_vectorized()(F.col("h"), F.col("n")).alias("sim")).collect()}
-    assert fold[2] == (1 << SIMHASH_BITS) - 1  # pin the empty-array edge
-    assert kern == fold
-
-    # and through the real staging: token lanes from text
-    docs = spark.createDataFrame(
-        [(0, "a b c a"), (1, ""), (2, "z")], "doc_id long, text string")
-    staged = docs.select(
-        "doc_id",
-        F.transform(F.split("text", " "), md5_lane60).alias("h"),
-        F.size(F.split("text", " ")).alias("n"),
-    )
-    f2 = {r.doc_id: r.sim for r in staged.select(
-        "doc_id", simhash_from_hashes(F.col("h"), F.col("n")).alias("sim")).collect()}
-    k2 = {r.doc_id: r.sim for r in staged.select(
-        "doc_id", simhash_vectorized()(F.col("h"), F.col("n")).alias("sim")).collect()}
-    assert k2 == f2
-
-
-def test_span_removal_materialized_grams_same_result(spark, dup_docs):
-    """materialize_grams persists the gram table for its two consumers;
-    results must be identical to the default single-derivation plan."""
-    from layout_parser_spark.operators.dedup import duplicated_span_removal
-
-    base = {r.id: (r.clean_text, r.n_kept, r.n_removed)
-            for r in duplicated_span_removal(dup_docs, n=3).collect()}
-    mat = {r.id: (r.clean_text, r.n_kept, r.n_removed)
-           for r in duplicated_span_removal(
-               dup_docs, n=3, materialize_grams=True).collect()}
-    assert mat == base
-
-
 def test_simhash_kernel_property_random_arrays(spark):
-    """Hypothesis sweep: the Arrow simhash kernel equals the Column fold
-    on arbitrary 60-bit hash arrays and token counts (incl. counts that
-    disagree with the array length, the contract's general case)."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from layout_parser_spark.operators.dedup import (
-        SIMHASH_BITS,
-        simhash_from_hashes,
-        simhash_vectorized,
-    )
-
-    lane = st.integers(min_value=0, max_value=(1 << SIMHASH_BITS) - 1)
-    row = st.tuples(
-        st.lists(lane, min_size=0, max_size=40),
-        st.integers(min_value=0, max_value=60),
-    )
-
-    @settings(
-        max_examples=5,
-        deadline=None,
-        suppress_health_check=[HealthCheck.too_slow],
-    )
-    @given(st.lists(row, min_size=1, max_size=30))
-    def check(rows):
-        df = spark.createDataFrame(
-            [(i, h, n) for i, (h, n) in enumerate(rows)],
-            "id long, h array<long>, n long",
-        )
-        fold = {r.id: r.s for r in df.select(
-            "id", simhash_from_hashes(F.col("h"), F.col("n")).alias("s")
-        ).collect()}
-        kern = {r.id: r.s for r in df.select(
-            "id", simhash_vectorized()(F.col("h"), F.col("n")).alias("s")
-        ).collect()}
-        assert kern == fold
-
-    check()
+    """Seeded sweep: on 300 random texts (even and odd token counts, so
+    exact half votes occur) both fused kernels equal the plain-Python
+    references."""
+    texts = _random_texts(11, 300)
+    sim = _kernel_outputs(spark, texts, simhash_from_text_vectorized())
+    assert sim == {i: _ref_simhash(t) for i, t in enumerate(texts)}
+    mh = _kernel_outputs(spark, texts, minhash_signatures_from_text(16, 3))
+    assert mh == {i: _ref_minhash(t, 16, 3) for i, t in enumerate(texts)}
 
 
 def test_pairwise_cosine_group_kernel_bit_identical_to_fold(spark):

@@ -185,3 +185,38 @@ def test_zorder_key_matches_morton_reference(spark):
     k_near = morton(100, 100) ^ morton(101, 101)
     k_far = morton(100, 100) ^ morton(60000, 60000)
     assert k_near.bit_length() < k_far.bit_length()
+
+
+def test_const_field_cache_distinguishes_numeric_types(spark):
+    """True == 1 == 1.0 hash identically in python; for a string-typed
+    field each must coerce to its OWN literal ('true'/'1'/'1.0'), never
+    a cached cross-type reuse."""
+    from layout_parser_spark.schema import make_block
+
+    row = spark.range(1).select(
+        make_block(block_type="rectangle", text=1).alias("a"),
+        make_block(block_type="rectangle", text=1.0).alias("b"),
+        make_block(block_type="rectangle", text=True).alias("c"),
+    ).collect()[0]
+    assert row.a.text == "1"
+    assert row.b.text == "1.0"
+    assert row.c.text == "true"
+
+
+def test_const_field_cache_resets_on_new_context(spark):
+    """The cache binds to the live SparkContext by identity (weakref) —
+    a different/absent context must clear it rather than serve refs
+    keyed on a recycled id()."""
+    import layout_parser_spark.schema as schema_mod
+
+    schema_mod._const_field("text", "warmup")
+    assert len(schema_mod._CONST_CACHE) > 0
+    ref = schema_mod._CONST_CACHE_SC
+    assert ref is not None and ref() is spark.sparkContext
+    # simulate a stale binding: poison the weakref holder, next call
+    # must rebuild the cache for the live context
+    schema_mod._CONST_CACHE_SC = None
+    schema_mod._const_field("text", "warmup2")
+    assert schema_mod._CONST_CACHE_SC() is spark.sparkContext
+    assert ("text", str, "warmup") not in schema_mod._CONST_CACHE
+    assert ("text", str, "warmup2") in schema_mod._CONST_CACHE

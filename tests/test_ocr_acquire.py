@@ -78,6 +78,16 @@ def test_missing_binary_raises_at_plan_time(spark, monkeypatch):
         tesseract_acquire(pages, ["doc_id"])
 
 
+def test_tesseract_acquire_missing_doc_col_raises(spark):
+    from layout_parser_spark.operators.ocr_acquire import tesseract_acquire
+
+    pages = spark.range(1).select(
+        F.col("id").alias("url"), F.lit(b"x").alias("image")
+    )
+    with pytest.raises(ValueError, match=r"doc_cols \['doc_id'\]"):
+        tesseract_acquire(pages, ["doc_id"], tesseract_cmd="/bin/true")
+
+
 def test_tsv_roundtrip_matches_pickle(golden, fake_tesseract):
     """The fake binary's TSV, reparsed by the slot's parser, reproduces
     the pickled frame exactly (ints, float conf, NaN structural text)."""
