@@ -14,7 +14,10 @@ Design for the 10^12-doc cluster run:
 * the input table is expected hash-bucketed on url (Iceberg
   ``bucket(N, url)``); ``--buckets`` drives the manifest/resume unit —
   re-running the same command after ANY interruption resumes exactly at
-  the pending buckets (plans/manifest.py);
+  the pending buckets (plans/manifest.py).  Each bucket commits in one
+  job for its output plus one for its manifest row; the row's
+  ``doc_count``/``byte_count`` are the write's own observed metrics, and
+  the resume listing is one job (none before the first commit);
 * ``--salt-partitions`` applies the explicit salted repartition
   ``pmod(xxhash64(url, salt), S)`` in front of the segmentation UDF stage
   to spread hot hosts;

@@ -19,6 +19,14 @@ the engine provides plain-DataFrame bookkeeping:
 * a resumed run anti-joins the bucket list against the manifest and only
   processes pending buckets.
 
+Spark jobs per call: the resume listing runs none when ``_manifest`` does
+not exist (a Hadoop ``FileSystem.exists`` check) and one collect otherwise.
+Each pending bucket runs one job that writes its output (plus one per
+shuffle stage of the pipeline, e.g. a salted repartition) and one that
+appends its manifest row, built in the JVM from literals.  ``doc_count``
+and ``byte_count`` are the observed metrics of that write
+(``DataFrame.observe``), not a re-read of the bucket's output.
+
 Output + manifest are written per bucket (separate subdirectories), so a
 crashed bucket leaves no committed manifest row and is simply redone —
 idempotent at-least-once execution with exactly-once OUTPUT visibility via
@@ -31,7 +39,7 @@ import hashlib as _hashlib
 import os
 from typing import Callable, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
@@ -58,23 +66,42 @@ def _manifest_dir(root: str) -> str:
     return os.path.join(root, "_manifest")
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """``path`` exists on the Hadoop ``FileSystem`` of its scheme (local,
+    HDFS, S3, ...); a scheme with no ``FileSystem`` raises."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
+def _manifest_frame(spark: SparkSession, values: Optional[list] = None):
+    """A MANIFEST_SCHEMA frame built in the JVM: one row of ``values``,
+    or no rows when ``values`` is None.  No Python rows are serialized."""
+    fields = [f.split() for f in MANIFEST_SCHEMA.split(", ")]
+    vals = values if values is not None else [None] * len(fields)
+    return spark.range(int(values is not None), numPartitions=1).select(
+        *[F.lit(v).cast(t).alias(n) for (n, t), v in zip(fields, vals)]
+    )
+
+
 def read_manifest(spark: SparkSession, root: str) -> DataFrame:
+    """The committed manifest rows; an empty frame only when ``_manifest``
+    does not exist.  Any other failure (listing, permissions, unknown
+    scheme) raises, so a resume never mistakes it for "nothing done"."""
     path = _manifest_dir(root)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    if not _exists(spark, path):
+        return _manifest_frame(spark)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def completed_buckets(spark: SparkSession, root: str) -> List[int]:
-    m = read_manifest(spark, root)
-    return [
-        r.bucket_id
-        for r in m.where(F.col("status") == "done")
-        .select("bucket_id")
-        .distinct()
-        .collect()
-    ]
+    """Sorted ids of the committed buckets: no job when ``_manifest`` does
+    not exist, else one collect (deduplicated here, not by a shuffle)."""
+    path = _manifest_dir(root)
+    if not _exists(spark, path):
+        return []
+    m = spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    rows = m.where(F.col("status") == "done").select("bucket_id").collect()
+    return sorted({r.bucket_id for r in rows})
 
 
 def run_with_manifest(
@@ -91,6 +118,14 @@ def run_with_manifest(
 ) -> dict:
     """Process all PENDING buckets of ``pages`` through ``pipeline``,
     committing one output directory + manifest row per bucket.
+
+    Spark jobs: the resume listing runs one (none on a root with no
+    ``_manifest``); each pending bucket then runs one job that writes
+    ``pipeline(part)`` (plus one per shuffle stage the pipeline has, e.g.
+    a salted repartition) and one that appends its manifest row.  The
+    row's ``doc_count``/``byte_count`` are the write's own observed
+    metrics (``DataFrame.observe`` on the pipeline's final frame), not a
+    re-read of the bucket's output.
 
     Returns {"processed": [...], "skipped": [...]} bucket ids.  Calling it
     again after an interruption resumes exactly where it stopped (the
@@ -117,26 +152,18 @@ def run_with_manifest(
     processed = []
     for b in pending:
         part = withb.where(F.col("_bucket") == b).drop("_bucket")
-        out = pipeline(part)
-        out_path = os.path.join(out_root, f"bucket={b}")
-        out.write.mode("overwrite").parquet(out_path)
-        stats = spark.read.parquet(out_path).agg(
+        # observed in the writing result stage: Spark applies each
+        # partition's metric update once, whatever the task retries
+        obs = Observation()
+        pipeline(part).observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(F.length(text_col)), F.lit(0)).alias("b"),
-        ).collect()[0]
-        row = [
-            (
-                b,
-                run_id,
-                int(stats.n),
-                int(stats.b),
-                "done",
-                len(files),
-                fdigest,
-            )
-        ]
-        spark.createDataFrame(row, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(_manifest_dir(out_root))
+        ).write.mode("overwrite").parquet(f"{out_root}/bucket={b}")
+        st = obs.get
+        row = [b, run_id, st["n"], st["b"], "done", len(files), fdigest]
+        _manifest_frame(spark, row).write.mode("append").parquet(
+            _manifest_dir(out_root)
+        )
         processed.append(b)
     return {"processed": processed, "skipped": sorted(done)}

@@ -23,33 +23,49 @@ def pages(spark):
     return synth_pages(docs)
 
 
+def _executions(spark):
+    """The SQL executions recorded by the session's status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def _extract(df):
+    return extract_main_text(df).select("url", "doc_id", "extracted_text")
+
+
 def test_manifest_resume(spark, pages, tmp_path):
+    # 24 docs over 8 buckets: bucket 5 gets none, so the empty-bucket
+    # counters (0 docs, 0 bytes) are exercised too
+    pages = pages.limit(24)
     out_root = str(tmp_path / "out")
-    # first run: only 2 of 4 buckets (simulated interruption)
+    # first run: only 2 of 8 buckets (simulated interruption)
     r1 = run_with_manifest(
-        spark, pages, out_root, n_buckets=4,
-        pipeline=lambda df: extract_main_text(df).select(
-            "url", "doc_id", "extracted_text"
-        ),
+        spark, pages, out_root, n_buckets=8, pipeline=_extract,
         run_id="r1", max_buckets_per_run=2,
     )
     assert r1["processed"] == [0, 1] and r1["skipped"] == []
-    assert sorted(completed_buckets(spark, out_root)) == [0, 1]
+    assert completed_buckets(spark, out_root) == [0, 1]
 
     # resume: anti-join leaves only the pending buckets
     r2 = run_with_manifest(
-        spark, pages, out_root, n_buckets=4,
-        pipeline=lambda df: extract_main_text(df).select(
-            "url", "doc_id", "extracted_text"
-        ),
-        run_id="r2",
+        spark, pages, out_root, n_buckets=8, pipeline=_extract, run_id="r2",
     )
-    assert r2["processed"] == [2, 3] and r2["skipped"] == [0, 1]
+    assert r2["processed"] == [2, 3, 4, 5, 6, 7] and r2["skipped"] == [0, 1]
 
-    # manifest metrics: doc counts per bucket sum to the corpus
+    # manifest metrics: per bucket, the observed counters equal the rows
+    # committed under bucket=<b>/, read back independently
     m = read_manifest(spark, out_root)
-    stats = m.agg(F.sum("doc_count"), F.sum("byte_count")).collect()[0]
-    assert stats[0] == 80 and stats[1] > 0
+    rows = m.collect()
+    assert sorted(r.bucket_id for r in rows) == list(range(8))
+    for r in rows:
+        got = spark.read.parquet(f"{out_root}/bucket={r.bucket_id}").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(F.length("extracted_text")), F.lit(0)).alias("b"),
+        ).collect()[0]
+        assert (r.doc_count, r.byte_count) == (got.n, got.b), r
+    assert sum(r.doc_count for r in rows) == 24
+    assert any(r.doc_count == 0 and r.byte_count == 0 for r in rows)
     # input lineage: every bucket of the same source records the same
     # backing-file digest (here: the documents parquet the pages derive
     # from), and the digest is a real md5 hex string
@@ -59,17 +75,72 @@ def test_manifest_resume(spark, pages, tmp_path):
     assert len(lin[0].input_files_digest) == 32
     # all output rows present exactly once
     got = spark.read.parquet(out_root + "/bucket=*")
-    assert got.count() == 80
-    assert got.select("doc_id").distinct().count() == 80
+    assert got.count() == 24
+    assert got.select("doc_id").distinct().count() == 24
 
     # idempotence: a third run does nothing
     r3 = run_with_manifest(
-        spark, pages, out_root, n_buckets=4,
-        pipeline=lambda df: extract_main_text(df).select(
-            "url", "doc_id", "extracted_text"
-        ),
+        spark, pages, out_root, n_buckets=8, pipeline=_extract,
     )
     assert r3["processed"] == []
+
+
+def test_manifest_job_budget(spark, pages, tmp_path):
+    """Committing a bucket runs one job for its output and one for its
+    manifest row; the resume listing runs one job, none on a fresh root.
+    No execution re-reads a committed bucket= directory (the counters
+    come from the write's observed metrics)."""
+    # a parquet input like job.py's: the fixture's limit() would add a
+    # shuffle stage (one more job) to every bucket write
+    src = str(tmp_path / "pages")
+    pages.write.parquet(src)
+    pages = spark.read.parquet(src)
+    sc = spark.sparkContext
+    out_root = str(tmp_path / "out")
+    since = max((e.executionId() for e in _executions(spark)), default=-1)
+    jobs = []
+    try:
+        for i in range(3):
+            group = f"manifest-budget-{i}"
+            sc.setJobGroup(group, group)
+            run_with_manifest(
+                spark, pages, out_root, n_buckets=2, pipeline=_extract,
+                max_buckets_per_run=1,
+            )
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # fresh root, root with a manifest, fully committed root
+    assert jobs[0] <= 2 and jobs[1] <= 3 and jobs[2] <= 1, jobs
+    assert completed_buckets(spark, out_root) == [0, 1]
+
+    rereads = [
+        line
+        for e in _executions(spark) if e.executionId() > since
+        for line in e.physicalPlanDescription().splitlines()
+        if "Location:" in line and "bucket=" in line
+    ]
+    assert rereads == []
+
+
+def test_unreadable_manifest_raises(spark, tmp_path):
+    """Only a missing _manifest means "nothing done": a store that cannot
+    be read must fail the resume, not redo and double-count every
+    bucket."""
+    missing = str(tmp_path / "none")
+    assert completed_buckets(spark, missing) == []
+    empty = read_manifest(spark, missing)
+    assert empty.collect() == []
+    assert empty.dtypes == [
+        ("bucket_id", "int"), ("run_id", "string"), ("doc_count", "bigint"),
+        ("byte_count", "bigint"), ("status", "string"),
+        ("n_input_files", "bigint"), ("input_files_digest", "string"),
+    ]
+    with pytest.raises(Exception, match="nofs"):
+        completed_buckets(spark, "nofs://x/out")
+    with pytest.raises(Exception, match="nofs"):
+        read_manifest(spark, "nofs://x/out")
 
 
 def test_streaming_extraction(spark, pages, tmp_path):
@@ -269,13 +340,7 @@ def test_curate_corpus_funnel(spark, tmp_path):
         rows, "url string, warc_ts string, extracted_text string"
     ).withColumn("warc_ts", F.to_timestamp("warc_ts")).write.parquet(path)
 
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        execs = store.executionsList()
-        return [execs.apply(i) for i in range(execs.size())]
-
-    since = max((e.executionId() for e in executions()), default=-1)
+    since = max((e.executionId() for e in _executions(spark)), default=-1)
     ann = curate_corpus(
         spark.read.parquet(path), minhash_threshold=0.5, min_tokens=5
     )
@@ -326,7 +391,7 @@ def test_curate_corpus_funnel(spark, tmp_path):
 
     scans = sum(
         1
-        for e in executions() if e.executionId() > since
+        for e in _executions(spark) if e.executionId() > since
         for line in e.physicalPlanDescription().splitlines()
         if "Location:" in line and path in line
     )
