@@ -19,8 +19,9 @@ the engine provides plain-DataFrame bookkeeping:
 * a resumed run anti-joins the bucket list against the manifest and only
   processes pending buckets.
 
-Spark jobs per call: the resume listing runs none when ``_manifest`` does
-not exist (a Hadoop ``FileSystem.exists`` check) and one collect otherwise.
+Spark jobs per call: the resume listing runs none when ``_manifest`` holds
+no parquet file (a Hadoop ``FileSystem.globStatus`` check) and one collect
+otherwise.
 Each pending bucket runs one job that writes its output (plus one per
 shuffle stage of the pipeline, e.g. a salted repartition) and one that
 appends its manifest row, built in the JVM from literals.  ``doc_count``
@@ -66,11 +67,20 @@ def _manifest_dir(root: str) -> str:
     return os.path.join(root, "_manifest")
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    """``path`` exists on the Hadoop ``FileSystem`` of its scheme (local,
-    HDFS, S3, ...); a scheme with no ``FileSystem`` raises."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+def _manifest_files(root: str) -> str:
+    """The glob of the committed manifest files.  Spark reads a root
+    named ``_manifest`` but warns that it ignored it as a hidden path;
+    the file names under it are not hidden."""
+    return os.path.join(_manifest_dir(root), "*.parquet")
+
+
+def _exists(spark: SparkSession, pattern: str) -> bool:
+    """Some path matches the glob ``pattern`` on the Hadoop ``FileSystem``
+    of its scheme (local, HDFS, S3, ...); a scheme with no ``FileSystem``
+    raises."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(pattern)
+    found = p.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(p)
+    return found is not None and len(found) > 0
 
 
 def _manifest_frame(spark: SparkSession, values: Optional[list] = None):
@@ -85,21 +95,23 @@ def _manifest_frame(spark: SparkSession, values: Optional[list] = None):
 
 def read_manifest(spark: SparkSession, root: str) -> DataFrame:
     """The committed manifest rows; an empty frame only when ``_manifest``
-    does not exist.  Any other failure (listing, permissions, unknown
-    scheme) raises, so a resume never mistakes it for "nothing done"."""
-    path = _manifest_dir(root)
-    if not _exists(spark, path):
+    does not exist or holds no parquet file.  Any other failure (listing,
+    permissions, unknown scheme) raises, so a resume never mistakes it
+    for "nothing done"."""
+    files = _manifest_files(root)
+    if not _exists(spark, files):
         return _manifest_frame(spark)
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(files)
 
 
 def completed_buckets(spark: SparkSession, root: str) -> List[int]:
-    """Sorted ids of the committed buckets: no job when ``_manifest`` does
-    not exist, else one collect (deduplicated here, not by a shuffle)."""
-    path = _manifest_dir(root)
-    if not _exists(spark, path):
+    """Sorted ids of the committed buckets: no job when ``_manifest`` has
+    no parquet file, else one collect (deduplicated here, not by a
+    shuffle)."""
+    files = _manifest_files(root)
+    if not _exists(spark, files):
         return []
-    m = spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    m = spark.read.schema(MANIFEST_SCHEMA).parquet(files)
     rows = m.where(F.col("status") == "done").select("bucket_id").collect()
     return sorted({r.bucket_id for r in rows})
 

@@ -4,6 +4,7 @@ Streaming extraction variant."""
 import os
 import shutil
 import tempfile
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,6 +59,13 @@ def test_manifest_resume(spark, pages, tmp_path):
     m = read_manifest(spark, out_root)
     rows = m.collect()
     assert sorted(r.bucket_id for r in rows) == list(range(8))
+    # the read covers exactly the committed manifest files, one a bucket
+    man = os.path.join(out_root, "_manifest")
+    committed = {
+        os.path.join(man, f) for f in os.listdir(man) if f.endswith(".parquet")
+    }
+    assert len(committed) == 8
+    assert {urlparse(f).path for f in m.inputFiles()} == committed
     for r in rows:
         got = spark.read.parquet(f"{out_root}/bucket={r.bucket_id}").agg(
             F.count(F.lit(1)).alias("n"),
@@ -125,18 +133,20 @@ def test_manifest_job_budget(spark, pages, tmp_path):
 
 
 def test_unreadable_manifest_raises(spark, tmp_path):
-    """Only a missing _manifest means "nothing done": a store that cannot
-    be read must fail the resume, not redo and double-count every
-    bucket."""
-    missing = str(tmp_path / "none")
-    assert completed_buckets(spark, missing) == []
-    empty = read_manifest(spark, missing)
-    assert empty.collect() == []
-    assert empty.dtypes == [
-        ("bucket_id", "int"), ("run_id", "string"), ("doc_count", "bigint"),
-        ("byte_count", "bigint"), ("status", "string"),
-        ("n_input_files", "bigint"), ("input_files_digest", "string"),
-    ]
+    """Only a missing _manifest, or one with no manifest file, means
+    "nothing done": a store that cannot be read must fail the resume, not
+    redo and double-count every bucket."""
+    (tmp_path / "bare" / "_manifest").mkdir(parents=True)
+    for root in (tmp_path / "none", tmp_path / "bare"):
+        assert completed_buckets(spark, str(root)) == []
+        empty = read_manifest(spark, str(root))
+        assert empty.collect() == []
+        assert empty.dtypes == [
+            ("bucket_id", "int"), ("run_id", "string"),
+            ("doc_count", "bigint"), ("byte_count", "bigint"),
+            ("status", "string"), ("n_input_files", "bigint"),
+            ("input_files_digest", "string"),
+        ]
     with pytest.raises(Exception, match="nofs"):
         completed_buckets(spark, "nofs://x/out")
     with pytest.raises(Exception, match="nofs"):
