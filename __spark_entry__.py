@@ -566,13 +566,11 @@ FROM g
 
 
 def q_detect_lines(spark, sf: str) -> DataFrame:
-    """§2.5 simple_line_detection at scale: the pure-relational CCA
-    (banded candidate equi-join + min-label propagation with pointer
-    doubling, operators/grouping.py) over constructed word boxes; the
+    """§2.5 simple_line_detection over constructed word boxes: the
+    per-document CCA kernel shared with ``gcca_apply``, with candidate
+    pairs from a sweep over sorted y-centres (operators/grouping.py); the
     oracle is a DuckDB recursive-CTE transitive closure."""
-    from layout_parser_spark.operators.grouping import (
-        detect_lines_distributed,
-    )
+    from layout_parser_spark.operators.grouping import detect_lines
 
     ev = _t(spark, sf, "events").where(
         F.pmod(F.col("event_id"), F.lit(5)) == 0
@@ -585,7 +583,7 @@ def q_detect_lines(spark, sf: str) -> DataFrame:
         (F.pmod(F.col("value") * 7.0, F.lit(400.0)) + 18.0).alias("x_2"),
         (F.pmod(F.col("event_id"), F.lit(6)) * 25.0 + 10.0).alias("y_2"),
     )
-    out = detect_lines_distributed(
+    out = detect_lines(
         boxes, ["user_id"], id_col="block_id", x_tolerance=10, y_tolerance=10
     )
     return out.select(

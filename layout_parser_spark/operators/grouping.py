@@ -3,12 +3,14 @@
 
 The reference's generalized 1-D connected-component analysis builds an
 O(n²) pairwise score matrix and runs scipy ``connected_components``
-(shape_operations.py:25-77).  ``gcca_apply`` runs the SAME per-document
-algorithm inside one ``mapInPandas`` kernel per key-hashed partition — a
-graph op over ≤10³ blocks/doc is exactly the right granularity for a
-Python island, and it is embarrassingly parallel across documents.  Line
-detection, whose documents can outgrow that granularity, is relational
-instead (``detect_lines_distributed``).  scipy is not a dependency: an
+(shape_operations.py:25-77).  ``gcca_apply`` and ``detect_lines`` run the
+SAME per-document algorithm inside one ``mapInPandas`` kernel per
+key-hashed partition — a graph op over one page is exactly the right
+granularity for a Python island, and it is embarrassingly parallel
+across documents.  Line detection stays near-linear on dense pages: its
+candidate pairs come from a sweep over sorted y-centres that stops at
+the edge of the y-tolerance band, so a page of n boxes costs
+O(n log n + pairs in the band), not O(n²).  scipy is not a dependency: an
 equivalent union-find produces identical components; component ORDER is
 pinned to scipy's label order (first-appearance = ascending minimum member
 index) and element order within a component is original sequence order.
@@ -21,21 +23,23 @@ swap is invisible; we pass it through verbatim for parity (compat flag).
 
 from __future__ import annotations
 
-from typing import Callable, List, Optional, Sequence
+from typing import Callable, Iterable, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .webgraph import connected_components
-
 
 def connected_components_1d(
-    n: int, edge_fn: Callable[[int, int], bool]
+    n: int,
+    edge_fn: Callable[[int, int], bool],
+    pairs: Optional[Iterable[Tuple[int, int]]] = None,
 ) -> List[List[int]]:
-    """Union-find over the upper-triangle pairwise edges; returns components
-    ordered by first appearance (ascending min index), members in original
-    order — scipy-label-order compatible (shape_operations.py:63-77)."""
+    """Union-find over the candidate ``pairs`` for which ``edge_fn`` holds
+    (default: every ``i < j`` pair, the reference's upper-triangle score
+    matrix); returns components ordered by first appearance (ascending
+    min index), members in original order — scipy-label-order compatible
+    (shape_operations.py:63-77)."""
     parent = list(range(n))
 
     def find(i):
@@ -44,12 +48,13 @@ def connected_components_1d(
             i = parent[i]
         return i
 
-    for i in range(n):
-        for j in range(i + 1, n):
-            if edge_fn(i, j):
-                ri, rj = find(i), find(j)
-                if ri != rj:
-                    parent[max(ri, rj)] = min(ri, rj)
+    if pairs is None:
+        pairs = ((i, j) for i in range(n) for j in range(i + 1, n))
+    for i, j in pairs:
+        if edge_fn(i, j):
+            ri, rj = find(i), find(j)
+            if ri != rj:
+                parent[max(ri, rj)] = min(ri, rj)
 
     comps = {}
     for i in range(n):
@@ -64,8 +69,8 @@ def gcca_1d(
     default_score_value: int = 0,
 ) -> list:
     """``generalized_connected_component_analysis_1d``
-    (shape_operations.py:25-77) — local list form, used inside the
-    applyInPandas kernels and directly by tests."""
+    (shape_operations.py:25-77) — local list form, used directly by
+    tests as the reference for the distributed kernels."""
     if aggregation_func is None:
         aggregation_func = lambda x: x  # noqa: E731 — identity, as reference
     comps = connected_components_1d(
@@ -86,13 +91,10 @@ def _union_boxes(boxes):
     return (x1, y1, x2, y2)
 
 
-def detect_lines_local(
-    boxes: List[tuple], x_tolerance: float = 10, y_tolerance: float = 10
-) -> List[tuple]:
-    """``simple_line_detection`` (shape_operations.py:80-134) over rectangle
-    coord tuples: same component iff |yc_a − yc_b| ≤ y_tol AND the
-    horizontal gap min(|left_a − right_b|, |right_a − left_b|) ≤ x_tol
-    (:110-124); aggregation = union-reduce (:131).
+def _line_close(x_tolerance: float, y_tolerance: float) -> Callable:
+    """``simple_line_detection``'s edge test (shape_operations.py:110-124)
+    over rectangle coord tuples: |yc_a − yc_b| ≤ y_tol AND the horizontal
+    gap min(|left_a − right_b|, |right_a − left_b|) ≤ x_tol.
 
     The reference call site swaps the tolerances (:126-130); replicated:
     the effective y tolerance is ``x_tolerance`` and vice versa."""
@@ -106,58 +108,89 @@ def detect_lines_local(
             and min(abs(a[0] - b[2]), abs(a[2] - b[0])) <= eff_x_tol
         )
 
-    return gcca_1d(boxes, close, _union_boxes)
+    return close
 
 
-def gcca_apply(
+def detect_lines_local(
+    boxes: List[tuple], x_tolerance: float = 10, y_tolerance: float = 10
+) -> List[tuple]:
+    """``simple_line_detection`` (shape_operations.py:80-134) in its plain
+    form: every pair scored, aggregation = union-reduce (:131).  The
+    reference that ``detect_lines`` is tested against."""
+    return gcca_1d(boxes, _line_close(x_tolerance, y_tolerance), _union_boxes)
+
+
+def _line_components(
+    boxes: List[tuple], x_tolerance: float, y_tolerance: float
+) -> List[List[int]]:
+    """``detect_lines_local``'s components, scoring only the pairs whose
+    y-centres lie within the effective y tolerance (``x_tolerance``, the
+    swap): a sweep over the sorted centres stops each scan at the first
+    box past the band, so a page costs O(n log n + pairs in the band).
+    No pair outside the band can pass ``_line_close``'s y test, so the
+    components are those of all pairs."""
+    close = _line_close(x_tolerance, y_tolerance)
+    eff_y_tol = x_tolerance  # the documented swap
+    yc = [(b[1] + b[3]) / 2.0 for b in boxes]
+    # a NaN centre passes no y test, and it would break the sort order
+    order = sorted(
+        (i for i in range(len(boxes)) if yc[i] == yc[i]), key=yc.__getitem__
+    )
+
+    def band_pairs():
+        for p, i in enumerate(order):
+            for q in range(p + 1, len(order)):
+                j = order[q]
+                if yc[j] - yc[i] > eff_y_tol:
+                    break
+                yield i, j
+
+    return connected_components_1d(
+        len(boxes), lambda i, j: close(boxes[i], boxes[j]), band_pairs()
+    )
+
+
+def _per_document_cca(
     df: DataFrame,
     key_cols: List[str],
-    scoring_func: Callable,
-    id_col: str = "block_id",
-    default_score_value: int = 0,
-    x1="x_1", y1="y_1", x2="x_2", y2="y_2",
+    id_col: str,
+    components: Callable[[List[tuple]], List[List[int]]],
+    comp_col: str,
+    count_col: str,
+    x1: str, y1: str, x2: str, y2: str,
 ) -> DataFrame:
-    """Distributed ``generalized_connected_component_analysis_1d``
-    (reference shape_operations.py:25-77) with an ARBITRARY Python
-    scoring function — the generic slot.  ``detect_lines_local`` is
-    ``gcca_1d`` with the line-detection scoring fixed, and
-    ``detect_lines_distributed`` is that scoring in relational form.
-    ``gcca_1d``'s union-find runs over (x_1, y_1, x_2, y_2) tuples per
-    document; embarrassingly parallel across documents.
+    """The kernel frame of ``gcca_apply`` and ``detect_lines``:
+    repartition by key, then ONE ``mapInPandas`` kernel per partition
+    with a pandas groupby inside — not per-group ``applyInPandas``, whose
+    per-group Arrow framing dominates when documents are small (measured
+    ~2× on 1 500 ≈10-row groups).  Memory note: the kernel concatenates
+    its whole partition into one frame, so partitions must fit executor
+    memory — which key-hash repartitioning of bounded-size documents
+    guarantees.
 
-    Shape: repartition by key, then ONE ``mapInPandas`` kernel per
-    partition with a pandas groupby inside — not per-group
-    ``applyInPandas``, whose per-group Arrow framing dominates when
-    documents are small (measured ~2× on 1 500 ≈10-row groups).  Memory
-    note: the kernel concatenates its whole partition into one frame,
-    so partitions must fit executor memory — which key-hash
-    repartitioning of bounded-size documents guarantees.
+    ``components`` maps one document's (x_1, y_1, x_2, y_2) tuples, in
+    ascending ``id_col`` order (hence the reference's first-appearance
+    component order), to its components as index lists.  Aggregation =
+    union-reduce (min/max corners) + member count.
 
-    Sequence order (hence the reference's first-appearance component
-    order) is ascending ``id_col``.  Aggregation = union-reduce
-    (min/max corners) + member count.
-
-    Output: key_cols + (comp_id, x_1, y_1, x_2, y_2, n_blocks)."""
+    Output: key_cols + (comp_col, x_1, y_1, x_2, y_2, count_col)."""
     # plan-build-time validation (a missing key_cols name would silently
     # drop from the schema string and fail as an opaque Arrow mismatch)
     fields = {f.name: f for f in df.schema}
     missing = [c for c in key_cols if c not in fields]
     if missing:
         raise ValueError(
-            f"gcca_apply: key_cols {missing} not in input schema "
-            f"(have: {sorted(fields)})"
+            f"key_cols {missing} not in input schema (have: {sorted(fields)})"
         )
     ktypes = ", ".join(
         f"{c} {fields[c].dataType.simpleString()}" for c in key_cols
     )
     schema = (
-        f"{ktypes}, comp_id int, x_1 double, y_1 double, "
-        "x_2 double, y_2 double, n_blocks int"
+        f"{ktypes}, {comp_col} int, x_1 double, y_1 double, "
+        f"x_2 double, y_2 double, {count_col} int"
     )
-    out_cols = [
-        *key_cols, "comp_id", "x_1", "y_1", "x_2", "y_2", "n_blocks",
-    ]
     keys = list(key_cols)
+    out_cols = [*keys, comp_col, "x_1", "y_1", "x_2", "y_2", count_col]
 
     def gen(batches):
         chunks = [c for c in batches if len(c)]
@@ -170,12 +203,7 @@ def gcca_apply(
                 kv = (kv,)
             g = g.sort_values(id_col)
             boxes = list(zip(g[x1], g[y1], g[x2], g[y2]))
-            comps = connected_components_1d(
-                len(boxes),
-                lambda i, j: scoring_func(boxes[i], boxes[j])
-                != default_score_value,
-            )
-            for ci, comp in enumerate(comps):
+            for ci, comp in enumerate(components(boxes)):
                 u = _union_boxes([boxes[i] for i in comp])
                 out.append((*kv, ci, *u, len(comp)))
         yield pd.DataFrame(out, columns=out_cols)
@@ -184,6 +212,57 @@ def gcca_apply(
         *keys, id_col, x1, y1, x2, y2
     ).repartition(*[F.col(c) for c in keys])
     return parted.mapInPandas(gen, schema=schema)
+
+
+def gcca_apply(
+    df: DataFrame,
+    key_cols: List[str],
+    scoring_func: Callable,
+    id_col: str = "block_id",
+    default_score_value: int = 0,
+    x1="x_1", y1="y_1", x2="x_2", y2="y_2",
+) -> DataFrame:
+    """Distributed ``generalized_connected_component_analysis_1d``
+    (reference shape_operations.py:25-77) with an ARBITRARY Python
+    scoring function — the generic slot: ``gcca_1d``'s union-find over
+    every pair of a document's (x_1, y_1, x_2, y_2) tuples, run in the
+    per-document kernel shared with ``detect_lines``.
+
+    Output: key_cols + (comp_id, x_1, y_1, x_2, y_2, n_blocks)."""
+
+    def components(boxes):
+        return connected_components_1d(
+            len(boxes),
+            lambda i, j: scoring_func(boxes[i], boxes[j])
+            != default_score_value,
+        )
+
+    return _per_document_cca(
+        df, key_cols, id_col, components, "comp_id", "n_blocks",
+        x1, y1, x2, y2,
+    )
+
+
+def detect_lines(
+    df: DataFrame,
+    key_cols: List[str],
+    id_col: str = "block_id",
+    x_tolerance: float = 10,
+    y_tolerance: float = 10,
+    x1="x_1", y1="y_1", x2="x_2", y2="y_2",
+) -> DataFrame:
+    """``simple_line_detection`` (shape_operations.py:80-134) per
+    document, tolerance swap included, in the kernel shared with
+    ``gcca_apply``; the candidate pairs come from the y-centre sweep, so
+    a dense page stays near-linear.  Per document it equals
+    ``detect_lines_local`` (lines in the same order).
+
+    Output: key_cols + (line_id, x_1, y_1, x_2, y_2, n_tokens)."""
+    return _per_document_cca(
+        df, key_cols, id_col,
+        lambda boxes: _line_components(boxes, x_tolerance, y_tolerance),
+        "line_id", "n_tokens", x1, y1, x2, y2,
+    )
 
 
 def group_blocks_by_category(
@@ -210,105 +289,6 @@ def group_blocks_by_category(
     w = Window.partitionBy(*key_cols).orderBy("_first_pos")
     return agg.withColumn("group_order", F.row_number().over(w) - 1).drop(
         "_first_pos"
-    )
-
-
-def detect_lines_distributed(
-    df: DataFrame,
-    key_cols: List[str],
-    id_col: str = "block_id",
-    x_tolerance: float = 10,
-    y_tolerance: float = 10,
-    max_iter: int = 20,
-    x1="x_1", y1="y_1", x2="x_2", y2="y_2",
-) -> DataFrame:
-    """Line detection for documents whose block count EXPLODES past the
-    per-document-Python granularity (the SURVEY §2.5 scale variant):
-    pure-relational connected components, never materializing the O(n²)
-    score matrix.
-
-    * candidate edges by y-banding: each block lands in grid bands
-      ``floor(yc/eff_y_tol)`` and that+1, so any pair within the center-y
-      tolerance shares a band — an equi-join on (doc, band), with the
-      exact predicate (including the reference's tolerance SWAP,
-      shape_operations.py:126-130) as the join filter;
-    * components by ``webgraph.connected_components`` keyed by
-      ``key_cols``; a block with no edge is its own component;
-    * aggregate per component = union-reduce (min/max corners) + count,
-      line_id = rank of the component's first block id per document.
-
-    Output: key_cols + (line_id, x_1, y_1, x_2, y_2, n_tokens) — the
-    ``detect_lines`` contract query, certified by its DuckDB oracle; per
-    document it equals ``detect_lines_local`` (lines in the same order),
-    pinned by tests/test_dedup_similarity.py::
-    test_detect_lines_distributed_equals_local."""
-    eff_y_tol, eff_x_tol = x_tolerance, y_tolerance  # reference swap
-
-    base = df.select(
-        *key_cols,
-        F.col(id_col).alias("bid"),
-        F.col(x1).alias("bx1"),
-        F.col(y1).alias("by1"),
-        F.col(x2).alias("bx2"),
-        F.col(y2).alias("by2"),
-        ((F.col(y1) + F.col(y2)) / 2.0).alias("yc"),
-    )
-    band = F.floor(F.col("yc") / F.lit(float(eff_y_tol))).cast("long")
-    banded = base.select(
-        *key_cols, "bid", "bx1", "by1", "bx2", "by2", "yc",
-        F.explode(F.array(band, band + 1)).alias("_band"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    join_cond = (F.col("a._band") == F.col("b._band")) & (
-        F.col("a.bid") < F.col("b.bid")
-    )
-    for c in key_cols:
-        join_cond = join_cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    close = (
-        (F.abs(F.col("a.yc") - F.col("b.yc")) <= F.lit(float(eff_y_tol)))
-        & (
-            F.least(
-                F.abs(F.col("a.bx1") - F.col("b.bx2")),
-                F.abs(F.col("a.bx2") - F.col("b.bx1")),
-            )
-            <= F.lit(float(eff_x_tol))
-        )
-    )
-    edges = (
-        a.hint("MERGE")
-        .join(b.hint("MERGE"), join_cond)
-        .where(close)
-        .select(
-            *[F.col(f"a.{c}") for c in key_cols],
-            F.col("a.bid").alias("u"),
-            F.col("b.bid").alias("v"),
-        )
-    )
-
-    labels = connected_components(
-        edges, max_iter=max_iter, key_cols=key_cols
-    ).withColumnRenamed("id", "bid")
-    # blocks with no edge are their own line
-    joined = base.join(labels, on=key_cols + ["bid"], how="left").withColumn(
-        "lbl", F.coalesce(F.col("lbl"), F.col("bid"))
-    )
-    comp = joined.groupBy(*key_cols, "lbl").agg(
-        F.min("bx1").alias("x_1"),
-        F.min("by1").alias("y_1"),
-        F.max("bx2").alias("x_2"),
-        F.max("by2").alias("y_2"),
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.min("bid").alias("_first"),
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*key_cols).orderBy("_first")
-    return (
-        comp.withColumn("line_id", F.row_number().over(w) - 1)
-        .select(
-            *key_cols, "line_id", "x_1", "y_1", "x_2", "y_2",
-            F.col("n_tokens").cast("int").alias("n_tokens"),
-        )
     )
 
 

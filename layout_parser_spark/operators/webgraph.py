@@ -30,8 +30,6 @@ is bounded by n_edges / UNIT per iteration (≪ 1e-6 here).
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -238,15 +236,13 @@ def url_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _jump(labels: DataFrame, keys: list) -> DataFrame:
+def _jump(labels: DataFrame) -> DataFrame:
     """One pointer-jumping pass, ``lbl := lbl(lbl)``, with ``_moved``
     marking the nodes whose label changed.  Every label is itself a node
     of ``labels``, so the inner join keeps every row."""
-    ptr = labels.select(
-        *keys, F.col("id").alias("lbl"), F.col("lbl").alias("_l2")
-    )
-    return labels.join(ptr, on=keys + ["lbl"]).select(
-        *keys, "id", F.col("_l2").alias("lbl"),
+    ptr = labels.select(F.col("id").alias("lbl"), F.col("lbl").alias("_l2"))
+    return labels.join(ptr, on=["lbl"]).select(
+        "id", F.col("_l2").alias("lbl"),
         (F.col("_l2") != F.col("lbl")).alias("_moved"),
     )
 
@@ -256,13 +252,10 @@ def connected_components(
     u: str = "u",
     v: str = "v",
     max_iter: int = 25,
-    key_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Undirected connected components over an edge list →
-    ``key_cols + (id, lbl)``, where ``lbl`` is the minimum node id of the
-    component.  Each ``key_cols`` value is its own graph: the same id
-    under two key values stays in two components.  Self-loops are
-    dropped, and nodes that appear in no other edge are not in the
+    """Undirected connected components over an edge list → ``(id, lbl)``,
+    where ``lbl`` is the minimum node id of the component.  Self-loops
+    are dropped, and nodes that appear in no other edge are not in the
     output.
 
     Min-label propagation over contracted edges.  Each round every edge
@@ -278,10 +271,8 @@ def connected_components(
 
     Raises ``RuntimeError`` when ``max_iter`` rounds, or ``max_iter``
     jumping passes, end before the labels reach a fixpoint."""
-    keys = list(key_cols)
     cur = (
         edges.select(
-            *keys,
             F.least(u, v).alias("u"),
             F.greatest(u, v).alias("v"),
         )
@@ -292,30 +283,23 @@ def connected_components(
     labels = None
     for _ in range(max_iter):
         nbr = cur.select(
-            *keys, F.col("u").alias("id"), F.col("v").alias("lbl")
+            F.col("u").alias("id"), F.col("v").alias("lbl")
         ).unionByName(
-            cur.select(
-                *keys, F.col("v").alias("id"), F.col("u").alias("lbl")
-            )
+            cur.select(F.col("v").alias("id"), F.col("u").alias("lbl"))
         )
         if labels is not None:
-            nbr = nbr.unionByName(labels.select(*keys, "id", "lbl"))
-        hop = nbr.groupBy(*keys, "id").agg(
+            nbr = nbr.unionByName(labels.select("id", "lbl"))
+        hop = nbr.groupBy("id").agg(
             F.least(F.col("id"), F.min("lbl")).alias("lbl")
         )
-        labels = _jump(hop, keys).localCheckpoint(eager=False)
-        lu = labels.select(
-            *keys, F.col("id").alias("u"), F.col("lbl").alias("lu")
-        )
-        lv = labels.select(
-            *keys, F.col("id").alias("v"), F.col("lbl").alias("lv")
-        )
+        labels = _jump(hop).localCheckpoint(eager=False)
+        lu = labels.select(F.col("id").alias("u"), F.col("lbl").alias("lu"))
+        lv = labels.select(F.col("id").alias("v"), F.col("lbl").alias("lv"))
         cur = (
-            cur.join(lu, on=keys + ["u"])
-            .join(lv, on=keys + ["v"])
+            cur.join(lu, on=["u"])
+            .join(lv, on=["v"])
             .where(F.col("lu") != F.col("lv"))
             .select(
-                *keys,
                 F.least("lu", "lv").alias("u"),
                 F.greatest("lu", "lv").alias("v"),
             )
@@ -333,9 +317,7 @@ def connected_components(
     for _ in range(max_iter):
         if labels.where("_moved").isEmpty():
             return labels.drop("_moved")
-        labels = _jump(labels.drop("_moved"), keys).localCheckpoint(
-            eager=False
-        )
+        labels = _jump(labels.drop("_moved")).localCheckpoint(eager=False)
     raise RuntimeError(
         f"connected_components: labels still moving after max_iter={max_iter}"
         " jumps"

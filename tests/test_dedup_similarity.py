@@ -24,6 +24,10 @@ from layout_parser_spark.operators.dedup import (
     simhash_from_text_vectorized,
 )
 from layout_parser_spark.operators.grouping import (
+    _line_close,
+    _line_components,
+    connected_components_1d,
+    detect_lines,
     detect_lines_local,
     gcca_1d,
 )
@@ -212,6 +216,49 @@ def test_line_detection_counts_multirow():
     assert lines[1] == (0.0, 30.0, 95.0, 40.0)
 
 
+#: (x_tolerance, y_tolerance) pairs for the line tests; the asymmetric
+#: ones exercise the reference's tolerance swap
+LINE_TOLS = [(10, 10), (5, 5), (2.5, 10), (10, 2.5)]
+
+
+def _seeded_pages(count, seed=20261018):
+    """Random pages of 0-60 boxes on a 2.5-unit grid, so centre gaps land
+    exactly on every tolerance in LINE_TOLS; 17 row offsets, so centres
+    tie; one box in five has zero width."""
+    rng = random.Random(seed)
+    pages = []
+    for _ in range(count):
+        page = []
+        for _ in range(rng.randint(0, 60)):
+            x = rng.randint(0, 40) * 2.5
+            y = rng.randint(0, 16) * 2.5
+            w = 0.0 if rng.random() < 0.2 else rng.randint(1, 8) * 2.5
+            page.append((x, y, x + w, y + rng.randint(0, 4) * 2.5))
+        pages.append(page)
+    return pages
+
+
+def test_line_sweep_equals_all_pairs():
+    """The y-centre sweep's candidate pairs give the components of all
+    pairs (the reference's full score matrix) on 400 seeded pages, each
+    also with a NaN-centre box (a NULL coordinate reaches the kernel as
+    NaN) inserted at a seeded position."""
+    rng = random.Random(3)
+    for page in _seeded_pages(400):
+        with_nan = list(page)
+        with_nan.insert(
+            rng.randint(0, len(page)), (0.0, float("nan"), 5.0, 5.0)
+        )
+        for boxes in (page, with_nan):
+            for xt, yt in LINE_TOLS:
+                close = _line_close(xt, yt)
+                want = connected_components_1d(
+                    len(boxes), lambda i, j: close(boxes[i], boxes[j])
+                )
+                got = _line_components(boxes, xt, yt)
+                assert got == want, (boxes, xt, yt)
+
+
 def test_gcca_apply_matches_local_kernel(spark):
     """The distributed generic-scoring slot (gcca_apply) equals the
     reference-form local gcca_1d run per document, for an asymmetric
@@ -342,52 +389,57 @@ def test_embedding_null_vectors_filtered_before_grouping(spark):
         assert "isnotnull(embedding#" in plan, kw
 
 
-def test_detect_lines_distributed_equals_local(spark):
-    """The pure-relational CCA (banded candidate join + min-label
-    propagation) must produce exactly ``detect_lines_local``'s lines per
-    document — same boxes, counts, AND line_id order."""
-    from layout_parser_spark.operators.grouping import (
-        detect_lines_distributed,
-        detect_lines_local,
-    )
-
-    # deterministic corpus: several docs, multi-row word grids with
-    # varying gaps (some above tolerance), plus chained overlaps that make
-    # label propagation actually iterate
-    rows = []
+def test_detect_lines_equals_local(spark):
+    """``detect_lines`` (the per-document kernel, candidate pairs from
+    the y-centre sweep) gives ``detect_lines_local``'s lines per
+    document: same boxes, token counts and line_id order.  Documents:
+    word grids with gaps around the tolerance and a 60-token chain,
+    seeded random pages (centre gaps exactly on the tolerance, tied
+    centres, zero-width boxes) and one dense page of 3 200 boxes."""
+    pages = []
     for doc in range(6):
-        boxes = []
+        page = []
         for r in range(4):
             for i in range(20):
                 x = i * (12.0 + (r % 3))  # gap 12/13/14 vs eff_x_tol=10
                 y = r * 30.0 + doc
-                boxes.append((x, y, x + 10.0, y + 10.0))
+                page.append((x, y, x + 10.0, y + 10.0))
         # a long chain on one line: 60 adjacent tokens
         for i in range(60):
-            boxes.append((i * 15.0, 200.0 + doc, i * 15.0 + 10.0, 210.0 + doc))
-        rows.extend(
-            (doc, bid, *b) for bid, b in enumerate(boxes)
-        )
-    df = spark.createDataFrame(
-        rows, "doc_id long, block_id long, x_1 double, y_1 double, "
-              "x_2 double, y_2 double"
-    )
-    got = detect_lines_distributed(
-        df, ["doc_id"], id_col="block_id", x_tolerance=10, y_tolerance=10
-    ).collect()
-
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r[0], []).append(tuple(r[2:]))
-    expected = {}
-    for doc, boxes in by_doc.items():
-        for li, u in enumerate(detect_lines_local(boxes, 10, 10)):
-            expected[(doc, li)] = u
-    got_map = {(r.doc_id, r.line_id): (r.x_1, r.y_1, r.x_2, r.y_2) for r in got}
-    assert got_map == expected
-    # token counts: chain line has 60
-    counts = {(r.doc_id, r.line_id): r.n_tokens for r in got}
-    assert max(counts.values()) == 60
+            page.append((i * 15.0, 200.0 + doc, i * 15.0 + 10.0, 210.0 + doc))
+        pages.append(page)
+    pages += _seeded_pages(60, seed=7)
+    rng = random.Random(11)
+    # 50 rows 15 apart with centre jitter of 0/2.5/5: some rows land
+    # exactly 10 apart and merge
+    dense = [
+        (i * 12.0, y, i * 12.0 + 10.0, y + 10.0)
+        for y in (r * 15.0 + rng.choice((0.0, 2.5, 5.0)) for r in range(50))
+        for i in range(64)
+    ]
+    # the reference scores every pair: the dense page runs once
+    for docs, xt, yt in [(pages + [dense], 10, 10), (pages, 2.5, 10)]:
+        df = spark.createDataFrame(
+            [(doc, bid, *b) for doc, page in enumerate(docs)
+             for bid, b in enumerate(page)],
+            "doc_id long, block_id long, x_1 double, y_1 double, "
+            "x_2 double, y_2 double",
+        ).repartition(3)
+        got = {}
+        for r in detect_lines(
+            df, ["doc_id"], id_col="block_id", x_tolerance=xt, y_tolerance=yt
+        ).collect():
+            got.setdefault(r.doc_id, []).append(
+                (r.line_id, r.x_1, r.y_1, r.x_2, r.y_2, r.n_tokens)
+            )
+        for doc, page in enumerate(docs):
+            counts = gcca_1d(page, _line_close(xt, yt), len)
+            want = [
+                (li, *u, n) for li, (u, n) in enumerate(
+                    zip(detect_lines_local(page, xt, yt), counts)
+                )
+            ]
+            assert sorted(got.get(doc, [])) == want, (doc, xt, yt)
 
 
 def test_kmeans_centroids_deterministic_and_improving(spark):

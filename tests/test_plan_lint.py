@@ -9,6 +9,8 @@ Planning only — nothing executes."""
 
 import os
 
+import pytest
+
 import __spark_entry__ as entry
 from bench import PLAN_SHAPE_PATTERNS, plan_shape_counts
 
@@ -112,6 +114,31 @@ def test_plan_shapes_match_committed_audit(spark):
         f"plan shapes drifted from BENCH/PLANS_AUTO.md: {drift} — if "
         "intentional, regenerate with `python bench.py --plans`"
     )
+
+
+#: Spark jobs a query may run while its DataFrame is built, before any
+#: action: eager checkpoints and emptiness probes between rounds run at
+#: build time and show in no plan.
+BUILD_JOB_BUDGET = {"detect_lines": 0, "gcca_generic": 0}
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOB_BUDGET))
+def test_build_job_budget(spark, name):
+    """Building the query runs at most its budget of jobs.  The first
+    build may infer its tables' schemas (cached per path afterwards), so
+    the second build is the one counted."""
+    build = entry.queries()[name]
+    build(spark, SF)
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        build(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= BUILD_JOB_BUDGET[name], (name, list(jobs))
 
 
 def test_baseline_appendix_preserved_on_headline_rewrite():

@@ -131,8 +131,7 @@ ADVICE_EDGES = [(7, 39), (7, 49), (32, 49), (36, 39), (36, 45), (45, 46),
 def test_connected_components_chain_and_singleton(spark):
     """A 5-node chain (worst case for 1-hop propagation) collapses to
     min-label and a separate pair forms its own component; the ADVICE
-    graph collapses to 7; the same ids under two key values stay two
-    graphs."""
+    graph collapses to 7."""
     from layout_parser_spark.operators.webgraph import connected_components
 
     for edges, expected in [
@@ -143,14 +142,6 @@ def test_connected_components_chain_and_singleton(spark):
         e = spark.createDataFrame(edges, "u long, v long")
         out = {r.id: r.lbl for r in connected_components(e).collect()}
         assert out == expected, edges
-
-    keyed = spark.createDataFrame(
-        [(0, 1, 2), (0, 2, 3), (1, 3, 4), (1, 1, 9)], "g long, u long, v long"
-    )
-    out = {(r.g, r.id): r.lbl
-           for r in connected_components(keyed, key_cols=["g"]).collect()}
-    assert out == {(0, 1): 1, (0, 2): 1, (0, 3): 1,
-                   (1, 1): 1, (1, 9): 1, (1, 3): 3, (1, 4): 3}
 
 
 def _union_find(edges):
@@ -196,12 +187,11 @@ def _property_graphs():
 
 
 def test_connected_components_matches_union_find(spark):
-    """Labels equal a plain-Python union-find on every property graph:
-    keyed by graph index over overlapping ids, and unkeyed over the
-    disjoint union (graph g's ids shifted by g * 1000).  A batch runs
-    every graph for as many rounds as its slowest one, and those extra
-    rounds collapse label chains a lone graph would keep, so the first
-    16 graphs also run one at a time."""
+    """Labels equal a plain-Python union-find on every property graph,
+    run over their disjoint union (graph g's ids shifted by g * 1000).
+    A batch runs every graph for as many rounds as its slowest one, and
+    those extra rounds collapse label chains a lone graph would keep, so
+    the first 16 graphs also run one at a time."""
     from layout_parser_spark.operators.webgraph import connected_components
 
     graphs = _property_graphs()
@@ -211,11 +201,6 @@ def test_connected_components_matches_union_find(spark):
         [(g, a, b) for g, es in enumerate(graphs) for a, b in es],
         "g long, u long, v long",
     )
-    got = {(r.g, r.id): r.lbl
-           for r in connected_components(keyed, key_cols=["g"]).collect()}
-    assert got == {(g, x): lbl for g, uf in enumerate(want)
-                   for x, lbl in uf.items()}
-
     flat = keyed.selectExpr("u + g * 1000 AS u", "v + g * 1000 AS v")
     got = {r.id: r.lbl for r in connected_components(flat).collect()}
     assert got == {g * 1000 + x: g * 1000 + lbl
