@@ -322,7 +322,9 @@ def minhash_lsh_pairs(
     one band's r components all agree — the scale path: candidates are
     generated by an equi-shuffle on (band, band-key), never by a cross
     join.  Docs with zero shingles (< n tokens) carry no content signal
-    and are excluded.  Returns (id_a, id_b, est_jaccard)."""
+    and are excluded.  Returns (id_a, id_b, est_jaccard).  Jobs at call
+    time: the eager signature checkpoint, one job plus one per shuffle
+    stage upstream — 2 for ``minhash_lsh`` (its input is repartitioned)."""
     r = num_hashes // bands
     # zero-shingle exclusion is expressed on the RAW token count (size ≥ n
     # ⇔ at least one n-gram), so the signature kernel only ever sees docs

@@ -4,13 +4,19 @@
   set, JVM-side dot products via ``zip_with``/``aggregate``, per-query
   top-k by window.  The correctness baseline.
 * ``lsh_topk`` — random-hyperplane LSH: deterministic hyperplanes derived
-  from xxhash64 of (dim, plane) — reproducible without RNG state; bucket
+  from md5 of (plane, component) — reproducible without RNG state; bucket
   equi-join prunes candidates, then exact cosine re-ranks inside buckets.
   The scale path: candidate generation is a shuffle on the signature, not
   a cross join.
-* ``ivf_topk`` — IVF-style coarse quantization: k-means-free variant using
-  the nearest of NLIST deterministic "centroid" vectors (drawn from the
-  dataset by id), probe the closest NPROBE lists.
+* ``ivf_topk`` — IVF-style coarse quantization: each vector joins the
+  list of its nearest centroid, each query probes its NPROBE nearest
+  lists.  Centroids are NLIST deterministic vectors drawn from the
+  dataset by id, or trained by ``kmeans_centroids``.
+* ``lloyd`` — the one Lloyd's k-means loop: trains IVF's centroids
+  (cosine) and PQ's m subspace codebooks (squared L2) in one pass per
+  round; the trained model enters later plans as a literal.
+* ``pq_topk`` — product quantization: ``lloyd`` codebooks, map-side
+  encoding, ADC scoring, exact cosine re-rank of the best candidates.
 
 All distance math is columnar (no UDFs).
 """
@@ -40,6 +46,15 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def l2sq(a: Column, b: Column) -> Column:
+    """Squared L2 distance between two double arrays (one fold)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
 
 
 def cosine_topk(
@@ -136,6 +151,33 @@ def rh_signature(
     return out
 
 
+def _exact_topk(
+    pairs: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    qvec_col: str,
+) -> DataFrame:
+    """Exact cosine re-rank of candidate (vector, query) pairs to the
+    top-k per query, ties by ascending vector id — the last step of
+    every approximate search here.  Output: (query_id, vec_id,
+    cosine_sim, rank)."""
+    scored = pairs.select(
+        F.col(qid_col).alias("query_id"),
+        F.col(id_col).alias("vec_id"),
+        F.round(cosine(F.col(vec_col), F.col(qvec_col)), 6).alias(
+            "cosine_sim"
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
 def lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -154,18 +196,105 @@ def lsh_topk(
     v = vectors.withColumn("_sig", rh_signature(F.col(vec_col), dim, n_planes))
     q = queries.withColumn("_sig", rh_signature(F.col(qvec_col), dim, n_planes))
     j = v.join(F.broadcast(q), on="_sig")
-    sim = cosine(F.col(vec_col), F.col(qvec_col))
-    scored = j.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(id_col).alias("vec_id"),
-        F.round(sim, 6).alias("cosine_sim"),
+    return _exact_topk(j, k, id_col, vec_col, qid_col, qvec_col)
+
+
+def _nearest(vec: Column, book: Column, metric: str) -> Column:
+    """0-based index of the row of ``book`` (array<array<double>>)
+    nearest to ``vec``: the largest cosine (``"cos"``) or the smallest
+    squared L2 (``"l2"``).  One fold over the scores; the strict
+    comparison keeps the FIRST index on ties.  NULL for a NULL vector."""
+    cos = metric == "cos"
+    score, worst = (cosine, float("-inf")) if cos else (l2sq, float("inf"))
+
+    def better(s: Column, best: Column) -> Column:
+        return s > best if cos else s < best
+
+    init = F.struct(
+        F.lit(worst).alias("s"),
+        F.lit(None).cast("int").alias("i"),
+        F.lit(0).alias("n"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return F.aggregate(
+        F.transform(book, lambda c: score(vec, c)),
+        init,
+        lambda acc, s: F.struct(
+            F.when(better(s, acc["s"]), s).otherwise(acc["s"]).alias("s"),
+            F.when(better(s, acc["s"]), acc["n"])
+            .otherwise(acc["i"])
+            .alias("i"),
+            (acc["n"] + 1).alias("n"),
+        ),
+    )["i"]
+
+
+def _book_literals(model) -> "list[Column]":
+    """An (m, k, sub_dim) model as m array<array<double>> columns cut
+    from ONE literal of the flat numpy array; the optimizer folds the
+    slices to constants, so the model rides in the expression tree."""
+    import numpy as np
+
+    m, k, sub = model.shape
+    flat = F.lit(np.ascontiguousarray(model, dtype=np.float64).ravel())
+    return [
+        F.array(*[F.slice(flat, (j * k + i) * sub + 1, sub) for i in range(k)])
+        for j in range(m)
+    ]
+
+
+def lloyd(
+    vectors: DataFrame,
+    k: int,
+    dim: int,
+    iters: int,
+    metric: str,
+    m: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> "numpy.ndarray":
+    """Deterministic Lloyd's k-means over ``m`` subspaces of ``dim // m``
+    components (IVF: m = 1, ``"cos"``; PQ: ``"l2"``).  Returns the model,
+    an (m, k', dim // m) float64 numpy array, k' = min(k, non-NULL rows).
+
+    Init: the k smallest-id vectors, collected and split into subspaces.
+    Each round, one select codes every vector in all m subspaces against
+    the model literal (``_nearest``), and one groupBy(j, code) mean
+    aggregate collects ≤ k·m rows; a cluster with no members keeps its
+    centroid.  NULL vectors enter neither the init nor a mean.
+
+    Jobs at call time: the init collect and one collect per round, each
+    plus one job per shuffle stage it runs — 11 at 3 rounds over a
+    repartitioned scan (``ann_pq``, ``ann_ivf_kmeans``)."""
+    import numpy as np
+
+    sub = dim // m
+    vectors = vectors.where(F.col(vec_col).isNotNull())
+    init = vectors.orderBy(id_col).limit(k).select(vec_col).collect()
+    model = np.array([r[0][: m * sub] for r in init], dtype=np.float64)
+    model = model.reshape(len(init), m, sub).transpose(1, 0, 2).copy()
+    subs = [F.slice(F.col(vec_col), j * sub + 1, sub) for j in range(m)]
+    for _ in range(iters):
+        books = _book_literals(model)
+        parts = F.array(
+            *[
+                F.struct(
+                    F.lit(j).alias("j"),
+                    _nearest(sv, books[j], metric).alias("code"),
+                    sv.alias("sv"),
+                )
+                for j, sv in enumerate(subs)
+            ]
+        )
+        means = (
+            vectors.select(F.inline(parts))
+            .where(F.col("code").isNotNull())
+            .groupBy("j", "code")
+            .agg(F.array(*[F.avg(F.col("sv")[c]) for c in range(sub)]))
+            .collect()
+        )
+        for j, code, mean in means:
+            model[j, code] = mean
+    return model
 
 
 def assign_to_centroids(
@@ -175,43 +304,25 @@ def assign_to_centroids(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Nearest-centroid assignment SHUFFLE-FREE: broadcast ONE row holding
-    the (sorted) centroid array, argmax by a fold — replaces the
-    explode-n×nlist-rows + per-vector row_number window, the wrong shape
-    at 10^9 vectors.  Output: (id_col, vec_col, c_id, c_sim)."""
+    the centroids sorted by c_id, pick by the ``_nearest`` cosine fold
+    (ties → smallest c_id) — no n×nlist explode, no per-vector window.
+    Output: (id_col, vec_col, c_id, c_sim), NULLs for a NULL vector."""
     cent_row = centroids.agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("c_id"), F.col("c_vec")))
         ).alias("_cents")
     )
-
-    def _best(vec, cents):
-        # fold keeping (sim, c_id) of the best centroid; strict > keeps
-        # the FIRST (smallest c_id, array is sorted) on ties — same
-        # semantics as orderBy(c_sim desc, c_id asc) row_number()=1
-        init = F.struct(
-            F.lit(-2.0).cast("double").alias("s"),
-            F.lit(None).cast("long").alias("c"),
-        )
-        return F.aggregate(
-            cents,
-            init,
-            lambda acc, c: F.when(
-                cosine(vec, c["c_vec"]) > acc["s"],
-                F.struct(
-                    cosine(vec, c["c_vec"]).alias("s"),
-                    c["c_id"].cast("long").alias("c"),
-                ),
-            ).otherwise(acc),
-        )
-
+    i = _nearest(F.col(vec_col), F.col("_cents.c_vec"), "cos")
+    # F.get, not [ ]: under ANSI a NULL index (a NULL vector) raises
+    best = F.get(F.col("_cents"), F.col("_i"))
     return (
         vectors.crossJoin(F.broadcast(cent_row))
-        .withColumn("_best", _best(F.col(vec_col), F.col("_cents")))
+        .withColumn("_i", i)
         .select(
             id_col,
             vec_col,
-            F.col("_best.c").alias("c_id"),
-            F.col("_best.s").alias("c_sim"),
+            best["c_id"].alias("c_id"),
+            cosine(F.col(vec_col), best["c_vec"]).alias("c_sim"),
         )
     )
 
@@ -224,37 +335,14 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Deterministic Lloyd's k-means as pure DataFrame iterations (the
-    trained-centroid path for IVF): init = the nlist smallest-id vectors
-    (no RNG state), each round assigns via the broadcast argmax fold and
-    recomputes centroids as element-wise means (dim known → one avg
-    aggregate per component, plain map-side-combined groupBy); clusters
-    that empty out keep their previous centroid.  Output (c_id, c_vec)."""
-    cents = (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(nlist)
-        .select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
-        .localCheckpoint(eager=True)
+    """IVF's trained centroids: ``lloyd`` under cosine as a frame
+    (c_id, c_vec) read from the model literal.  c_id is the centroid's
+    0-based rank in init order (the id order of its init vector)."""
+    model = lloyd(vectors, nlist, dim, iters, "cos", 1, id_col, vec_col)
+    book = _book_literals(model)[0]
+    return vectors.sparkSession.range(model.shape[1]).select(
+        F.col("id").alias("c_id"), book[F.col("id")].alias("c_vec")
     )
-    for _ in range(iters):
-        assigned = assign_to_centroids(vectors, cents, id_col, vec_col)
-        means = assigned.groupBy("c_id").agg(
-            F.array(
-                *[
-                    F.avg(F.element_at(F.col(vec_col), i + 1))
-                    for i in range(dim)
-                ]
-            ).alias("_mean")
-        )
-        cents = (
-            cents.join(means, on="c_id", how="left")
-            .select(
-                "c_id",
-                F.coalesce(F.col("_mean"), F.col("c_vec")).alias("c_vec"),
-            )
-            .localCheckpoint(eager=True)  # constant lineage per round
-        )
-    return cents
 
 
 def ivf_topk(
@@ -275,12 +363,8 @@ def ivf_topk(
     nearest centroid (broadcast argmax fold); each query probes its
     NPROBE nearest lists.  Exact cosine re-rank within probed lists."""
     if centroids is None:
-        centroids = (
-            vectors.orderBy(F.col(id_col).asc())
-            .limit(nlist)
-            .select(
-                F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-            )
+        centroids = vectors.orderBy(id_col).limit(nlist).select(
+            F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
         )
     assigned = assign_to_centroids(vectors, centroids, id_col, vec_col)
     # queries probe nprobe nearest lists
@@ -299,117 +383,12 @@ def ivf_topk(
         .select(qid_col, qvec_col, "c_id")
     )
     j = assigned.join(F.broadcast(probes), on="c_id")
-    sim = cosine(F.col(vec_col), F.col(qvec_col))
-    scored = j.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(id_col).alias("vec_id"),
-        F.round(sim, 6).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return _exact_topk(j, k, id_col, vec_col, qid_col, qvec_col)
 
 
 # ---------------------------------------------------------------------------
 # product quantization (PQ) — the vector-compression ANN path
 # ---------------------------------------------------------------------------
-
-
-def l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance between two double arrays (one fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _argmin_code(vec: Column, cb: Column) -> Column:
-    """1-based index of the nearest (squared-L2) centroid in the
-    broadcast codebook array ``cb`` (array<array<double>>) — a fold over
-    indices, strict < keeps the FIRST on ties (deterministic)."""
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(1).alias("i")
-    )
-    return F.aggregate(
-        F.sequence(F.lit(1), F.size(cb)),
-        init,
-        lambda acc, i: F.when(
-            l2sq(vec, F.element_at(cb, i)) < acc["d"],
-            F.struct(
-                l2sq(vec, F.element_at(cb, i)).alias("d"), i.alias("i")
-            ),
-        ).otherwise(acc),
-    )["i"]
-
-
-def pq_codebook(
-    vectors: DataFrame,
-    j: int,
-    sub_dim: int,
-    k_codes: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """ONE-ROW DataFrame carrying subspace ``j``'s codebook as a sorted
-    array<array<double>> column ``cb{j}`` — deterministic L2 Lloyd's
-    (init = the k smallest-id sub-vectors; empty clusters keep their
-    previous centroid).  The one-row form broadcasts into every
-    downstream stage, so neither training nor encoding ever shuffles on
-    the vector id."""
-    subv = vectors.select(
-        F.col(id_col).alias("_id"),
-        F.slice(F.col(vec_col), j * sub_dim + 1, sub_dim).alias("_sv"),
-    )
-    cb_row = (
-        subv.orderBy(F.col("_id").asc())
-        .limit(k_codes)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_id"), F.col("_sv")))
-            ).alias("_init")
-        )
-        .select(
-            F.transform(F.col("_init"), lambda s: s["_sv"]).alias("cb")
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        assigned = subv.crossJoin(F.broadcast(cb_row)).select(
-            "_sv", _argmin_code(F.col("_sv"), F.col("cb")).alias("code")
-        )
-        means = assigned.groupBy("code").agg(
-            F.array(
-                *[
-                    F.avg(F.element_at(F.col("_sv"), c + 1))
-                    for c in range(sub_dim)
-                ]
-            ).alias("mv")
-        )
-        # one-row merge: new[i] = mean of cluster i if non-empty else old
-        mean_map = means.agg(
-            F.map_from_arrays(
-                F.collect_list("code"), F.collect_list("mv")
-            ).alias("mm")
-        )
-        cb_row = (
-            cb_row.crossJoin(F.broadcast(mean_map))
-            .select(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(F.col("cb"))),
-                    lambda i: F.coalesce(
-                        F.element_at(F.col("mm"), i),
-                        F.element_at(F.col("cb"), i),
-                    ),
-                ).alias("cb")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return cb_row.select(F.col("cb").alias(f"cb{j}"))
 
 
 def pq_topk(
@@ -439,11 +418,10 @@ def pq_topk(
     rank) — with ``refine`` ≫ k the result equals the exact baseline
     (recall-1 configuration), which is the driver-oracle contract.
 
-    Scale shape: codebooks are one-row broadcasts (training shuffles
-    only k_codes×m tiny aggregates); encoding is map-side; ADC scoring
-    is the broadcast-queries pattern of ``cosine_topk`` with O(m) work
-    per pair; only the ``refine`` winners per query reach the exact
-    re-rank (an equi-join on the vector id).
+    Scale shape: ``lloyd`` trains all m codebooks at once and they enter
+    the plan as literals; encoding is map-side; ADC scoring is the
+    broadcast-queries pattern of ``cosine_topk`` with O(m) work per pair;
+    only the ``refine`` winners per query reach the exact re-rank.
 
     Vectors are L2-NORMALIZED before training/encoding (map-side): on
     the unit sphere ‖a−b‖² = 2 − 2·cos(a,b), so the squared-L2 ADC
@@ -453,55 +431,41 @@ def pq_topk(
 
     def _unit(vc: Column) -> Column:
         n = F.sqrt(dot(vc, vc))
-        return F.transform(
-            vc, lambda x: F.when(n > 0, x / n).otherwise(x)
-        )
+        return F.transform(vc, lambda x: F.when(n > 0, x / n).otherwise(x))
 
-    nvec = vectors.select(
-        id_col, vec_col, _unit(F.col(vec_col)).alias("_nv")
+    def _sub(c: str, j: int) -> Column:
+        return F.slice(F.col(c), j * sub_dim + 1, sub_dim)
+
+    nv = vectors.select(id_col, _unit(F.col(vec_col)).alias(vec_col))
+    nq = queries.select(qid_col, _unit(F.col(qvec_col)).alias(qvec_col))
+    books = _book_literals(
+        lloyd(nv, k_codes, dim, iters, "l2", m, id_col, vec_col)
     )
-    nv = nvec.select(id_col, F.col("_nv").alias(vec_col))
-    nq = queries.select(
-        qid_col, _unit(F.col(qvec_col)).alias(qvec_col)
+    # encode map-side, and per query the ADC tables: the distance from its
+    # sub-vector to every centroid of that subspace.  NB a HOF lambda must
+    # take ONE argument — a second (even defaulted) python parameter
+    # receives the ELEMENT INDEX in Spark HOFs.
+    coded = nv.select(
+        id_col,
+        *[
+            _nearest(_sub(vec_col, j), b, "l2").alias(f"code{j}")
+            for j, b in enumerate(books)
+        ],
     )
-    books = [
-        pq_codebook(nv, j, sub_dim, k_codes, iters, id_col, vec_col)
-        for j in range(m)
-    ]
-    # encode map-side: m one-row broadcasts attach, m argmin folds
-    coded = nv.select(id_col, vec_col)
-    for j, b in enumerate(books):
-        coded = coded.crossJoin(F.broadcast(b)).withColumn(
-            f"code{j}",
-            _argmin_code(
-                F.slice(F.col(vec_col), j * sub_dim + 1, sub_dim),
-                F.col(f"cb{j}"),
-            ),
-        ).drop(f"cb{j}")
-    coded = coded.drop(vec_col).localCheckpoint(eager=True)
-
-    # per-query ADC tables: distance from the query's sub-vector to every
-    # centroid of that subspace.  NB the lambda must take ONE argument —
-    # a second (even defaulted) python parameter receives the ELEMENT
-    # INDEX in Spark HOFs, silently corrupting the slice — so the
-    # subspace offset is closed over via a factory.
-    def _qtable(j: int) -> Column:
-        qslice = F.slice(F.col(qvec_col), j * sub_dim + 1, sub_dim)
-        return F.transform(F.col(f"cb{j}"), lambda c: l2sq(qslice, c))
-
-    qt = nq
-    for j, b in enumerate(books):
-        qt = qt.crossJoin(F.broadcast(b)).withColumn(
-            f"t{j}", _qtable(j)
-        ).drop(f"cb{j}")
-
-    adc = coded.crossJoin(F.broadcast(qt.drop(qvec_col)))
+    qt = nq.select(
+        qid_col,
+        *[
+            F.transform(b, lambda c: l2sq(_sub(qvec_col, j), c)).alias(f"t{j}")
+            for j, b in enumerate(books)
+        ],
+    )
+    adc = coded.crossJoin(F.broadcast(qt))
     score = sum(
-        (F.element_at(F.col(f"t{j}"), F.col(f"code{j}")) for j in range(m)),
+        (F.get(F.col(f"t{j}"), F.col(f"code{j}")) for j in range(m)),
         F.lit(0.0),
     )
     w = Window.partitionBy(qid_col).orderBy(
-        F.col("_adc").asc(), F.col(id_col).asc()
+        F.col("_adc").asc_nulls_last(), F.col(id_col).asc()
     )
     cands = (
         adc.withColumn("_adc", score)
@@ -514,16 +478,4 @@ def pq_topk(
         cands.join(vectors.select(id_col, vec_col), on=id_col)
         .join(F.broadcast(queries), on=qid_col)
     )
-    sim = cosine(F.col(vec_col), F.col(qvec_col))
-    scored = pairs.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(id_col).alias("vec_id"),
-        F.round(sim, 6).alias("cosine_sim"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-    )
+    return _exact_topk(pairs, k, id_col, vec_col, qid_col, qvec_col)

@@ -18,8 +18,7 @@ Scale design:
 * ``pagerank_hosts`` iterates entirely in DataFrames: per-iteration one
   equi-join (edges ⋈ ranks on src) + one hash aggregate on dst + two
   one-row broadcast cross-joins (node count, dangling mass).  Iteration
-  outputs are ``localCheckpoint``-ed so lineage stays constant
-  (iterative-algorithm lesson, cf. similarity.py k-means).
+  outputs are ``localCheckpoint``-ed so lineage stays constant.
 
 Determinism contract (the driver oracle value-matches in DuckDB): ranks
 are FIXED-POINT BIGINT micro-units (``UNIT`` = 10^12) and every division
@@ -105,7 +104,10 @@ def pagerank_hosts(
         dangling share  = ((Σ rank_dangling) // N) * damping_pct // 100
         rank'           = base + dangling share + Σ edge contribs
 
-    Returns (host, rank_micro BIGINT) with Σ rank ≈ UNIT."""
+    Returns (host, rank_micro BIGINT) with Σ rank ≈ UNIT.  Jobs at call
+    time: the eager checkpoints (edges, initial ranks, each iteration),
+    each one job plus one per shuffle stage — 43 at 3 iterations, sf0.001
+    (the ``pagerank_hosts`` build-job budget)."""
     # materialize the edge list once: it is joined EVERY iteration, and
     # without this the whole upstream lineage (page render + link regex
     # + host aggregate) re-executes per round
@@ -270,7 +272,10 @@ def connected_components(
     that next reads one fills it and no separate count job runs.
 
     Raises ``RuntimeError`` when ``max_iter`` rounds, or ``max_iter``
-    jumping passes, end before the labels reach a fixpoint."""
+    jumping passes, end before the labels reach a fixpoint.  Jobs at call
+    time: one ``isEmpty`` probe per round and per final jumping pass, each
+    one job plus one per shuffle stage it fills — 15 at sf0.001, which
+    with ``minhash_lsh_pairs``' 2 is the ``dedup_clusters`` budget of 17."""
     cur = (
         edges.select(
             F.least(u, v).alias("u"),

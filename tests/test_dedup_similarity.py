@@ -442,20 +442,27 @@ def test_detect_lines_equals_local(spark):
             assert sorted(got.get(doc, [])) == want, (doc, xt, yt)
 
 
+def _ivf_inputs(spark):
+    """The sf0.001 embeddings as doubles: vec_id ≥ 2 are the vectors,
+    vec_id < 2 the queries."""
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
+    q = emb.where("vec_id < 2").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    return emb.where("vec_id >= 2"), q
+
+
 def test_kmeans_centroids_deterministic_and_improving(spark):
     """DataFrame-native Lloyd's k-means: deterministic across runs, and
     mean distortion (cosine to assigned centroid) does not decrease with
     iterations; full-probe IVF over trained centroids stays exact."""
     from layout_parser_spark.operators.similarity import (
         assign_to_centroids,
-        cosine_topk,
-        ivf_topk,
         kmeans_centroids,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    emb = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
-    v = emb.where("vec_id >= 2")
+    v, q = _ivf_inputs(spark)
 
     def mean_sim(cents):
         return (
@@ -475,15 +482,89 @@ def test_kmeans_centroids_deterministic_and_improving(spark):
     assert mean_sim(c3) >= mean_sim(c0) - 1e-9
 
     # full probe with trained centroids is still the exact answer
-    q = emb.where("vec_id < 2").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     exact = {(r.query_id, r.rank): r.vec_id for r in cosine_topk(v, q, k=5).collect()}
     ivf = {
         (r.query_id, r.rank): r.vec_id
         for r in ivf_topk(v, q, k=5, nlist=8, nprobe=8, centroids=c3).collect()
     }
     assert exact == ivf
+
+
+def _np_lloyd(X, k, iters, metric, m):
+    """Plain-numpy Lloyd's, the reference for ``similarity.lloyd``: rows
+    of ``X`` in id order, init = the first k rows split into m
+    subspaces, first index wins a tie, an empty cluster keeps its
+    centroid.  Scores are left-to-right sums (``np.cumsum``), the order
+    of the Spark folds, so both sides compare the same doubles."""
+    import numpy as np
+
+    sub = X.shape[1] // m
+    model = X[:k].reshape(-1, m, sub).transpose(1, 0, 2).copy()
+
+    def score(a, c):
+        if metric == "cos":
+            na, nc = np.cumsum(a * a)[-1], np.cumsum(c * c)[-1]
+            return np.cumsum(a * c)[-1] / (np.sqrt(na) * np.sqrt(nc))
+        return np.cumsum((a - c) * (a - c))[-1]
+
+    def nearest(a, book):
+        best, best_s = 0, score(a, book[0])
+        for i in range(1, len(book)):
+            s = score(a, book[i])
+            if (s > best_s) if metric == "cos" else (s < best_s):
+                best, best_s = i, s
+        return best
+
+    for _ in range(iters):
+        new = model.copy()
+        for j in range(m):
+            xs = X[:, j * sub : (j + 1) * sub]
+            codes = np.array([nearest(a, model[j]) for a in xs])
+            for c in set(codes.tolist()):
+                new[j, c] = xs[codes == c].sum(axis=0) / (codes == c).sum()
+        model = new
+    return model
+
+
+def test_lloyd_matches_numpy_reference(spark):
+    """``lloyd`` against ``_np_lloyd`` on seeded integer-lattice vectors,
+    for both metrics and m ∈ {1, 4}: after one round the centroids are
+    equal bit for bit (integer sums are exact in any order), after three
+    to a relative 1e-12.  Adversarial inputs: exact ties (duplicate
+    vectors, and 2·b next to b, equal under cosine), k above the number
+    of distinct vectors (empty clusters keep their centroid), and n < k
+    (the model has n rows).  Rows reach Spark shuffled, under ids that
+    are not their positions, so the init must sort by id."""
+    import numpy as np
+
+    from layout_parser_spark.operators.similarity import lloyd
+
+    rng = np.random.default_rng(2024)
+    lattice = rng.integers(1, 4, size=(48, 8)).astype(float)
+    base = rng.integers(1, 4, size=(3, 8)).astype(float)
+    pool = np.vstack([base, 2 * base[:1]])
+    dups = pool[[0, 3, 1, 0, 2, 0, 1, 3, 0, 2, 3, 0, 1, 0]]
+    cases = [("lattice", lattice, 5), ("dups", dups, 6), ("n<k", lattice[:3], 5)]
+    for name, X, k in cases:
+        ids = np.sort(rng.choice(10**6, size=len(X), replace=False))
+        rows = [(int(i), x.tolist()) for i, x in zip(ids, X)]
+        random.Random(len(X)).shuffle(rows)
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        for metric in ("cos", "l2"):
+            for m in (1, 4):
+                for iters in (1, 3):
+                    got = lloyd(df, k, 8, iters, metric, m=m)
+                    want = _np_lloyd(X, k, iters, metric, m)
+                    assert got.shape == want.shape == (m, min(k, len(X)), 8 // m)
+                    if iters == 1:
+                        np.testing.assert_array_equal(
+                            got, want, err_msg=f"{name} {metric} m={m}"
+                        )
+                    else:
+                        np.testing.assert_allclose(
+                            got, want, rtol=1e-12, atol=0,
+                            err_msg=f"{name} {metric} m={m}",
+                        )
 
 
 def test_repeated_line_removal_newline_delim(spark):
@@ -650,40 +731,54 @@ def test_pack_sequences_multi_part_sharding(spark):
             run += r.n_tokens
 
 
-def test_pq_topk_recall_on_clustered_data(spark):
-    """PQ + exact refinement equals brute force on clusterable vectors
-    (recall-1 configuration); on pure-noise embeddings the lossy codes
-    genuinely cannot guarantee that — which is why the driver query runs
-    over the deterministic clustered fixture."""
-    from pyspark.sql import functions as F
+PQ_DIM = 32
 
-    from layout_parser_spark.operators.similarity import (
-        cosine_topk,
-        pq_topk,
-    )
 
-    DIM = 32
+def _pq_inputs(spark):
+    """200 vectors in 10 integer-lattice clusters with centi-scale noise,
+    and 3 queries at cluster centres: clusterable, so PQ + refinement is
+    exact."""
 
     def vec(c, d):
         return F.array(
             *[
                 ((c * 31 + i * 17) % 13 - 6).cast("double")
                 + ((d * 7 + i * 3) % 5 - 2).cast("double") * 0.01
-                for i in range(DIM)
+                for i in range(PQ_DIM)
             ]
         )
 
-    base = spark.range(200).select(F.col("id").alias("vec_id"))
-    d = F.col("vec_id")
-    vectors = base.select("vec_id", vec(d % 10, d).alias("embedding"))
-    queries = spark.range(3).select(
-        F.col("id").alias("query_id"),
-        vec(F.col("id"), F.col("id") * 0).alias("query_vec"),
+    d = F.col("id")
+    vectors = spark.range(200).select(
+        d.alias("vec_id"), vec(d % 10, d).alias("embedding")
     )
+    queries = spark.range(3).select(
+        d.alias("query_id"), vec(d, d * 0).alias("query_vec")
+    )
+    return vectors, queries
+
+
+def _with_null_vector(df, id_col, vec_col):
+    """``df`` plus one NULL-vector row with the smallest id (-1)."""
+    null = df.sparkSession.range(1).select(
+        F.lit(-1).cast("long").alias(id_col),
+        F.lit(None).cast("array<double>").alias(vec_col),
+    )
+    return df.unionByName(null, allowMissingColumns=True)
+
+
+def test_pq_topk_recall_on_clustered_data(spark):
+    """PQ + exact refinement equals brute force on clusterable vectors
+    (recall-1 configuration); on pure-noise embeddings the lossy codes
+    genuinely cannot guarantee that — which is why the contract query runs
+    over the deterministic clustered fixture."""
+    from layout_parser_spark.operators.similarity import pq_topk
+
+    vectors, queries = _pq_inputs(spark)
     pq = sorted(
         (r.query_id, r.rank, r.vec_id, r.cosine_sim)
         for r in pq_topk(
-            vectors, queries, k=5, m=4, k_codes=16, refine=40, dim=DIM
+            vectors, queries, k=5, m=4, k_codes=16, refine=40, dim=PQ_DIM
         ).collect()
     )
     ex = sorted(
@@ -691,6 +786,45 @@ def test_pq_topk_recall_on_clustered_data(spark):
         for r in cosine_topk(vectors, queries, k=5).collect()
     )
     assert pq == ex
+
+
+def test_trained_ann_ignores_null_vectors(spark):
+    """A NULL embedding enters no k-means init and no mean.  Appended to
+    the PQ and IVF-k-means inputs with the smallest id (an unfiltered
+    init would pick it), it leaves every trained centroid NULL-free and
+    the top-k unchanged."""
+    import numpy as np
+
+    from layout_parser_spark.operators.similarity import (
+        kmeans_centroids,
+        lloyd,
+        pq_topk,
+    )
+
+    vectors, queries = _pq_inputs(spark)
+    vn = _with_null_vector(vectors, "vec_id", "embedding")
+    model = lloyd(vn, 16, PQ_DIM, 3, "l2", m=4)
+    assert not np.isnan(model).any()
+    np.testing.assert_array_equal(model, lloyd(vectors, 16, PQ_DIM, 3, "l2", m=4))
+
+    def pq(v):
+        out = pq_topk(v, queries, k=5, m=4, k_codes=16, refine=40, dim=PQ_DIM)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert pq(vn) == pq(vectors)
+
+    v, q = _ivf_inputs(spark)
+    vn = _with_null_vector(v, "vec_id", "embedding")
+    cents = kmeans_centroids(vn, nlist=8, dim=64, iters=3)
+    rows = cents.collect()
+    assert len(rows) == 8
+    assert all(r.c_vec is not None and None not in r.c_vec for r in rows)
+
+    def ivf(v, cents):
+        out = ivf_topk(v, q, k=5, nlist=8, nprobe=8, centroids=cents)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert ivf(vn, cents) == ivf(v, kmeans_centroids(v, nlist=8, dim=64, iters=3))
 
 
 def test_scrub_pii_and_stratified_sample(spark):

@@ -27,9 +27,9 @@ BNLJ_ALLOWED = {
     "docs_lm_score",        # one-row corpus-total attach
     "ann_cosine_topk",      # broadcast query-vector set (exact baseline)
     "ann_ivf",              # one-row centroid-array attach
-    "ann_ivf_kmeans",       # same, per k-means round
-    "ann_pq",               # one-row codebook attaches + broadcast
-                            # query-table set (the ADC scan pattern)
+    "ann_ivf_kmeans",       # same, over the trained centroids
+    "ann_pq",               # broadcast query-table set (the ADC scan
+                            # pattern)
 }
 
 
@@ -117,16 +117,34 @@ def test_plan_shapes_match_committed_audit(spark):
 
 
 #: Spark jobs a query may run while its DataFrame is built, before any
-#: action: eager checkpoints and emptiness probes between rounds run at
-#: build time and show in no plan.
-BUILD_JOB_BUDGET = {"detect_lines": 0, "gcca_generic": 0}
+#: action: eager checkpoints, emptiness probes and model collects between
+#: rounds run at build time and show in no plan.  Every contract query is
+#: checked; one not listed here may run none.
+BUILD_JOB_BUDGET = {
+    # lloyd (all m codebooks at once): the init collect and 3 rounds'
+    # collects, each with the shuffle stages it runs (the input's
+    # repartition, the mean aggregate)
+    "ann_pq": 11,
+    # lloyd with m = 1: the same 11 jobs
+    "ann_ivf_kmeans": 11,
+    # eager localCheckpoints of the edges, the initial ranks and each of
+    # 3 iterations, with their shuffle stages; still open (ROADMAP item 3)
+    "pagerank_hosts": 43,
+    # connected_components' isEmpty probes, one per round and per final
+    # jumping pass, with the stages they fill, plus minhash_lsh's 2
+    "dedup_clusters": 17,
+    # minhash_lsh_pairs' eager signature checkpoint and the repartition
+    # of its input
+    "minhash_lsh": 2,
+}
 
 
-@pytest.mark.parametrize("name", sorted(BUILD_JOB_BUDGET))
+@pytest.mark.parametrize("name", sorted(entry.queries()))
 def test_build_job_budget(spark, name):
-    """Building the query runs at most its budget of jobs.  The first
-    build may infer its tables' schemas (cached per path afterwards), so
-    the second build is the one counted."""
+    """Building the query runs at most its budget of jobs (0 unless
+    declared in BUILD_JOB_BUDGET).  The first build may infer its
+    tables' schemas (cached per path afterwards), so the second build is
+    the one counted."""
     build = entry.queries()[name]
     build(spark, SF)
     sc = spark.sparkContext
@@ -138,7 +156,7 @@ def test_build_job_budget(spark, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= BUILD_JOB_BUDGET[name], (name, list(jobs))
+    assert len(jobs) <= BUILD_JOB_BUDGET.get(name, 0), (name, list(jobs))
 
 
 def test_baseline_appendix_preserved_on_headline_rewrite():
