@@ -7,7 +7,7 @@ twin for every SQL-expressible query.  Column names and value rounding are
 aligned on both sides (the driver hash-compares values after sorting
 columns by name).
 
-Every query has an oracle entry (59/59): the hash-based family
+Every query has an oracle entry (62/62): the hash-based family
 (MinHash/SimHash/LSH) derives all hashing from md5 lanes + Carter-Wegman
 permutations and literal hashlib hyperplanes, so DuckDB reproduces the
 exact values (see operators/dedup.py + operators/similarity.py).
@@ -55,10 +55,10 @@ from layout_parser_spark.operators.similarity import (
 )
 from layout_parser_spark.operators.text_analysis import (
     doc_fingerprint,
-    lang_id,
     quality_score,
     regex_token_count,
     token_count,
+    with_lang_id,
 )
 from layout_parser_spark.plans import extract_main_text
 from layout_parser_spark.sources import synth_pages
@@ -1953,8 +1953,6 @@ FROM documents
 
 
 def q_docs_lang_id(spark, sf: str) -> DataFrame:
-    from layout_parser_spark.operators.text_analysis import with_lang_id
-
     d = _t(spark, sf, "documents", spread=True)
     return with_lang_id(d.select("doc_id", "text")).select(
         "doc_id", "pred_lang"
@@ -2643,12 +2641,13 @@ def q_corpus_filter_pipeline(spark, sf: str) -> DataFrame:
     gate + exact dedup, then per-source corpus stats — the canonical
     pre-training corpus funnel as one declarative plan."""
     d = _t(spark, sf, "documents", spread=True)
-    scored = d.select(
+    scored = with_lang_id(d.select("doc_id", "source", "text"), out_col="pl")
+    scored = scored.select(
         "doc_id",
         "source",
         "text",
         quality_score(F.col("text")).alias("q"),
-        lang_id(F.col("text")).alias("pl"),
+        "pl",
         token_count(F.col("text")).cast("long").alias("nt"),
     )
     kept = scored.where((F.col("q") >= 0.8) & (F.col("pl") != "und"))

@@ -555,7 +555,7 @@ a checksum aggregate; local[{CPUS}], {os.path.basename(SF_DIR)}.
 def decode_main():
     """--decode: multimodal decode-stage throughput (BENCH/DECODE.md).
     160x120 smooth image / 1 s WAV payloads through the production
-    mapInPandas stages at local[32]; one warm-up then one timed count."""
+    Arrow stages at local[32]; one warm-up then one timed count."""
     import numpy as np
 
     import layout_parser_spark as lps

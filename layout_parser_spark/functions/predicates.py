@@ -43,7 +43,7 @@ from .geometry import (
     py,
     rect_points,
 )
-from .transforms import pad, to_rectangle
+from .transforms import _stable_rank, pad, to_rectangle
 
 __all__ = ["is_in", "intersect", "union", "vertice_in_polygon_expr"]
 
@@ -61,35 +61,27 @@ def _err(result_type, msg: str) -> Column:
     return F.raise_error(F.lit(msg)).cast(result_type)
 
 
-def vertice_in_polygon_expr(vx: Column, vy: Column, poly: Column) -> Column:
+def vertice_in_polygon_expr(vx: Column, vy: Column, poly) -> Column:
     """Point-in-convex-polygon via 4 cross-product sign tests —
     ``vertice_in_polygon`` (elements/utils.py:57-65): shift the polygon's
     clockwise points to the vertex origin, then require
-    det(p_i, p_{i+1}) >= 0 for all consecutive pairs (with wraparound)."""
-    sx = [F.element_at(poly, 2 * i + 1) - vx for i in range(4)]
-    sy = [F.element_at(poly, 2 * i + 2) - vy for i in range(4)]
+    det(p_i, p_{i+1}) >= 0 for all consecutive pairs (with wraparound).
+
+    ``poly`` is the 8-element points array Column, or the list of its 8
+    scalar coordinate expressions (``is_in`` passes the padded points
+    that way, to keep its expression tree on scalar leaves)."""
+    pts = (
+        poly
+        if isinstance(poly, (list, tuple))
+        else [F.element_at(poly, i + 1) for i in range(8)]
+    )
+    sx = [pts[2 * i] - vx for i in range(4)]
+    sy = [pts[2 * i + 1] - vy for i in range(4)]
     conds = []
     for i in range(4):
         j = (i + 1) % 4
         conds.append((sx[i] * sy[j] - sy[i] * sx[j]) >= 0)
     return conds[0] & conds[1] & conds[2] & conds[3]
-
-
-def _stable_rank_scalar(vals):
-    """Stable ranks of 4 scalar expressions (same semantics as
-    transforms._stable_rank, duplicated here to stay on scalar leaves and
-    keep the expression tree small)."""
-    ranks = []
-    for i in range(4):
-        r = F.lit(0)
-        for j in range(4):
-            if j == i:
-                continue
-            r = r + (vals[j] < vals[i]).cast("int")
-            if j < i:
-                r = r + (vals[j] == vals[i]).cast("int")
-        ranks.append(r)
-    return ranks
 
 
 def _padded_parts(other: Column, soft_margin: Optional[dict]):
@@ -136,8 +128,8 @@ def _padded_parts(other: Column, soft_margin: Optional[dict]):
     qxs = [F.element_at(other["points"], 2 * i + 1) for i in range(4)]
     qys = [F.element_at(other["points"], 2 * i + 2) for i in range(4)]
     if padded:
-        xr = _stable_rank_scalar(qxs)
-        yr = _stable_rank_scalar(qys)
+        xr = _stable_rank(qxs)
+        yr = _stable_rank(qys)
         pxs, pys = [], []
         for i in range(4):
             nx = qxs[i] + F.when(xr[i] <= 1, -left).otherwise(right)
@@ -181,17 +173,6 @@ def _padded_parts(other: Column, soft_margin: Optional[dict]):
     for i in range(4):
         pts.extend([pxs[i], pys[i]])
     return i_start, i_end, ox1, oy1, ox2, oy2, pts
-
-
-def _vertex_in_poly_pts(vx, vy, pts) -> Column:
-    """vertice_in_polygon over 8 scalar point expressions."""
-    sx = [pts[2 * i] - vx for i in range(4)]
-    sy = [pts[2 * i + 1] - vy for i in range(4)]
-    cond = F.lit(True)
-    for i in range(4):
-        j = (i + 1) % 4
-        cond = cond & ((sx[i] * sy[j] - sy[i] * sx[j]) >= 0)
-    return cond
 
 
 def is_in(
@@ -255,7 +236,7 @@ def is_in(
             other["axis"] == "x", (o_start <= cx) & (cx <= o_end)
         ).otherwise((o_start <= cy) & (cy <= o_end))
         rq_in_r = (ox1 <= cx) & (cx <= ox2) & (oy1 <= cy) & (cy <= oy2)
-        rq_in_q = _vertex_in_poly_pts(cx, cy, o_pts)
+        rq_in_q = vertice_in_polygon_expr(cx, cy, o_pts)
     else:
         rq_in_i = F.when(
             other["axis"] == "x",
@@ -287,7 +268,7 @@ def is_in(
         ]
         rq_in_q = F.lit(True)
         for i in range(4):
-            rq_in_q = rq_in_q & _vertex_in_poly_pts(vx[i], vy[i], o_pts)
+            rq_in_q = rq_in_q & vertice_in_polygon_expr(vx[i], vy[i], o_pts)
 
     rq_case = (
         F.when(is_interval(other), rq_in_i)

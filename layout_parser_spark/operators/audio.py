@@ -2,27 +2,30 @@
 public WAV format) plus Arrow-batched feature extraction.
 
 Mirrors the image path in ``multimodal.py``: the decode runs INSIDE the
-mapInPandas stage (at 100 TB the payload bytes must never leave the
-executor as anything but features), formats beyond PCM WAV return None
-so callers can fall back to metadata-only.  The reference has no audio
-support — this is part of the LLM-training-pipeline surface the engine
-adds on top (same contract as image decode: opaque binary + typed
-metadata + batch feature UDFs)."""
+Arrow stage, ``transport.map_pages`` (at 100 TB the payload bytes must
+never leave the executor as anything but features), formats beyond PCM
+WAV return None so callers can fall back to metadata-only.  The
+reference has no audio support — this is part of the
+LLM-training-pipeline surface the engine adds on top (same contract as
+image decode: opaque binary + typed metadata + batch feature UDFs)."""
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     IntegerType,
+    LongType,
     StructField,
     StructType,
 )
+
+from ..transport import map_pages
 
 
 def decode_wav(payload: bytes) -> Optional[Tuple[int, int, np.ndarray]]:
@@ -134,24 +137,13 @@ def audio_features(payload: bytes) -> Optional[dict]:
 def extract_audio_features(
     df: DataFrame, payload_col: str = "payload", out_col: str = "audio"
 ) -> DataFrame:
-    """mapInPandas feature extraction over WAV binary payloads; same
-    Arrow batch shape as the image path (one python worker per core,
-    ~2k-row chunks)."""
-    passthrough = df.schema.fields
-    schema = StructType(list(passthrough) + [StructField(out_col, AUDIO_FEATURES, True)])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                feats.append(
-                    audio_features(bytes(payload)) if payload is not None else None
-                )
-            out = pdf.copy()
-            out[out_col] = feats
-            yield out
-
-    return df.mapInPandas(gen, schema=schema)
+    """Feature extraction over WAV binary payloads in one Arrow stage;
+    same batch shape as the image path (one python worker per core,
+    ~2k-row chunks).  A NULL or non-WAV payload gets a NULL struct."""
+    return map_pages(
+        df, lambda p: [(audio_features(p),)], [payload_col],
+        [StructField(out_col, AUDIO_FEATURES, True)], keep=df.columns,
+    )
 
 
 # --- audio fingerprinting (Haitsma-Kalker style, public recipe) ----------
@@ -230,38 +222,16 @@ def extract_audio_fingerprints(
     near-dup pairing: ``phash.phash_near_dup_pairs(out, hash_col="afp",
     id_col=...)``; the per-frame codes are the input for BER-tolerant
     sequence matching of heavy transcodes."""
-    from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-    key_fields = [df.schema[c] for c in key_cols]
-    schema = StructType(
-        list(key_fields)
-        + [
-            StructField("afp", LongType(), True),
-            StructField("codes", ArrayType(IntegerType()), True),
-        ]
-    )
+    def kernel(payload):
+        fp = audio_fingerprint(payload)
+        return [] if fp is None else [(fp[1], fp[0])]
 
-    def gen(batches):
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                payload = row[payload_col]
-                fp = (
-                    audio_fingerprint(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if fp is None:
-                    continue
-                frames, summary = fp
-                recs.append(
-                    tuple(row[c] for c in key_cols) + (summary, frames)
-                )
-            yield pd.DataFrame(
-                recs, columns=list(key_cols) + ["afp", "codes"]
-            )
-
-    return df.mapInPandas(gen, schema=schema)
+    fields = [
+        StructField("afp", LongType(), True),
+        StructField("codes", ArrayType(IntegerType()), True),
+    ]
+    return map_pages(df, kernel, [payload_col], fields, keep=key_cols)
 
 
 def audio_sequence_pairs(

@@ -10,16 +10,15 @@ Decode support, in order of preference:
   slice ``img[y1:y2, x1:x2]``) over distributed binary columns.
 * PIL when installed (gated import) for JPEG/PNG.
 * otherwise the deterministic fake (``_fake_decode``) keeps the plumbing
-  (schema, Arrow batch shape, mapInPandas signatures) testable.
+  (schema, Arrow batch shape, kernel signatures) testable.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,6 +30,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..transport import map_pages
 
 MEDIA_META = StructType(
     [
@@ -95,54 +96,47 @@ def image_dimensions(payload: bytes) -> Optional[tuple]:
     return hw if hw is not None and hw[0] > 0 and hw[1] > 0 else None
 
 
+def _classify(raw: bytes):
+    """(media_type, (h, w) or None) from format headers only."""
+    dims = image_dimensions(raw)
+    if dims:
+        return "image", dims
+    if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
+        return "audio", None
+    if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
+        from ..sources.avi_mini import probe_avi
+
+        p = probe_avi(raw)
+        return "video", (p[0], p[1]) if p else None
+    return "binary", None
+
+
+def _media_meta(payload):
+    """One payload → the ``MEDIA_META`` dict (None for NULL)."""
+    import hashlib
+
+    if payload is None:
+        return None
+    mtype, dims = _classify(payload)
+    return {
+        "media_type": mtype,
+        "byte_len": len(payload),
+        "digest": hashlib.md5(payload).hexdigest(),
+        "width": dims[1] if dims else None,
+        "height": dims[0] if dims else None,
+    }
+
+
 def media_metadata_decoded(
     df: DataFrame, payload_col: str = "payload", out_col: str = "meta"
 ) -> DataFrame:
     """`media_metadata` with real width/height filled from the format
-    headers — one mapInPandas stage, header parse only (no pixel
-    decode), so the per-row cost is O(header) not O(pixels)."""
-    passthrough = df.schema.fields
-    schema = StructType(list(passthrough) + [StructField(out_col, MEDIA_META, True)])
-
-    def classify(raw: bytes):
-        """(media_type, (h, w) or None) from format headers only."""
-        dims = image_dimensions(raw)
-        if dims:
-            return "image", dims
-        if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-            return "audio", None
-        if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-            from ..sources.avi_mini import probe_avi
-
-            p = probe_avi(raw)
-            return "video", (p[0], p[1]) if p else None
-        return "binary", None
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            metas = []
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    metas.append(None)
-                    continue
-                raw = bytes(payload)
-                mtype, dims = classify(raw)
-                metas.append(
-                    {
-                        "media_type": mtype,
-                        "byte_len": len(raw),
-                        "digest": hashlib.md5(raw).hexdigest(),
-                        "width": dims[1] if dims else None,
-                        "height": dims[0] if dims else None,
-                    }
-                )
-            out = pdf.copy()
-            out[out_col] = metas
-            yield out
-
-    return df.mapInPandas(gen, schema=schema)
+    headers — one Arrow stage, header parse only (no pixel decode), so
+    the per-row cost is O(header) not O(pixels)."""
+    return map_pages(
+        df, lambda p: [(_media_meta(p),)], [payload_col],
+        [StructField(out_col, MEDIA_META, True)], keep=df.columns,
+    )
 
 
 def _fake_decode(payload: bytes):
@@ -473,29 +467,24 @@ IMAGE_FEATURES = StructType(
 )
 
 
+def _image_features(payload):
+    """One payload → the ``IMAGE_FEATURES`` dict (None for NULL)."""
+    if payload is None:
+        return None
+    h, w, vec = decode_image(payload)
+    return {"height": h, "width": w, "features": vec}
+
+
 def extract_image_features(
     df: DataFrame, payload_col: str = "payload", out_col: str = "img"
 ) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads — the batch
-    shape (Arrow chunks of ~2k rows, one python worker per core) is the
-    production layout for decode-heavy stages."""
-    passthrough = df.schema.fields
-    schema = StructType(list(passthrough) + [StructField(out_col, IMAGE_FEATURES, True)])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    feats.append(None)
-                    continue
-                h, w, vec = decode_image(bytes(payload))
-                feats.append({"height": h, "width": w, "features": vec})
-            out = pdf.copy()
-            out[out_col] = feats
-            yield out
-
-    return df.mapInPandas(gen, schema=schema)
+    """Feature extraction over binary payloads in one Arrow stage — the
+    batch shape (Arrow chunks of ~2k rows, one python worker per core)
+    is the production layout for decode-heavy stages."""
+    return map_pages(
+        df, lambda p: [(_image_features(p),)], [payload_col],
+        [StructField(out_col, IMAGE_FEATURES, True)], keep=df.columns,
+    )
 
 
 def warp_perspective(
@@ -545,6 +534,48 @@ CROP_SCHEMA_FIELDS = [
 ]
 
 
+def _crop_block(arr: np.ndarray, bd: dict) -> np.ndarray:
+    """One block dict → its crop of ``arr`` (see ``crop_image_blocks``)."""
+    h, w = arr.shape[:2]
+    pts = bd.get("points")
+    crop = None
+    if (
+        bd.get("block_type") == "quadrilateral"
+        and pts is not None
+        and len(pts) == 8
+    ):
+        from ..functions.perspective import (
+            _mapped_rectangle_points,
+            get_perspective_matrix,
+        )
+
+        qpts = np.asarray(pts, dtype="float64").reshape(4, 2)
+        xs, ys = qpts[:, 0], qpts[:, 1]
+        qw = float(xs.max() - xs.min())
+        qh = float(ys.max() - ys.min())
+        try:
+            dst = _mapped_rectangle_points(qpts, qw, qh)
+            M = get_perspective_matrix(qpts, dst)
+            if int(qw) > 0 and int(qh) > 0:
+                crop = warp_perspective(arr, M, int(qw), int(qh))
+            else:
+                crop = arr[0:0, 0:0]
+        except np.linalg.LinAlgError:
+            crop = None  # degenerate quad → bbox below
+        x1, y1, x2, y2 = xs.min(), ys.min(), xs.max(), ys.max()
+    else:
+        x1, y1 = bd.get("x_1") or 0, bd.get("y_1") or 0
+        x2, y2 = bd.get("x_2") or 0, bd.get("y_2") or 0
+    if crop is None:
+        # reference slices with raw int() coords; numpy clamps
+        # negative/overflow indices like cv2 images
+        crop = arr[
+            max(0, int(y1)) : max(0, min(h, int(y2))),
+            max(0, int(x1)) : max(0, min(w, int(x2))),
+        ]
+    return crop
+
+
 def crop_image_blocks(
     df: DataFrame,
     payload_col: str = "payload",
@@ -561,7 +592,7 @@ def crop_image_blocks(
     One output row per (document, block), cropped pixels re-encoded as
     ``encode_fmt`` ('ppm' exact, or 'jpeg' quality-85 for the compact
     form a training pipeline stores); decode+crop+encode run inside one
-    mapInPandas stage."""
+    Arrow stage.  An undecodable payload emits no row."""
     if encode_fmt not in ("ppm", "jpeg"):
         raise ValueError(f"encode_fmt must be 'ppm' or 'jpeg', got {encode_fmt!r}")
     if encode_fmt == "jpeg":
@@ -570,79 +601,21 @@ def crop_image_blocks(
         enc = lambda a: encode_jpeg(a, quality=85)  # noqa: E731
     else:
         enc = encode_ppm
-    key_fields = [df.schema[c] for c in key_cols]
-    schema = StructType(list(key_fields) + CROP_SCHEMA_FIELDS)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                payload = row[payload_col]
-                arr = decode_pixels(bytes(payload)) if payload is not None else None
-                if arr is None:
-                    continue
-                h, w = arr.shape[:2]
-                blks = row[blocks_col]
-                if blks is None:  # Arrow hands lists back as ndarrays —
-                    blks = []     # no implicit truthiness
-                for b in blks:
-                    bd = b if isinstance(b, dict) else b.asDict()
-                    pts = bd.get("points")
-                    crop = None
-                    if (
-                        bd.get("block_type") == "quadrilateral"
-                        and pts is not None
-                        and len(pts) == 8
-                    ):
-                        from ..functions.perspective import (
-                            _mapped_rectangle_points,
-                            get_perspective_matrix,
-                        )
+    def kernel(payload, blocks):
+        arr = decode_pixels(payload)
+        if arr is None:
+            return []
+        crops = ((bd.get("id"), _crop_block(arr, bd)) for bd in blocks or [])
+        return [
+            (bid, int(c.shape[1]), int(c.shape[0]), enc(c) if c.size else None)
+            for bid, c in crops
+        ]
 
-                        qpts = np.asarray(pts, dtype="float64").reshape(4, 2)
-                        xs, ys = qpts[:, 0], qpts[:, 1]
-                        qw = float(xs.max() - xs.min())
-                        qh = float(ys.max() - ys.min())
-                        try:
-                            dst = _mapped_rectangle_points(qpts, qw, qh)
-                            M = get_perspective_matrix(qpts, dst)
-                            if int(qw) > 0 and int(qh) > 0:
-                                crop = warp_perspective(
-                                    arr, M, int(qw), int(qh)
-                                )
-                            else:
-                                crop = arr[0:0, 0:0]
-                        except np.linalg.LinAlgError:
-                            crop = None  # degenerate quad → bbox below
-                        x1, y1, x2, y2 = (
-                            xs.min(), ys.min(), xs.max(), ys.max()
-                        )
-                    else:
-                        x1, y1 = bd.get("x_1") or 0, bd.get("y_1") or 0
-                        x2, y2 = bd.get("x_2") or 0, bd.get("y_2") or 0
-                    if crop is None:
-                        # reference slices with raw int() coords; numpy
-                        # clamps negative/overflow indices like cv2 images
-                        crop = arr[
-                            max(0, int(y1)) : max(0, min(h, int(y2))),
-                            max(0, int(x1)) : max(0, min(w, int(x2))),
-                        ]
-                    recs.append(
-                        tuple(row[c] for c in key_cols)
-                        + (
-                            bd.get("id"),
-                            int(crop.shape[1]),
-                            int(crop.shape[0]),
-                            enc(crop) if crop.size else None,
-                        )
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=list(key_cols)
-                + ["block_id", "crop_w", "crop_h", "crop"],
-            )
-
-    return df.mapInPandas(gen, schema=schema)
+    return map_pages(
+        df, kernel, [payload_col, blocks_col], CROP_SCHEMA_FIELDS,
+        keep=key_cols,
+    )
 
 
 FRAME_SAMPLE_FIELDS = [
@@ -654,6 +627,40 @@ FRAME_SAMPLE_FIELDS = [
 ]
 
 
+def frame_source(payload: bytes):
+    """(n_frames, get(i) -> (pixels|None, ts_s|None)) for an animated
+    GIF or MJPEG-AVI payload, or None for anything else.  Only the
+    frames asked for are decoded (AVI frames are independent JPEGs; GIF
+    frames composite, so the canvas chain is materialized)."""
+    from ..sources.avi_mini import decode_avi_frames
+    from ..sources.gif_mini import decode_gif_frames
+    from ..sources.jpeg_mini import decode_jpeg
+
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        dec = decode_gif_frames(payload)
+        if dec is None:
+            return None
+        frames, delays = dec
+        ts = np.concatenate([[0.0], np.cumsum(delays)[:-1]])
+        return len(frames), lambda i: (frames[i], float(ts[i]))
+    dec = decode_avi_frames(payload)
+    if dec is None:
+        return None
+    fps, jpegs = dec
+    return len(jpegs), lambda i: (
+        decode_jpeg(jpegs[i]),
+        (i / fps) if fps else None,
+    )
+
+
+def sample_indices(total: int, n_frames: int) -> list:
+    """``min(n_frames, total)`` evenly spaced frame indices over
+    ``total`` frames, first and last included, duplicates dropped."""
+    k = min(n_frames, total)
+    idxs = (round(i * (total - 1) / max(1, k - 1)) for i in range(k))
+    return list(dict.fromkeys(idxs))
+
+
 def sample_video_frames(
     df: DataFrame,
     payload_col: str = "payload",
@@ -661,87 +668,47 @@ def sample_video_frames(
     key_cols: tuple = ("url",),
 ) -> DataFrame:
     """REAL frame sampling for MJPEG-AVI and animated-GIF payloads: walk
-    the container, pick ``n_frames`` evenly spaced frames, decode only
-    what the sample needs (AVI frames are independent JPEGs; GIF frames
-    composite so the canvas chain is materialized), and emit one row per
+    the container (``frame_source``), pick ``n_frames`` evenly spaced
+    frames, decode only what the sample needs, and emit one row per
     sampled frame with dims + the 16-bin luminance histogram.  Other
     codecs produce no rows (callers keep the digest-based
     ``sample_frames`` as the opaque fallback).  The explode shape (one
     input row → k frame rows) and the decode-inside-the-Arrow-stage rule
     are the production layout for video at scale."""
-    from ..sources.avi_mini import decode_avi_frames
-    from ..sources.gif_mini import decode_gif_frames
-    from ..sources.jpeg_mini import decode_jpeg
 
-    key_fields = [df.schema[c] for c in key_cols]
-    schema = StructType(list(key_fields) + FRAME_SAMPLE_FIELDS)
-
-    def frame_source(payload: bytes):
-        """(n_frames, get(i) -> (pixels|None, ts_s|None)) for any
-        supported animated container."""
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            dec = decode_gif_frames(payload)
-            if dec is None:
-                return None
-            frames, delays = dec
-            ts = np.concatenate([[0.0], np.cumsum(delays)[:-1]])
-            return len(frames), lambda i: (frames[i], float(ts[i]))
-        dec = decode_avi_frames(payload)
-        if dec is None:
-            return None
-        fps, jpegs = dec
-        return len(jpegs), lambda i: (
-            decode_jpeg(jpegs[i]),
-            (i / fps) if fps else None,
-        )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                payload = row[payload_col]
-                src = (
-                    frame_source(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if src is None or src[0] == 0:
-                    continue
-                total, get = src
-                k = min(n_frames, total)
-                idxs = [
-                    round(i * (total - 1) / max(1, k - 1)) for i in range(k)
-                ]
-                for fi in dict.fromkeys(idxs):  # dedupe, keep order
-                    arr, ts_s = get(fi)
-                    if arr is None:
-                        continue
-                    lum = (
-                        0.299 * arr[:, :, 0]
-                        + 0.587 * arr[:, :, 1]
-                        + 0.114 * arr[:, :, 2]
-                    ).astype(np.uint8)
-                    hist = np.bincount(
-                        lum.reshape(-1) >> 4, minlength=16
-                    ).astype("float64")
-                    hist /= max(1.0, hist.sum())
-                    recs.append(
-                        tuple(row[c] for c in key_cols)
-                        + (
-                            int(fi),
-                            ts_s,
-                            int(arr.shape[0]),
-                            int(arr.shape[1]),
-                            [float(v) for v in hist],
-                        )
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=list(key_cols)
-                + ["frame_idx", "ts_s", "height", "width", "features"],
+    def kernel(payload):
+        src = None if payload is None else frame_source(payload)
+        if src is None:
+            return []
+        total, get = src
+        rows = []
+        for fi in sample_indices(total, n_frames):
+            arr, ts_s = get(fi)
+            if arr is None:
+                continue
+            lum = (
+                0.299 * arr[:, :, 0]
+                + 0.587 * arr[:, :, 1]
+                + 0.114 * arr[:, :, 2]
+            ).astype(np.uint8)
+            hist = np.bincount(lum.reshape(-1) >> 4, minlength=16).astype(
+                "float64"
             )
+            hist /= max(1.0, hist.sum())
+            rows.append(
+                (
+                    int(fi),
+                    ts_s,
+                    int(arr.shape[0]),
+                    int(arr.shape[1]),
+                    [float(v) for v in hist],
+                )
+            )
+        return rows
 
-    return df.mapInPandas(gen, schema=schema)
+    return map_pages(
+        df, kernel, [payload_col], FRAME_SAMPLE_FIELDS, keep=key_cols
+    )
 
 
 def sample_frames(

@@ -3,13 +3,13 @@
 
 The reference's ``TesseractAgent._detect`` shells out through pytesseract
 (``image_to_string`` / ``image_to_data``) per image and parses the TSV
-into a pandas frame.  The engine-side equivalent is a **mapInPandas
-stage**: each Arrow batch of (doc keys…, image bytes) rows spawns the
-``tesseract`` binary once per image (``tesseract stdin stdout … tsv``,
-the pipe form — no temp files) and parses the TSV into the token-table
-contract that ``ocr_agg.gather_data`` consumes.  The subprocess cost is
-the OCR inference itself — the Python island is exactly the acquisition
-boundary, everything downstream stays columnar.
+into a pandas frame.  The engine-side equivalent is one **Arrow
+stage** (``transport.map_pages``): each Arrow batch of (doc keys…, image
+bytes) rows spawns the ``tesseract`` binary once per image (``tesseract
+stdin stdout … tsv``, the pipe form — no temp files) and parses the TSV
+into the token-table contract that ``ocr_agg.gather_data`` consumes.
+The subprocess cost is the OCR inference itself — the Python island is
+exactly the acquisition boundary, everything downstream stays columnar.
 
 GATING: the binary is resolved at plan-build time (explicit
 ``tesseract_cmd`` arg → ``LP_SPARK_TESSERACT`` env var → ``shutil.which``)
@@ -35,6 +35,9 @@ import shutil
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField
+
+from ..transport import map_pages
 
 #: token-table columns produced per image (matches the Tesseract TSV
 #: header plus the engine's row-order column ``pos``)
@@ -121,55 +124,42 @@ def tesseract_acquire(
     )
     argv = [cmd, "stdin", "stdout", "-l", lang, *extra_args, "tsv"]
     # plan-build-time validation: a doc_cols name missing from the input
-    # would otherwise be silently dropped from the mapInPandas schema and
-    # only surface as an opaque Arrow column-count mismatch at task time
-    fields = {f.name: f for f in pages.schema}
-    missing = [c for c in doc_cols if c not in fields]
+    # must fail here, not as an opaque error at task time
+    names = set(pages.columns)
+    missing = [c for c in doc_cols if c not in names]
     if missing:
         raise ValueError(
             f"tesseract_acquire: doc_cols {missing} not in input schema "
-            f"(have: {sorted(fields)})"
+            f"(have: {sorted(names)})"
         )
-    key_types = ", ".join(
-        f"{c} {fields[c].dataType.simpleString()}" for c in doc_cols
-    )
-    schema = (
-        f"{key_types}, "
-        + ", ".join(f"{c} long" for c in TSV_COLS)
-        + ", conf double, text string, pos long"
-    )
-    out_cols = list(doc_cols) + TSV_COLS + ["conf", "text", "pos"]
+    out_cols = TSV_COLS + ["conf", "text", "pos"]
+    fields = [StructField(c, LongType(), True) for c in TSV_COLS] + [
+        StructField("conf", DoubleType(), True),
+        StructField("text", StringType(), True),
+        StructField("pos", LongType(), True),
+    ]
 
-    def kernel(batches):
+    def kernel(img):
         import subprocess
 
-        import pandas as pd
+        if img is None:
+            return []
+        try:
+            proc = subprocess.run(
+                argv,
+                input=img,
+                capture_output=True,
+                timeout=timeout_sec,
+                check=True,
+            )
+            toks = parse_tesseract_tsv(
+                proc.stdout.decode("utf-8", errors="replace")
+            )
+        except Exception:
+            return []  # per-image acquisition loss, not job-fatal
+        toks = toks[out_cols].astype(object)
+        return list(
+            toks.where(toks.notna(), None).itertuples(index=False, name=None)
+        )
 
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                img = row[image_col]
-                if img is None:
-                    continue
-                try:
-                    proc = subprocess.run(
-                        argv,
-                        input=bytes(img),
-                        capture_output=True,
-                        timeout=timeout_sec,
-                        check=True,
-                    )
-                    toks = parse_tesseract_tsv(
-                        proc.stdout.decode("utf-8", errors="replace")
-                    )
-                except Exception:
-                    continue  # per-image acquisition loss, not job-fatal
-                for c in doc_cols:
-                    toks[c] = row[c]
-                frames.append(toks[out_cols])
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return pages.select(*doc_cols, image_col).mapInPandas(
-        kernel, schema=schema
-    )
+    return map_pages(pages, kernel, [image_col], fields, keep=doc_cols)

@@ -9,8 +9,9 @@ come from an equi-join, never a cross join.
 
 pHash recipe (public, standard): luminance → 32×32 box-mean resample
 (integral image) → 2-D DCT-II → keep the low-frequency 8×8 corner →
-bit b = coefficient > median.  Decode+hash runs inside one mapInPandas
-stage; the pairing is pure DataFrame ops on 64-bit longs.
+bit b = coefficient > median.  Decode+hash runs inside one Arrow stage
+(``transport.map_pages``); the pairing is pure DataFrame ops on 64-bit
+longs.
 
 Stability caveat (inherent to pHash): images whose low-frequency
 spectrum is nearly empty (flat/ultra-smooth synthetic content) leave
@@ -21,13 +22,14 @@ hamming 0–4.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField
+
+from ..transport import map_pages
 
 _N = 32
 _D32 = np.zeros((_N, _N))
@@ -85,31 +87,14 @@ def image_phash(
     no row (they can't be perceptually compared)."""
     from .multimodal import decode_pixels
 
-    key_fields = [df.schema[c] for c in key_cols]
-    schema = StructType(
-        list(key_fields) + [StructField("phash", LongType(), True)]
+    def kernel(payload):
+        arr = decode_pixels(payload)
+        return [] if arr is None else [(phash64(arr),)]
+
+    return map_pages(
+        df, kernel, [payload_col], [StructField("phash", LongType(), True)],
+        keep=key_cols,
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                payload = row[payload_col]
-                arr = (
-                    decode_pixels(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if arr is None:
-                    continue
-                recs.append(
-                    tuple(row[c] for c in key_cols) + (phash64(arr),)
-                )
-            yield pd.DataFrame(
-                recs, columns=list(key_cols) + ["phash"]
-            )
-
-    return df.mapInPandas(gen, schema=schema)
 
 
 def phash_near_dup_pairs(
@@ -212,53 +197,20 @@ def video_phash(
     from evenly-sampled frame pHashes (decode + hash in one Arrow
     stage).  Near-dup pairing: ``phash_near_dup_pairs(out,
     hash_col="vhash")``."""
-    from ..sources.avi_mini import decode_avi_frames
-    from ..sources.gif_mini import decode_gif_frames
-    from ..sources.jpeg_mini import decode_jpeg
-    from pyspark.sql.types import LongType
+    from .multimodal import frame_source, sample_indices
 
-    key_fields = [df.schema[c] for c in key_cols]
-    schema = StructType(
-        list(key_fields) + [StructField("vhash", LongType(), True)]
+    def kernel(payload):
+        src = None if payload is None else frame_source(payload)
+        if src is None:
+            return []
+        total, get = src
+        frames = (get(i)[0] for i in sample_indices(total, n_frames))
+        sig = video_phash_summary(
+            [phash64(arr) for arr in frames if arr is not None]
+        )
+        return [] if sig is None else [(sig,)]
+
+    return map_pages(
+        df, kernel, [payload_col], [StructField("vhash", LongType(), True)],
+        keep=key_cols,
     )
-
-    def frame_pixels(payload):
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            dec = decode_gif_frames(payload)
-            return None if dec is None else dec[0]
-        dec = decode_avi_frames(payload)
-        if dec is None:
-            return None
-        return [decode_jpeg(j) for j in dec[1]]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for _, row in pdf.iterrows():
-                payload = row[payload_col]
-                frames = (
-                    frame_pixels(bytes(payload))
-                    if payload is not None
-                    else None
-                )
-                if not frames:
-                    continue
-                k = min(n_frames, len(frames))
-                idxs = sorted(
-                    set(
-                        round(i * (len(frames) - 1) / max(1, k - 1))
-                        for i in range(k)
-                    )
-                )
-                hashes = [
-                    phash64(frames[i])
-                    for i in idxs
-                    if frames[i] is not None
-                ]
-                sig = video_phash_summary(hashes)
-                if sig is None:
-                    continue
-                recs.append(tuple(row[c] for c in key_cols) + (sig,))
-            yield pd.DataFrame(recs, columns=list(key_cols) + ["vhash"])
-
-    return df.mapInPandas(gen, schema=schema)

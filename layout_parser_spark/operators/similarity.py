@@ -358,13 +358,18 @@ def ivf_topk(
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF ANN: coarse centroids are either supplied (``kmeans_centroids``
-    for trained lists), or default to the NLIST smallest-id vectors
-    (k-means-free, deterministic).  Every vector is assigned to its
-    nearest centroid (broadcast argmax fold); each query probes its
-    NPROBE nearest lists.  Exact cosine re-rank within probed lists."""
+    for trained lists), or default to the NLIST smallest-id non-NULL
+    vectors (k-means-free, deterministic; the rule of ``lloyd``'s init —
+    a NULL centroid would match nothing and lose its list).  Every
+    vector is assigned to its nearest centroid (broadcast argmax fold);
+    each query probes its NPROBE nearest lists.  Exact cosine re-rank
+    within probed lists."""
     if centroids is None:
-        centroids = vectors.orderBy(id_col).limit(nlist).select(
-            F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
+        centroids = (
+            vectors.where(F.col(vec_col).isNotNull())
+            .orderBy(id_col)
+            .limit(nlist)
+            .select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
         )
     assigned = assign_to_centroids(vectors, centroids, id_col, vec_col)
     # queries probe nprobe nearest lists

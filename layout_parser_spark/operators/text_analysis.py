@@ -87,24 +87,16 @@ def _lang_id_cascade(ratio_cols: "dict[str, Column]") -> Column:
     return F.when(best["r"] > 0, best["l"]).otherwise(F.lit("und"))
 
 
-def lang_id(text: Column) -> Column:
-    """Heuristic language ID: argmax of per-language stopword ratios, ties
-    broken by language code order; 'und' when all ratios are 0.
-
-    NB: as a single Column the WHEN/THEN cascade re-references the
-    counting pass twice and codegen does not CSE it (measured 2x) —
-    volume paths should use ``with_lang_id`` which stages the counts in
-    their own projection."""
-    return _lang_id_cascade(
-        {lang: stopword_ratio(text, lang) for lang in STOPWORDS}
-    )
-
-
 def with_lang_id(df, text_col: str = "text", out_col: str = "pred_lang"):
-    """``lang_id`` with the per-language stopword counts staged through
-    their own projection, so each counting pass runs ONCE per row
-    (CollapseProject keeps the stage because the counts are non-cheap
-    and multiply referenced).  Value-identical to ``lang_id``."""
+    """Heuristic language ID into ``out_col``: argmax of per-language
+    stopword ratios, ties broken by language code order; 'und' when all
+    ratios are 0.
+
+    The per-language stopword counts are staged through their own
+    projection, so each counting pass runs ONCE per row (CollapseProject
+    keeps the stage because the counts are non-cheap and multiply
+    referenced); the same cascade over inline ratios would re-reference
+    each counting pass twice, and codegen does not CSE it (measured 2x)."""
     padded = _space_doubled(F.col(text_col))
     n_toks = (
         F.length(text_col)
@@ -423,12 +415,12 @@ def hashed_linear_score(
     Scale shape: explode + map-side lookup + hash aggregate on the doc
     id; weight vectors up to ~10^6 dims fit comfortably as a broadcast
     literal."""
-    import numpy as np
-
     from .dedup import md5_lane60
 
-    # one py4j call for the whole literal, not one per weight
-    W = F.lit(np.array(model_weights(dim, seed), dtype=np.int32))
+    # the weights as ONE parsed SQL literal, i.e. one py4j call: F.lit of
+    # a numpy array sets each element through its own py4j call (~2,000
+    # calls per build at dim 1024)
+    W = F.expr(f"array({', '.join(map(str, model_weights(dim, seed)))})")
     toksd = df.select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks")
     )

@@ -5,7 +5,7 @@ repartition):
 
 1. [optional] salted repartition ``pmod(xxhash64(url, salt), S)`` — defuses
    host-level skew before the Arrow stage (BASELINE.json north_rule).
-2. one ``mapInArrow`` kernel (``segment.map_pages``) that, per page, runs
+2. one ``mapInArrow`` kernel (``transport.map_pages``) that, per page, runs
    a. segment: html → page size + flat block arrays
       (``segment.parse_page_arrays``);
    b. boilerplate drop (``keep_block``):
@@ -42,8 +42,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField
 
+from ..sources.charset import decode_payload
+from ..transport import map_pages
 from .reading_order import join_in_reading_order
-from .segment import map_pages, parse_page_arrays
+from .segment import parse_page_arrays
 
 #: types that the boilerplate stage drops outright (figures go too, and
 #: so do the blocks centred inside a figure)
@@ -120,8 +122,10 @@ def drop_boilerplate(df: DataFrame) -> DataFrame:
     return df.withColumn("main_blocks", main)
 
 
-def _extract_page(html: str):
-    """One page → (extracted_text, n_blocks)."""
+def _extract_page(payload):
+    """One html payload (NULL reads as the empty page) → one row
+    (extracted_text, n_blocks)."""
+    html = "" if payload is None else decode_payload(payload)
     w, h, (x1, y1, x2, y2, texts, types, _, scores) = parse_page_arrays(html)
     boxes = list(zip(x1, y1, x2, y2))
     figures = [b for b, t in zip(boxes, types) if t == "Figure"]
@@ -131,7 +135,7 @@ def _extract_page(html: str):
         if keep_block(b, t, s, figures, w, h)
     ]
     cols = ([a[i] for i in kept] for a in (x1, y1, x2, y2, texts))
-    return join_in_reading_order(*cols), len(kept)
+    return [(join_in_reading_order(*cols), len(kept))]
 
 
 _EXTRACT_FIELDS = [
@@ -162,4 +166,4 @@ def extract_main_text(
                 F.lit(salt_partitions),
             ),
         )
-    return map_pages(df, _extract_page, _EXTRACT_FIELDS)
+    return map_pages(df, _extract_page, ["html"], _EXTRACT_FIELDS)

@@ -23,11 +23,10 @@ A ``data-box`` that is not 4 finite numbers opens no block, and a
 ``data-w``/``data-h`` that is not a finite number reads as 0.0: crawled
 html is outside input, and one bad attribute must not fail a Spark task.
 
-``map_pages`` is the one Arrow transport of the page kernels: one
-``mapInArrow`` stage (per-row python inside an Arrow batch — the
-sanctioned vectorized pattern; never a row-at-a-time Spark UDF), shared by
-``segment_pages_arrays`` here and the extraction kernel in
-plans/extract.py.
+The page kernels — ``segment_pages_arrays`` here and the extraction
+kernel in plans/extract.py — cross Arrow through ``transport.map_pages``,
+the engine's one ``mapInArrow`` stage for per-row Python; each kernel
+decodes its own payload (``decode_payload``).
 """
 
 from __future__ import annotations
@@ -43,11 +42,11 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..schema import FIELD_NAMES
 from ..sources.charset import decode_payload
+from ..transport import map_pages
 
 TAG_TYPE = {
     "header": "Header",
@@ -334,44 +333,13 @@ _SEGMENT_FIELDS = [
 ] + [StructField(n, ArrayType(t)) for n, t in _ARRAY_COLS]
 
 
-def map_pages(pages_df, page_fn, fields, html_col: str = "html") -> "DataFrame":
-    """One narrow ``mapInArrow`` stage over pages: decode each
-    ``html_col`` payload (``decode_payload``; NULL reads as the empty
-    page), call ``page_fn(html)`` → one value per field of ``fields``, and
-    emit every other input column unchanged plus ``fields``.  The fat
-    html column is dropped AT the Arrow boundary.
-
-    Why ``mapInArrow`` rather than ``mapInPandas`` (r5): the output
-    lists cross to the JVM as directly-built ``pyarrow`` arrays instead
-    of pandas object columns (which pay a per-row python-object→Arrow
-    conversion) — measured 18% off the whole segmentation stage at
-    sf0.1, bit-identical output."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    passthrough = [f for f in pages_df.schema.fields if f.name != html_col]
-    schema = StructType(passthrough + list(fields))
-    names = schema.fieldNames()
-    pa_types = [to_arrow_type(f.dataType) for f in fields]
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            rows = [
-                page_fn("" if p is None else decode_payload(p))
-                for p in b.column(html_col).to_pylist()
-            ]
-            cols = list(zip(*rows)) or [()] * len(pa_types)
-            arrays = [b.column(f.name) for f in passthrough]
-            arrays += [pa.array(c, t) for c, t in zip(cols, pa_types)]
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return pages_df.mapInArrow(gen, schema=schema)
-
-
-def _segment_page(html: str):
-    w, h, arrays = parse_page_arrays(html)
-    return (w, h, *arrays)
+def _segment_page(payload):
+    """One html payload (NULL reads as the empty page) → one row of
+    ``_SEGMENT_FIELDS``."""
+    w, h, arrays = parse_page_arrays(
+        "" if payload is None else decode_payload(payload)
+    )
+    return [(w, h, *arrays)]
 
 
 def segment_pages_arrays(pages_df, html_col: str = "html") -> "DataFrame":
@@ -383,7 +351,7 @@ def segment_pages_arrays(pages_df, html_col: str = "html") -> "DataFrame":
     itself at scale (~5M dict objects per 400k docs).  Primitive lists
     convert near-memcpy-fast; the TEXTBLOCK structs are then assembled
     JVM-side by ``attach_blocks`` inside whole-stage codegen."""
-    return map_pages(pages_df, _segment_page, _SEGMENT_FIELDS, html_col)
+    return map_pages(pages_df, _segment_page, [html_col], _SEGMENT_FIELDS)
 
 
 def attach_blocks(df) -> "DataFrame":

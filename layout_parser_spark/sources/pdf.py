@@ -17,19 +17,19 @@ tests/test_pdf.py.
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
+    BinaryType,
     IntegerType,
     StructField,
     StructType,
 )
 
-from ..schema import FIELD_NAMES, LAYOUT, PAGE_DATA, TEXTBLOCK
+from ..schema import FIELD_NAMES, LAYOUT, PAGE_DATA
+from ..transport import map_pages
 
 try:
     import pdfplumber  # noqa: F401
@@ -115,6 +115,43 @@ PDF_PAGES_SCHEMA = StructType(
     ]
 )
 
+#: the rendered-page columns ``load_pdf_pages_with_images`` adds
+_IMAGE_FIELDS = [
+    StructField("image", BinaryType(), True),
+    StructField("image_w", IntegerType(), True),
+    StructField("image_h", IntegerType(), True),
+]
+
+
+def _pdf_page_rows(extract, renderer=None, dpi: int = 72):
+    """The one PDF page loop: a kernel mapping one payload to a
+    (page_data, blocks) row per page, plus (image, image_w, image_h)
+    when ``renderer`` is given.  A NULL or malformed PDF (non-dict page
+    node, non-numeric MediaBox, truncated xref …) yields no rows for
+    that document instead of killing the whole task; a renderer that
+    raises leaves that page's image columns NULL."""
+
+    def kernel(payload):
+        if payload is None:
+            return []
+        try:
+            pages = extract(payload)
+        except Exception:
+            return []
+        rows = []
+        for idx, w, h, blocks in pages:
+            row = ({"width": w, "height": h, "index": idx}, blocks)
+            if renderer is not None:
+                try:
+                    img, iw, ih = renderer(payload, idx, w, h, dpi)
+                except Exception:
+                    img, iw, ih = None, None, None
+                row += (img, iw, ih)
+            rows.append(row)
+        return rows
+
+    return kernel
+
 
 def load_pdf_pages(
     df: DataFrame,
@@ -126,43 +163,10 @@ def load_pdf_pages(
     blocks) — the distributed ``lp.load_pdf``.  ``extractor`` defaults to
     the pdfplumber path; tests inject a deterministic fake with the same
     signature."""
-    extract = extractor or extract_pdf_pages
-    key_fields = [df.schema[c] for c in key_cols]
-    schema = StructType(
-        list(key_fields)
-        + [
-            StructField("page_data", PAGE_DATA, True),
-            StructField("blocks", LAYOUT["blocks"].dataType, True),
-        ]
+    kernel = _pdf_page_rows(extractor or extract_pdf_pages)
+    return map_pages(
+        df, kernel, [payload_col], PDF_PAGES_SCHEMA.fields, keep=key_cols
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            recs = []
-            for _, row in pdf_batch.iterrows():
-                payload = row[payload_col]
-                if payload is None:
-                    continue
-                # Choke point: a malformed PDF (non-dict page node,
-                # non-numeric MediaBox, truncated xref …) yields no rows
-                # for that document instead of killing the whole task.
-                try:
-                    pages = extract(bytes(payload))
-                except Exception:
-                    continue
-                for idx, w, h, blocks in pages:
-                    recs.append(
-                        tuple(row[c] for c in key_cols)
-                        + (
-                            {"width": w, "height": h, "index": idx},
-                            blocks,
-                        )
-                    )
-            yield pd.DataFrame(
-                recs, columns=list(key_cols) + ["page_data", "blocks"]
-            )
-
-    return df.mapInPandas(gen, schema=schema)
 
 
 def synthetic_page_renderer(payload: bytes, page_index: int,
@@ -207,11 +211,8 @@ def load_pdf_pages_with_images(
     pdf2image when importable (reference-exact), else the deterministic
     synthetic raster above — either way the (payload, page_index, w, h,
     dpi) → (png/ppm bytes, iw, ih) contract is identical."""
-    from pyspark.sql.types import BinaryType, IntegerType
-
     from ..functions.transforms import scale as scale_block
 
-    extract = extractor or extract_pdf_pages
     if renderer is None:
         try:
             import pdf2image  # noqa: F401
@@ -229,48 +230,11 @@ def load_pdf_pages_with_images(
         except ImportError:
             renderer = synthetic_page_renderer
 
-    key_fields = [df.schema[c] for c in key_cols]
-    schema = StructType(
-        list(key_fields)
-        + [
-            StructField("page_data", PAGE_DATA, True),
-            StructField("blocks", LAYOUT["blocks"].dataType, True),
-            StructField("image", BinaryType(), True),
-            StructField("image_w", IntegerType(), True),
-            StructField("image_h", IntegerType(), True),
-        ]
+    kernel = _pdf_page_rows(extractor or extract_pdf_pages, renderer, dpi)
+    staged = map_pages(
+        df, kernel, [payload_col], PDF_PAGES_SCHEMA.fields + _IMAGE_FIELDS,
+        keep=key_cols,
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            recs = []
-            for _, row in pdf_batch.iterrows():
-                payload = row[payload_col]
-                if payload is None:
-                    continue
-                try:
-                    pages = extract(bytes(payload))
-                except Exception:
-                    continue
-                for idx, w, h, blocks in pages:
-                    try:
-                        img, iw, ih = renderer(bytes(payload), idx, w, h, dpi)
-                    except Exception:
-                        img, iw, ih = None, None, None
-                    recs.append(
-                        tuple(row[c] for c in key_cols)
-                        + (
-                            {"width": w, "height": h, "index": idx},
-                            blocks, img, iw, ih,
-                        )
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=list(key_cols)
-                + ["page_data", "blocks", "image", "image_w", "image_h"],
-            )
-
-    staged = df.mapInPandas(gen, schema=schema)
     # JVM-side rescale: only when dims differ (io/pdf.py:216-223).
     # _needs/_sx/_sy are STAGED as columns before the projection that
     # re-aliases "page_data": referencing F.col("page_data") in a later

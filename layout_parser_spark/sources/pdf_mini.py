@@ -277,7 +277,7 @@ class MiniPdf:
 
         # Iterative walk with a visited set: cyclic /Kids graphs and
         # non-dict page-tree nodes must not recurse forever or raise out
-        # of the mapInPandas stage on untrusted bytes.
+        # of the PDF Arrow stage on untrusted bytes.
         seen_ids = set()
 
         def walk(node, inherited):

@@ -14,25 +14,39 @@ optionally gzip-compressed PER RECORD and concatenated (the standard
 HTTP response (status line + headers + body) as payload.
 
 Distributed shape: one WARC file per task via the binaryFile source →
-mapInPandas parses records and emits the input_hint columns
-(url, warc_ts, html BINARY, text, lang).  WARC files are independent
-units (Common Crawl ships ~1 GB segments), so file-level parallelism is
-the natural partitioning; the html payload stays binary until the
-extraction stage's Arrow batch decodes it.
+one Arrow stage (``transport.map_pages``) parses records and emits the
+input_hint columns (url, warc_ts, html BINARY, text, lang).  WARC files
+are independent units (Common Crawl ships ~1 GB segments), so file-level
+parallelism is the natural partitioning; the html payload stays binary
+until the extraction stage's Arrow batch decodes it.
 """
 
 from __future__ import annotations
 
 import zlib
 from email.utils import parsedate_to_datetime
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    BinaryType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from ..transport import map_pages
 
 #: the input_hint pages schema
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
+PAGES_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("warc_ts", TimestampType()),
+        StructField("html", BinaryType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+    ]
 )
 
 
@@ -161,37 +175,25 @@ def read_warc(
     lang are NULL at this stage (they are extraction OUTPUTS)."""
     files = spark.read.format("binaryFile").load(path)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                # choke point: a corrupt file (bad gzip member, torn
-                # record) yields zero rows instead of aborting the job
-                try:
-                    recs = parse_warc_records(bytes(content))
-                except Exception:
-                    continue
-                for rec in recs:
-                    if rec["warc_type"] != "response":
-                        continue
-                    if only_html and rec["content_type"] and not (
-                        "html" in rec["content_type"]
-                    ):
-                        continue
-                    rows.append(
-                        (
-                            rec["target_uri"],
-                            _warc_date_to_ts(rec["date"]),
-                            rec["body"],
-                            None,
-                            None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+    def kernel(content):
+        # choke point: a corrupt file (bad gzip member, torn record)
+        # yields zero rows instead of aborting the job
+        try:
+            recs = parse_warc_records(content)
+        except Exception:
+            return []
+        return [
+            (rec["target_uri"], _warc_date_to_ts(rec["date"]), rec["body"],
+             None, None)
+            for rec in recs
+            if rec["warc_type"] == "response"
+            and not (only_html and rec["content_type"]
+                     and "html" not in rec["content_type"])
+        ]
 
-    return files.select("content").mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_pages(
+        files, kernel, ["content"], PAGES_SCHEMA.fields, keep=[]
+    )
 
 
 def write_warc_file(records: List[dict], gzip_members: bool = False) -> bytes:

@@ -5,7 +5,7 @@ the streaming shape because a Common-Crawl-style ingest IS a stream of
 WARC batches in production:
 
 * ``extract_stream`` — ``readStream`` (file source over the pages parquet
-  layout) → the SAME narrow extraction transforms (mapInPandas +
+  layout) → the SAME narrow extraction transforms (mapInArrow +
   expressions compose with streaming unchanged) → any sink.  Exactly-once
   via checkpointLocation + file-sink transaction log.
 * ``windowed_block_stats`` — an event-time windowed aggregate with a

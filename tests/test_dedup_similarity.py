@@ -827,6 +827,20 @@ def test_trained_ann_ignores_null_vectors(spark):
     assert ivf(vn, cents) == ivf(v, kmeans_centroids(v, nlist=8, dim=64, iters=3))
 
 
+def test_untrained_ivf_ignores_null_vectors(spark):
+    """The default centroids (the nlist smallest ids) skip NULL vectors
+    like ``lloyd``'s init: a NULL row with id -1 would otherwise become a
+    centroid no vector or query matches, losing one list."""
+    v, q = _ivf_inputs(spark)
+    vn = _with_null_vector(v, "vec_id", "embedding")
+
+    def ivf(v):
+        out = ivf_topk(v, q, k=5, nlist=8, nprobe=2)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert ivf(vn) == ivf(v)
+
+
 def test_scrub_pii_and_stratified_sample(spark):
     from pyspark.sql import functions as F
 

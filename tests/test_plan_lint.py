@@ -15,11 +15,8 @@ import __spark_entry__ as entry
 from bench import PLAN_SHAPE_PATTERNS, plan_shape_counts
 
 SF = "/root/testdata/sf0.001"
-PLANS_AUTO = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "BENCH",
-    "PLANS_AUTO.md",
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS_AUTO = os.path.join(REPO, "BENCH", "PLANS_AUTO.md")
 
 #: BNLJ against an O(1)-size broadcast side — benign by construction.
 BNLJ_ALLOWED = {
@@ -157,6 +154,70 @@ def test_build_job_budget(spark, name):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= BUILD_JOB_BUDGET.get(name, 0), (name, list(jobs))
+
+
+#: Arrow crossings allowed outside ``transport.map_pages``, the one
+#: transport of per-row Python kernels: (module under
+#: ``layout_parser_spark/``, top-level function) → why it keeps its own.
+#: Any other ``mapInPandas``/``mapInArrow`` call or ``iterrows`` in the
+#: package fails ``test_one_arrow_transport``.
+ARROW_TRANSPORT_EXCEPTIONS = {
+    ("operators/grouping.py", "_per_document_cca"):
+        "a per-partition kernel over whole documents: it concatenates "
+        "its partition and groups it by key, which is no per-row map",
+    ("sources/pages.py", "synth_pages"):
+        "the columnar synthetic-page generator on the benchmark's set-up "
+        "path: vectorized pandas columns, no per-row kernel",
+}
+TRANSPORT_MODULE = "transport.py"
+_CROSSINGS = ("mapInPandas", "mapInArrow", "iterrows")
+
+
+def _arrow_crossings():
+    """(module, top-level function, method) for every call of a
+    ``_CROSSINGS`` method in ``layout_parser_spark/``."""
+    import ast
+
+    pkg = os.path.join(REPO, "layout_parser_spark")
+    found = []
+    for dirpath, _, files in os.walk(pkg):
+        for fname in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for top in tree.body:
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in _CROSSINGS
+                    ):
+                        name = getattr(top, "name", "<module>")
+                        found.append((rel, name, node.func.attr))
+    return found
+
+
+def test_one_arrow_transport():
+    """Per-row Python crosses Arrow only through ``transport.map_pages``
+    (or a declared exception): a new hand-rolled batch loop fails here,
+    and so does an exception whose call is gone."""
+    found = _arrow_crossings()
+    offenders = sorted(
+        {
+            c
+            for c in found
+            if c[0] != TRANSPORT_MODULE
+            and c[:2] not in ARROW_TRANSPORT_EXCEPTIONS
+        }
+    )
+    assert offenders == [], (
+        "per-row Python outside transport.map_pages; use it, or declare "
+        f"the site in ARROW_TRANSPORT_EXCEPTIONS: {offenders}"
+    )
+    stale = set(ARROW_TRANSPORT_EXCEPTIONS) - {c[:2] for c in found}
+    assert not stale, f"declared exceptions with no crossing: {stale}"
+    assert (TRANSPORT_MODULE, "map_pages", "mapInArrow") in found
 
 
 def test_baseline_appendix_preserved_on_headline_rewrite():

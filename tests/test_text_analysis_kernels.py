@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from layout_parser_spark.operators.text_analysis import (
     STOPWORDS,
-    lang_id,
     repetition_stats,
     repetition_stats_batched,
     stopword_ratio,
@@ -96,14 +95,6 @@ def test_stopword_ratio_matches_filter_lambda(corpus):
         corpus.where(functools.reduce(lambda a, b: a | b, conds)).count()
         == 0
     )
-
-
-def test_lang_id_matches_original_cascade(corpus):
-    cmp = corpus.select(
-        _old_lang_id(F.col("text")).alias("o"),
-        lang_id(F.col("text")).alias("n"),
-    )
-    assert cmp.where(~F.col("o").eqNullSafe(F.col("n"))).count() == 0
 
 
 def test_with_lang_id_matches_column_form(corpus):
