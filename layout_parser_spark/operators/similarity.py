@@ -23,6 +23,8 @@ All distance math is columnar (no UDFs).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -229,17 +231,18 @@ def _nearest(vec: Column, book: Column, metric: str) -> Column:
 
 
 def _book_literals(model) -> "list[Column]":
-    """An (m, k, sub_dim) model as m array<array<double>> columns cut
-    from ONE literal of the flat numpy array; the optimizer folds the
-    slices to constants, so the model rides in the expression tree."""
-    import numpy as np
+    """An (m, k, sub_dim) model as m array<array<double>> columns, each
+    one parsed SQL literal: one py4j call per subspace (``F.lit`` of a
+    numpy array makes one per element), ``repr`` round-trips every
+    double, and the optimizer folds each to a constant, so the model
+    rides in the expression tree."""
 
-    m, k, sub = model.shape
-    flat = F.lit(np.ascontiguousarray(model, dtype=np.float64).ravel())
-    return [
-        F.array(*[F.slice(flat, (j * k + i) * sub + 1, sub) for i in range(k)])
-        for j in range(m)
-    ]
+    def sql(x) -> str:
+        if isinstance(x, list):
+            return f"array({', '.join(map(sql, x))})"
+        return f"{x!r}D" if math.isfinite(x) else f"double('{x}')"
+
+    return [F.expr(sql(book)) for book in model.tolist()]
 
 
 def lloyd(

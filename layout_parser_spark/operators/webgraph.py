@@ -16,9 +16,10 @@ Scale design:
   next to the edge list, and the map-side partial agg collapses each
   partition's duplicate host pairs before the exchange.
 * ``pagerank_hosts`` iterates entirely in DataFrames: per-iteration one
-  equi-join (edges ⋈ ranks on src) + one hash aggregate on dst + two
-  one-row broadcast cross-joins (node count, dangling mass).  Iteration
-  outputs are ``localCheckpoint``-ed so lineage stays constant.
+  equi-join (ranks ⋈ edges on src) + one hash aggregate on dst.  Node
+  count and dangling mass come from ``Observation``s on the checkpoint
+  jobs and ride into the next round as one literal; each round's output
+  is ``localCheckpoint``-ed so lineage stays constant.
 
 Determinism contract (the driver oracle value-matches in DuckDB): ranks
 are FIXED-POINT BIGINT micro-units (``UNIT`` = 10^12) and every division
@@ -29,7 +30,7 @@ is bounded by n_edges / UNIT per iteration (≪ 1e-6 here).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 #: fixed-point scale for PageRank ranks (micro-units of probability mass)
@@ -104,69 +105,74 @@ def pagerank_hosts(
         dangling share  = ((Σ rank_dangling) // N) * damping_pct // 100
         rank'           = base + dangling share + Σ edge contribs
 
-    Returns (host, rank_micro BIGINT) with Σ rank ≈ UNIT.  Jobs at call
-    time: the eager checkpoints (edges, initial ranks, each iteration),
-    each one job plus one per shuffle stage — 43 at 3 iterations, sf0.001
-    (the ``pagerank_hosts`` build-job budget)."""
-    # materialize the edge list once: it is joined EVERY iteration, and
-    # without this the whole upstream lineage (page render + link regex
-    # + host aggregate) re-executes per round
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    # one-row node count, broadcast everywhere a scalar N is needed —
-    # no driver-side collect
-    n_df = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("n")))
-    outw = edges.groupBy(F.col("src_host").alias("host")).agg(
-        F.sum("n_links").alias("outw")
-    )
-    ranks = nodes.crossJoin(n_df).select(
-        "host", _idiv(F.lit(PAGERANK_UNIT), F.col("n")).alias("rank")
+    Returns (host, rank_micro BIGINT) with Σ rank ≈ UNIT; an empty edge
+    list ranks no host.  Jobs at call time: the eager checkpoints (edges,
+    nodes, each iteration), each one job plus one per shuffle stage — 15
+    at 3 iterations, sf0.001 (the ``pagerank_hosts`` build-job budget)."""
+    # materialize the edge list once, out-weight attached: it is joined
+    # EVERY iteration, and without this the whole upstream lineage (page
+    # render + link regex + host aggregate) re-executes per round
+    edges = edges.withColumn(
+        "outw", F.sum("n_links").over(Window.partitionBy("src_host"))
     ).localCheckpoint(eager=True)
-
+    # a host is dangling unless it has out-links; a NULL source host
+    # matches no rank in the round's join, so its mass counts as dangling
+    seen = Observation()
+    ranks = (
+        edges.select(
+            F.col("src_host").alias("host"),
+            F.col("src_host").isNull().alias("dangling"),
+        )
+        .union(edges.select("dst_host", F.lit(True)))
+        .groupBy("host")
+        .agg(F.bool_and("dangling").alias("dangling"))
+        .observe(
+            seen,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if("dangling").alias("n_dangling"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    # N and the dangling mass are driver-side ints that ride in the plan
+    # as one literal; max(·, 1) only keeps an empty node table defined
+    m = seen.get
+    n = max(m["n"], 1)
+    share = PAGERANK_UNIT // n
+    ranks = ranks.withColumn("rank", F.lit(share).cast("long"))
+    dang = m["n_dangling"] * share
     d, rest = damping_pct, 100 - damping_pct
     for _ in range(iters):
-        r = ranks.join(outw, on="host", how="left")
-        contribs = (
-            r.where(F.col("outw").isNotNull())
-            .join(edges, on=(F.col("host") == F.col("src_host")))
-            .select(
-                F.col("dst_host").alias("host"),
-                _idiv(
-                    _idiv(F.col("rank") * F.col("n_links"), F.col("outw"))
-                    * F.lit(d),
-                    F.lit(100),
-                ).alias("c"),
-            )
-            .groupBy("host")
-            .agg(F.sum("c").alias("contrib"))
+        # a link to a NULL host reaches no node: its mass is dropped
+        contribs = ranks.join(
+            edges, F.col("host") == F.col("src_host")
+        ).where(F.col("dst_host").isNotNull()).select(
+            F.col("dst_host").alias("host"),
+            F.lit(None).alias("dangling"),
+            _idiv(
+                _idiv(F.col("rank") * F.col("n_links"), F.col("outw"))
+                * F.lit(d),
+                F.lit(100),
+            ).alias("rank"),
         )
-        dangling = F.broadcast(
-            r.where(F.col("outw").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0)).alias("dang")
-            )
-        )
+        # every node keeps a row (contribution 0), so one groupBy on the
+        # union ranks hosts that receive no links too
+        base = share * rest // 100 + dang // n * d // 100
+        seen = Observation()
         ranks = (
-            nodes.crossJoin(n_df)
-            .crossJoin(dangling)
-            .join(contribs, on="host", how="left")
-            .select(
-                "host",
-                _idiv(
-                    _idiv(F.lit(PAGERANK_UNIT), F.col("n")) * F.lit(rest),
-                    F.lit(100),
-                )
-                + _idiv(
-                    _idiv(F.col("dang"), F.col("n")) * F.lit(d), F.lit(100)
-                )
-                + F.coalesce(F.col("contrib"), F.lit(0)),
+            ranks.withColumn("rank", F.lit(0).cast("long"))
+            .union(contribs)
+            .groupBy("host")
+            .agg(
+                F.bool_or("dangling").alias("dangling"),
+                (F.lit(base) + F.sum("rank")).alias("rank"),
             )
-            .toDF("host", "rank")
+            .observe(
+                seen,
+                F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("d"),
+            )
             .localCheckpoint(eager=True)
         )
+        dang = seen.get["d"] or 0
     return ranks.select("host", F.col("rank").alias("rank_micro"))
 
 

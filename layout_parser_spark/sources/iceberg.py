@@ -20,14 +20,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: input_hint schema — the contract of the pages table
-PAGES_COLUMNS = (
-    ("url", "STRING"),
-    ("warc_ts", "TIMESTAMP"),
-    ("html", "BINARY"),
-    ("text", "STRING"),
-    ("lang", "STRING"),
+PAGES_SCHEMA = (
+    StructType().add("url", "string").add("warc_ts", "timestamp")
+    .add("html", "binary").add("text", "string").add("lang", "string")
 )
 
 
@@ -35,7 +33,9 @@ def pages_table_ddl(
     table: str, n_buckets: int = 4096, location: str | None = None
 ) -> str:
     """CREATE TABLE DDL for the bucketed Iceberg pages table."""
-    cols = ",\n  ".join(f"{n} {t}" for n, t in PAGES_COLUMNS)
+    cols = ",\n  ".join(
+        f"{f.name} {f.dataType.simpleString().upper()}" for f in PAGES_SCHEMA
+    )
     loc = f"\nLOCATION '{location}'" if location else ""
     return (
         f"CREATE TABLE IF NOT EXISTS {table} (\n  {cols}\n)\n"
@@ -104,7 +104,9 @@ def iceberg_bucket_of(url_col: str, n_buckets: int) -> Column:
 
 def read_pages(spark: SparkSession, source: str) -> DataFrame:
     """Read the pages corpus from either an Iceberg table identifier
-    (``catalog.db.table`` — no slashes) or a parquet path."""
+    (``catalog.db.table`` — no slashes) or a parquet path.  Parquet is
+    read with ``PAGES_SCHEMA`` (no schema-inference job; columns outside
+    the contract are not read)."""
     if "/" in source:
-        return spark.read.parquet(source)
+        return spark.read.schema(PAGES_SCHEMA).parquet(source)
     return spark.read.table(source)

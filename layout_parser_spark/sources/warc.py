@@ -24,30 +24,14 @@ until the extraction stage's Arrow batch decodes it.
 from __future__ import annotations
 
 import zlib
+from datetime import datetime, timezone
 from email.utils import parsedate_to_datetime
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    BinaryType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..transport import map_pages
-
-#: the input_hint pages schema
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ]
-)
+from .iceberg import PAGES_SCHEMA
 
 
 #: output ceiling for one WARC file's decompressed bytes: absolute 4 GiB
@@ -148,20 +132,21 @@ def parse_warc_records(payload: bytes) -> List[dict]:
 
 
 def _warc_date_to_ts(date: Optional[str]):
-    """WARC-Date (ISO 8601 Z) → datetime, None-safe."""
+    """WARC-Date (ISO 8601, or an RFC 2822 date) → naive UTC datetime,
+    None-safe: an offset date is converted to UTC, a date without one is
+    taken as UTC."""
     if not date:
         return None
     try:
-        from datetime import datetime
-
-        return datetime.fromisoformat(date.replace("Z", "+00:00")).replace(
-            tzinfo=None
-        )
+        ts = datetime.fromisoformat(date.replace("Z", "+00:00"))
     except ValueError:
         try:
-            return parsedate_to_datetime(date).replace(tzinfo=None)
+            ts = parsedate_to_datetime(date)
         except Exception:
             return None
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc)
+    return ts.replace(tzinfo=None)
 
 
 def read_warc(

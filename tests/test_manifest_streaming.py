@@ -132,6 +132,27 @@ def test_manifest_job_budget(spark, pages, tmp_path):
     assert rereads == []
 
 
+def test_read_pages_runs_no_job(spark, pages, tmp_path):
+    """Building ``read_pages`` on a parquet directory runs no job (the
+    contract schema replaces inference) and reads the contract columns
+    only: the fixture's doc_id is not read."""
+    from layout_parser_spark.sources.iceberg import PAGES_SCHEMA, read_pages
+
+    src = str(tmp_path / "pages")
+    pages.write.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-pages", "read-pages")
+    try:
+        got = read_pages(spark, src)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("read-pages")) == []
+    assert got.schema == PAGES_SCHEMA
+    want = spark.read.parquet(src).select(*PAGES_SCHEMA.names)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_unreadable_manifest_raises(spark, tmp_path):
     """Only a missing _manifest, or one with no manifest file, means
     "nothing done": a store that cannot be read must fail the resume, not

@@ -124,9 +124,9 @@ BUILD_JOB_BUDGET = {
     "ann_pq": 11,
     # lloyd with m = 1: the same 11 jobs
     "ann_ivf_kmeans": 11,
-    # eager localCheckpoints of the edges, the initial ranks and each of
-    # 3 iterations, with their shuffle stages; still open (ROADMAP item 3)
-    "pagerank_hosts": 43,
+    # eager localCheckpoints of the edges (out-weight window), the nodes
+    # and each of 3 iterations (join + groupBy), with their shuffle stages
+    "pagerank_hosts": 15,
     # connected_components' isEmpty probes, one per round and per final
     # jumping pass, with the stages they fill, plus minhash_lsh's 2
     "dedup_clusters": 17,

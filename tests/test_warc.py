@@ -56,6 +56,24 @@ def test_warc_skips_non_response_and_non_html():
     assert parsed[0]["warc_type"] == "request"
 
 
+def test_warc_date_offsets_read_as_utc():
+    """An offset WARC-Date is converted to UTC; a ``Z`` date and a date
+    without an offset are taken as UTC as they stand."""
+    from datetime import datetime
+
+    from layout_parser_spark.sources.warc import _warc_date_to_ts
+
+    eight = datetime(2024, 3, 1, 8, 0)
+    assert _warc_date_to_ts("2024-03-01T10:00:00+02:00") == eight
+    assert _warc_date_to_ts("Fri, 01 Mar 2024 10:00:00 +0200") == eight
+    assert _warc_date_to_ts("2024-03-01T08:00:00Z") == eight
+    assert _warc_date_to_ts("2024-03-01T08:00:00") == eight
+    assert _warc_date_to_ts("2024-03-01T00:30:00+02:00") == datetime(
+        2024, 2, 29, 22, 30
+    )
+    assert _warc_date_to_ts("not a date") is None
+
+
 def test_read_warc_to_extraction_byte_identity(spark, tmp_path):
     """End-to-end: .warc.gz files → pages table (input_hint schema) →
     extract_main_text → byte-identical text per url."""

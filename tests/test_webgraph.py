@@ -80,6 +80,75 @@ def test_pagerank_deterministic_across_runs(spark):
     assert r1 == r2
 
 
+def _pagerank_reference(edges, iters, damping_pct):
+    """The docstring's fixed-point update in plain Python, integer //.
+    A NULL (None) host is a node that no link leaves or reaches, as in
+    SQL joins: it is dangling, and links to it carry no mass."""
+    nodes = {s for s, _, _ in edges} | {t for _, t, _ in edges}
+    outw = {}
+    for s, _, w in edges:
+        if s is not None:
+            outw[s] = outw.get(s, 0) + w
+    n = len(nodes)
+    rank = {h: PAGERANK_UNIT // n for h in nodes}
+    for _ in range(iters):
+        dang = sum(r for h, r in rank.items() if h not in outw)
+        base = (PAGERANK_UNIT // n) * (100 - damping_pct) // 100 + (
+            dang // n
+        ) * damping_pct // 100
+        new = dict.fromkeys(nodes, base)
+        for s, t, w in edges:
+            if s in outw and t is not None:
+                new[t] += (rank[s] * w // outw[s]) * damping_pct // 100
+        rank = new
+    return rank
+
+
+def _pagerank_graphs():
+    """(edges, iters, damping_pct): the empty edge list, a one-edge graph,
+    a self-loop alone, two graphs with NULL hosts, then 48 seeded random
+    graphs with pure sinks, hosts that no link reaches and self-loops."""
+    import random
+
+    rng = random.Random(20261019)
+    cases = [
+        ([], 3, 85),
+        ([("a", "b", 2)], 2, 85),
+        ([("a", "a", 1)], 4, 50),
+        ([("a", "b", 1), (None, "a", 2), ("b", None, 1), ("a", None, 3)],
+         3, 85),
+        ([(None, None, 1), ("a", "b", 1)], 2, 85),
+    ]
+    for g in range(48):
+        hosts = [f"h{i}" for i in range(rng.randint(2, 9))]
+        sinks = set(rng.sample(hosts, rng.randint(0, len(hosts) - 1)))
+        pairs = {
+            (s, rng.choice(hosts))
+            for s in hosts if s not in sinks
+            for _ in range(rng.randint(1, 4))
+        }
+        if rng.random() < 0.5:
+            pairs |= {(s, s) for s in rng.sample(hosts, 1) if s not in sinks}
+        edges = [(s, t, rng.randint(1, 7)) for s, t in sorted(pairs)]
+        cases.append((edges, g % 5, rng.choice([0, 15, 50, 85, 85, 100])))
+    return cases
+
+
+def test_pagerank_matches_python_reference(spark):
+    """Ranks equal the plain-Python fixed point on every case of
+    ``_pagerank_graphs``: iters 0-4, damping 0-100, NULL hosts, the empty
+    edge list (no rows)."""
+    for edges, iters, damping in _pagerank_graphs():
+        got = {
+            r.host: r.rank_micro
+            for r in pagerank_hosts(
+                _edges(spark, edges), iters=iters, damping_pct=damping
+            ).collect()
+        }
+        want = _pagerank_reference(edges, iters, damping) if edges else {}
+        assert got == want, (edges, iters, damping)
+
+
 def test_canonicalize_url_cases(spark):
     from layout_parser_spark.operators.webgraph import canonicalize_url
 
