@@ -19,7 +19,7 @@ Design for the 10^12-doc cluster run:
   ``doc_count``/``byte_count`` are the write's own observed metrics, and
   the resume listing is one job (none before the first commit);
 * ``--salt-partitions`` applies the explicit salted repartition
-  ``pmod(xxhash64(url, salt), S)`` in front of the segmentation UDF stage
+  ``pmod(xxhash64(url, 0), S)`` in front of the segmentation UDF stage
   to spread hot hosts;
 * AQE + Arrow batch sizing come from ``session.DEFAULT_CONF`` and can be
   overridden by ``spark-submit --conf``.
@@ -51,7 +51,6 @@ def main(argv=None) -> int:
                     help="manifest/resume bucket count (match table bucketing)")
     ap.add_argument("--salt-partitions", type=int, default=None,
                     help="salted repartition width before the UDF stage")
-    ap.add_argument("--salt-round", type=int, default=0)
     ap.add_argument("--run-id", default="r0")
     ap.add_argument("--max-buckets", type=int, default=None,
                     help="process at most N pending buckets (for canaries)")
@@ -100,7 +99,6 @@ def main(argv=None) -> int:
             max_files_per_trigger=args.max_files_per_trigger,
             where=(F.col("lang") == args.lang) if args.lang else None,
             salt_partitions=args.salt_partitions,
-            salt_round=args.salt_round,
         ).select("url", "warc_ts", "lang", "extracted_text", "n_blocks")
         q = (
             out.writeStream.format("parquet")
@@ -134,7 +132,6 @@ def main(argv=None) -> int:
             corpus = extract_main_text(
                 corpus,
                 salt_partitions=args.salt_partitions,
-                salt_round=args.salt_round,
             ).select("url", "warc_ts", "lang", "extracted_text", "n_blocks")
         # materialized: the corpus write, the stats write and the collect
         # below scan it instead of re-running the funnel
@@ -200,7 +197,6 @@ def main(argv=None) -> int:
         out = extract_main_text(
             df,
             salt_partitions=args.salt_partitions,
-            salt_round=args.salt_round,
         )
         return out.select(
             "url", "warc_ts", "lang", "extracted_text", "n_blocks"

@@ -9,6 +9,11 @@ dependency here, so the 3×3 homography is solved directly as the standard
 8×8 linear system (public textbook math — identical result to
 ``cv2.getPerspectiveTransform``).  All work is numpy-vectorized inside an
 Arrow-batched pandas UDF; never per-row Python UDFs.
+
+Deviation: a degenerate ``other`` quad — its 8×8 system singular, or for
+condition_on its M singular — gives NULL points on its own row, and the
+other rows of the batch are solved as usual.  The reference raises there
+(``np.linalg.inv`` in condition_on), which in Spark would fail the task.
 """
 
 from __future__ import annotations
@@ -21,8 +26,6 @@ from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.functions import pandas_udf
 
 __all__ = [
-    "get_perspective_matrix",
-    "perspective_transform_points",
     "transform_points_quad",
     "condition_on_quad",
     "relative_to_quad",
@@ -31,66 +34,50 @@ __all__ = [
 ]
 
 
-def get_perspective_matrix(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
-    """3×3 homography M with dst ~ M @ src (homogeneous), from 4 point
-    pairs — equivalent to cv2.getPerspectiveTransform.  src/dst: (4,2)."""
-    A = np.zeros((8, 8))
-    rhs = np.zeros(8)
-    for i in range(4):
-        x, y = src[i]
-        u, v = dst[i]
-        A[2 * i] = [x, y, 1, 0, 0, 0, -u * x, -u * y]
-        A[2 * i + 1] = [0, 0, 0, x, y, 1, -v * x, -v * y]
-        rhs[2 * i] = u
-        rhs[2 * i + 1] = v
-    sol = np.linalg.solve(A, rhs)
-    return np.append(sol, 1.0).reshape(3, 3)
-
-
 def _mapped_rectangle_points(
-    points: np.ndarray, width: float, height: float
+    points: np.ndarray, width: np.ndarray, height: np.ndarray
 ) -> np.ndarray:
-    """``Quadrilateral.mapped_rectangle_points`` (layout_elements.py:907-914):
-    target rectangle corners assigned by each point's stable coordinate
-    rank (``map_to_points_ordering``, :920-931)."""
-    order = points.argsort(axis=0, kind="stable").argsort(
-        axis=0, kind="stable"
+    """``Quadrilateral.mapped_rectangle_points`` (layout_elements.py:907-914)
+    over a stack: (N,4,2) points, (N,) widths/heights → (N,4,2) target
+    rectangle corners, assigned by each point's stable coordinate rank
+    (``map_to_points_ordering``, :920-931)."""
+    order = points.argsort(axis=1, kind="stable").argsort(
+        axis=1, kind="stable"
     )
-    x_map = np.array([0.0, 0.0, width, width])
-    y_map = np.array([0.0, 0.0, height, height])
-    return np.vstack([x_map[order[:, 0]], y_map[order[:, 1]]]).T
+    far = np.stack([width, height], axis=-1)[:, None, :]
+    return np.where(order <= 1, 0.0, far)
 
 
-def perspective_transform_points(
-    self_points: np.ndarray,
-    other_points: np.ndarray,
-    other_width: float,
-    other_height: float,
-    is_inv: bool,
-) -> np.ndarray:
-    """``perspective_transformation`` (elements/utils.py:42-54) applied with
-    ``other``'s perspective matrix — the body of
-    Quadrilateral.condition_on/relative_to (layout_elements.py:946-955,
-    :972-979); is_inv=True ⇒ condition_on."""
-    dst = _mapped_rectangle_points(other_points, other_width, other_height)
-    M = get_perspective_matrix(other_points.astype("float64"), dst)
-    if is_inv:
-        M = np.linalg.inv(M)
-    src_mid = np.hstack(
-        [self_points, np.ones((self_points.shape[0], 1))]
-    ).T
-    dst_mid = M @ src_mid
-    return (dst_mid / dst_mid[-1]).T[:, :2]
-
-
-def _quad_width_height(pts: np.ndarray, w, h):
-    """Quadrilateral.height/width: user value else bbox extent
-    (layout_elements.py:838-862)."""
-    if w is None or (isinstance(w, float) and np.isnan(w)):
-        w = pts[:, 0].max() - pts[:, 0].min()
-    if h is None or (isinstance(h, float) and np.isnan(h)):
-        h = pts[:, 1].max() - pts[:, 1].min()
-    return float(w), float(h)
+def perspective_matrices(src: np.ndarray, dst: np.ndarray):
+    """(N,4,2) point pairs → ((N,3,3) homographies M with dst ~ M @ src,
+    (N,) mask of the rows solved) — ``cv2.getPerspectiveTransform`` as the
+    standard 8×8 linear system, one stacked ``np.linalg.solve`` for the
+    whole batch (~20× N per-row solves on 2k-row batches).  A row whose
+    system is singular (numerically rank-deficient: a degenerate quad with
+    collinear or repeated points) is left out of the solve and masked
+    False; its M is NaN."""
+    n = src.shape[0]
+    A = np.zeros((n, 8, 8))
+    x, y = src[:, :, 0], src[:, :, 1]
+    u, v = dst[:, :, 0], dst[:, :, 1]
+    A[:, 0::2, 0] = x
+    A[:, 0::2, 1] = y
+    A[:, 0::2, 2] = 1.0
+    A[:, 0::2, 6] = -u * x
+    A[:, 0::2, 7] = -u * y
+    A[:, 1::2, 3] = x
+    A[:, 1::2, 4] = y
+    A[:, 1::2, 5] = 1.0
+    A[:, 1::2, 6] = -v * x
+    A[:, 1::2, 7] = -v * y
+    rhs = dst.reshape(n, 8)
+    # a rank test, not LU pivots: on rank-deficient systems whether LU
+    # meets an exact zero pivot depends on rounding
+    ok = np.linalg.matrix_rank(A) == 8
+    M = np.full((n, 3, 3), np.nan)
+    M[:, 2, 2] = 1.0
+    M.reshape(n, 9)[ok, :8] = np.linalg.solve(A[ok], rhs[ok, :, None])[..., 0]
+    return M, ok
 
 
 def _batched_transform(
@@ -99,56 +86,27 @@ def _batched_transform(
     ow: np.ndarray,
     oh: np.ndarray,
     is_inv: bool,
-) -> np.ndarray:
-    """Vectorized body of perspective_transform_points over a whole Arrow
-    batch: (N,4,2) self/other point stacks → (N,4,2) transformed points.
-    One stacked ``np.linalg.solve`` on (N,8,8) replaces N per-row solves —
-    ~20× on 2k-row batches."""
-    n = spts.shape[0]
+):
+    """``perspective_transformation`` (elements/utils.py:42-54) with
+    ``other``'s perspective matrix — the body of Quadrilateral.condition_on/
+    relative_to (layout_elements.py:946-955, :972-979) — over a whole Arrow
+    batch: (N,4,2) self/other point stacks → ((N,4,2) transformed points,
+    (N,) mask of the rows transformed).  is_inv=True ⇒ condition_on, which
+    also masks out rows whose M is singular."""
     # width/height defaults: bbox extents where the property is NaN
+    # (Quadrilateral.height/width, layout_elements.py:838-862)
     bw = opts[:, :, 0].max(axis=1) - opts[:, :, 0].min(axis=1)
     bh = opts[:, :, 1].max(axis=1) - opts[:, :, 1].min(axis=1)
     ow = np.where(np.isnan(ow), bw, ow)
     oh = np.where(np.isnan(oh), bh, oh)
-    # mapped_rectangle_points (layout_elements.py:907-931): stable ranks
-    rx = opts[:, :, 0].argsort(axis=1, kind="stable").argsort(
-        axis=1, kind="stable"
-    )
-    ry = opts[:, :, 1].argsort(axis=1, kind="stable").argsort(
-        axis=1, kind="stable"
-    )
-    dst = np.empty_like(opts)
-    dst[:, :, 0] = np.where(rx <= 1, 0.0, ow[:, None])
-    dst[:, :, 1] = np.where(ry <= 1, 0.0, oh[:, None])
-    # stacked 8×8 systems
-    A = np.zeros((n, 8, 8))
-    rhs = np.zeros((n, 8))
-    x, y = opts[:, :, 0], opts[:, :, 1]
-    u, v = dst[:, :, 0], dst[:, :, 1]
-    for i in range(4):
-        A[:, 2 * i, 0] = x[:, i]
-        A[:, 2 * i, 1] = y[:, i]
-        A[:, 2 * i, 2] = 1.0
-        A[:, 2 * i, 6] = -u[:, i] * x[:, i]
-        A[:, 2 * i, 7] = -u[:, i] * y[:, i]
-        A[:, 2 * i + 1, 3] = x[:, i]
-        A[:, 2 * i + 1, 4] = y[:, i]
-        A[:, 2 * i + 1, 5] = 1.0
-        A[:, 2 * i + 1, 6] = -v[:, i] * x[:, i]
-        A[:, 2 * i + 1, 7] = -v[:, i] * y[:, i]
-        rhs[:, 2 * i] = u[:, i]
-        rhs[:, 2 * i + 1] = v[:, i]
-    M = np.empty((n, 3, 3))
-    M[:, 2, 2] = 1.0
-    sol = np.linalg.solve(A, rhs)  # raises LinAlgError on singular rows
-    M[:, 0, :] = sol[:, 0:3]
-    M[:, 1, :] = sol[:, 3:6]
-    M[:, 2, 0:2] = sol[:, 6:8]
+    dst = _mapped_rectangle_points(opts, ow, oh)
+    M, ok = perspective_matrices(opts, dst)
     if is_inv:
-        M = np.linalg.inv(M)
-    src_h = np.concatenate([spts, np.ones((n, 4, 1))], axis=2)  # (N,4,3)
+        ok[ok] = np.linalg.matrix_rank(M[ok]) == 3
+        M[ok] = np.linalg.inv(M[ok])
+    src_h = np.concatenate([spts, np.ones(spts.shape[:2] + (1,))], axis=2)
     out_h = np.einsum("nij,nkj->nki", M, src_h)  # (N,4,3)
-    return out_h[:, :, :2] / out_h[:, :, 2:3]
+    return out_h[:, :, :2] / out_h[:, :, 2:3], ok
 
 
 def _make_transform_udf(is_inv: bool):
@@ -183,23 +141,11 @@ def _make_transform_udf(is_inv: bool):
             )
             ow = other_width.to_numpy(dtype="float64", na_value=np.nan)[idx]
             oh = other_height.to_numpy(dtype="float64", na_value=np.nan)[idx]
-            try:
-                res = _batched_transform(spts, opts, ow, oh, is_inv)
-                flat = res.reshape(len(idx), 8)
-                res_rows = flat.tolist()
-            except np.linalg.LinAlgError:
-                # a singular (degenerate) quad poisons the stacked solve —
-                # recover row-by-row on the scalar path
-                res_rows = []
-                for j in range(len(idx)):
-                    ow2, oh2 = _quad_width_height(opts[j], ow[j], oh[j])
-                    res_rows.append(
-                        perspective_transform_points(
-                            spts[j], opts[j], ow2, oh2, is_inv
-                        ).reshape(-1).tolist()
-                    )
+            res, ok = _batched_transform(spts, opts, ow, oh, is_inv)
+            flat = res.reshape(len(idx), 8).tolist()
             for j, i in enumerate(idx):
-                rows[i] = res_rows[j]
+                if ok[j]:
+                    rows[i] = flat[j]
         return pd.Series(rows, dtype="object")
 
     return _udf

@@ -279,19 +279,6 @@ def is_in(
     return F.when(is_interval(b), i_case).otherwise(rq_case)
 
 
-def _interval_x_rect(i: Column, r_coords, combine) -> Column:
-    """Interval.intersect/union with a Rectangle-shaped other
-    (layout_elements.py:312-323, :360-371): clamp/extend the matching axis
-    band, keep the other axis from the rectangle.  ``combine`` is
-    (greatest, least) for intersect, (least, greatest) for union."""
-    lo, hi = combine
-    x1, y1, x2, y2 = r_coords
-    return F.when(
-        i["axis"] == "x",
-        _rect(lo(x1, i["start"]), y1, hi(x2, i["end"]), y2),
-    ).otherwise(_rect(x1, lo(y1, i["start"]), x2, hi(y2, i["end"])))
-
-
 def _rect(x1, y1, x2, y2) -> Column:
     return S.make_block(block_type=RECTANGLE, x_1=x1, y_1=y1, x_2=x2, y_2=y2)
 

@@ -16,7 +16,10 @@ Scale design notes (the point of each implementation):
   shuffle on (band, band-key) buckets candidates; only bucket-mates are
   compared.  This is the O(n)-candidate near-dup path for 100 TB.
 * SimHash — 60-bit sign-aggregated token hashes; hamming-adjacent
-  bucketing by 4×15-bit chunks.
+  bucketing by 4×15-bit chunks through ``hamming_pairs``, the one
+  pigeonhole Hamming join (pHash, video and audio fingerprints pair
+  through it too): a SHUFFLE_HASH equi-join that emits each pair once
+  from its first agreeing chunk, no dedup exchange.
 
 Hash-lane policy: keys that must match the oracle BY VALUE derive from
 md5 lanes (``md5_lane60`` — DuckDB hex-casts the same md5 prefix), so
@@ -694,75 +697,80 @@ def simhash_from_text_vectorized() -> "Column":
     return pandas_udf(_kernel, "long")
 
 
-def simhash_buckets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """SimHash near-dup bucketing: split the 60-bit hash into 4×15-bit
-    chunks; docs within hamming distance 3 share at least one chunk
-    (pigeonhole), so an equi-join on (chunk_idx, chunk) finds all such
-    pairs without a cross join.  The signature stage is ONE fused Arrow
-    kernel (``simhash_from_text_vectorized``).
+def hamming_pairs(sigs: DataFrame, bits: int, n_chunks: int) -> DataFrame:
+    """The pigeonhole Hamming-radius join (Manku et al., WWW'07):
+    ``(id, sig)`` rows → ``(id_a, id_b, hamming)`` for every pair with
+    ``id_a < id_b`` that shares at least one of the ``n_chunks`` chunks of
+    ``bits // n_chunks`` bits — so every pair within hamming
+    ``n_chunks − 1`` — with ``hamming = bit_count(sig_a XOR sig_b)`` (int).
 
-    Pair UNIQUENESS is by construction, not by a dedup exchange: a pair
-    agreeing on several chunks is emitted only from its FIRST agreeing
-    chunk (the join adds 'every earlier chunk differs'), so the
-    27M-pair-scale output skips the dropDuplicates shuffle entirely —
-    the only exchange left is the bucket equi-shuffle of the tiny chunk
-    table (guide §2.4: remove shuffles outright)."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        simhash_from_text_vectorized()(F.col(text_col)).alias("sim"),
-    )
+    One SHUFFLE_HASH equi-join on ``(chunk_idx, chunk)``; no dedup
+    exchange: a pair agreeing on several chunks is emitted only from its
+    FIRST agreeing chunk (the join adds 'every earlier chunk differs').
+    Precondition: one signature per id."""
+    bpc = bits // n_chunks
+    mask = (1 << bpc) - 1 if bpc < 64 else -1
 
     def _chunk(col, i):
-        return F.shiftright(col, 15 * i).bitwiseAND(F.lit(0x7FFF))
+        return F.shiftright(col, bpc * i).bitwiseAND(F.lit(mask))
 
-    chunks = sh.select(
+    chunks = sigs.select(
         "id",
-        "sim",
+        "sig",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("chunk_idx"),
-                        _chunk(F.col("sim"), i).alias("chunk"),
+                        _chunk(F.col("sig"), i).alias("chunk"),
                     )
-                    for i in range(4)
+                    for i in range(n_chunks)
                 ]
             )
         ).alias("c"),
-    ).select("id", "sim", "c.chunk_idx", "c.chunk")
+    ).select("id", "sig", "c.chunk_idx", "c.chunk")
     a = chunks.alias("a").hint("SHUFFLE_HASH")
     b = chunks.alias("b").hint("SHUFFLE_HASH")
     # first-agreeing-chunk guard: for this row's chunk_idx = i, every
-    # chunk j < i must DIFFER between the two sims — each distinct pair
-    # then appears exactly once across the 4 chunk streams
+    # chunk j < i must DIFFER between the two sigs — each distinct pair
+    # then appears exactly once across the n_chunks chunk streams
     first_match = functools.reduce(
         lambda acc, j: acc
         & (
             (F.col("a.chunk_idx") <= F.lit(j))
-            | (_chunk(F.col("a.sim"), j) != _chunk(F.col("b.sim"), j))
+            | (_chunk(F.col("a.sig"), j) != _chunk(F.col("b.sig"), j))
         ),
-        range(3),
+        range(n_chunks - 1),
         F.lit(True),
     )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id"))
-            & first_match,
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.sim").bitwiseXOR(F.col("b.sim"))
-            ).cast("long").alias("hamming"),
-        )
+    return a.join(
+        b,
+        (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
+        & (F.col("a.chunk") == F.col("b.chunk"))
+        & (F.col("a.id") < F.col("b.id"))
+        & first_match,
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
     )
-    return pairs.select("id_a", "id_b", "hamming")
+
+
+def simhash_buckets(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """SimHash near-dup bucketing: split the 60-bit hash into 4×15-bit
+    chunks; docs within hamming distance 3 share at least one chunk
+    (pigeonhole), so ``hamming_pairs``' equi-join on (chunk_idx, chunk)
+    finds all such pairs, each once, without a cross join or a dedup
+    exchange.  The signature stage is ONE fused Arrow kernel
+    (``simhash_from_text_vectorized``).  Precondition: one row per id."""
+    sh = df.select(
+        F.col(id_col).alias("id"),
+        simhash_from_text_vectorized()(F.col(text_col)).alias("sig"),
+    )
+    pairs = hamming_pairs(sh, SIMHASH_BITS, 4)
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
 
 def ngram_overlap_counts(

@@ -400,8 +400,10 @@ def _decode_png(payload: bytes) -> Optional[np.ndarray]:
 def decode_pixels(payload: bytes) -> Optional[np.ndarray]:
     """Image payload → uint8 pixel array (h, w, 3), or None if the format
     is not one of the natively-supported formats (PPM/PGM/BMP/
-    non-interlaced 8-bit PNG/baseline+progressive JPEG) and PIL is
-    unavailable."""
+    non-interlaced 8-bit PNG/baseline+progressive JPEG/GIF) and PIL is
+    unavailable.  The native decoders always run first and PIL reads only
+    what they return None for, so the pixels (and pHash, features, crops)
+    of the same bytes do not depend on whether PIL is installed."""
     if payload is None:
         return None
     # untrusted crawl bytes: ANY decoder exception means "not decodable
@@ -412,16 +414,15 @@ def decode_pixels(payload: bytes) -> Optional[np.ndarray]:
             arr = _decode_bmp(payload)
         if arr is None:
             arr = _decode_png(payload)
-        if arr is None and payload[:2] == b"\xff\xd8" and not HAVE_PIL:
-            # pure-python JPEG path; PIL (below) wins when installed
+        if arr is None and payload[:2] == b"\xff\xd8":
             from ..sources.jpeg_mini import decode_jpeg
 
             arr = decode_jpeg(payload)
-        if arr is None and payload[:6] in (b"GIF87a", b"GIF89a") and not HAVE_PIL:
+        if arr is None and payload[:6] in (b"GIF87a", b"GIF89a"):
             from ..sources.gif_mini import decode_gif
 
             arr = decode_gif(payload)
-        if arr is None and HAVE_PIL:
+        if arr is None and HAVE_PIL:  # only what no native decoder reads
             import io as _io
 
             img = Image.open(_io.BytesIO(payload)).convert("RGB")
@@ -546,22 +547,24 @@ def _crop_block(arr: np.ndarray, bd: dict) -> np.ndarray:
     ):
         from ..functions.perspective import (
             _mapped_rectangle_points,
-            get_perspective_matrix,
+            perspective_matrices,
         )
 
-        qpts = np.asarray(pts, dtype="float64").reshape(4, 2)
-        xs, ys = qpts[:, 0], qpts[:, 1]
+        qpts = np.asarray(pts, dtype="float64").reshape(1, 4, 2)
+        xs, ys = qpts[0, :, 0], qpts[0, :, 1]
         qw = float(xs.max() - xs.min())
         qh = float(ys.max() - ys.min())
+        dst = _mapped_rectangle_points(qpts, np.array([qw]), np.array([qh]))
+        M, ok = perspective_matrices(qpts, dst)
         try:
-            dst = _mapped_rectangle_points(qpts, qw, qh)
-            M = get_perspective_matrix(qpts, dst)
-            if int(qw) > 0 and int(qh) > 0:
-                crop = warp_perspective(arr, M, int(qw), int(qh))
+            if not ok[0]:
+                crop = None  # degenerate quad → bbox below
+            elif int(qw) > 0 and int(qh) > 0:
+                crop = warp_perspective(arr, M[0], int(qw), int(qh))
             else:
                 crop = arr[0:0, 0:0]
         except np.linalg.LinAlgError:
-            crop = None  # degenerate quad → bbox below
+            crop = None  # singular M → bbox below
         x1, y1, x2, y2 = xs.min(), ys.min(), xs.max(), ys.max()
     else:
         x1, y1 = bd.get("x_1") or 0, bd.get("y_1") or 0

@@ -2,10 +2,11 @@
 
 The image-side analogue of the text dedup family: a 64-bit DCT-based
 perceptual hash per image (robust to re-encoding, format conversion, and
-mild quality changes), then hamming-bucketed candidate pairing with the
-same 4-chunk pigeonhole design as ``dedup.simhash_buckets`` — images
-within hamming distance 3 share at least one 16-bit chunk, so candidates
-come from an equi-join, never a cross join.
+mild quality changes), then hamming-bucketed candidate pairing through
+``dedup.hamming_pairs``, the pigeonhole join ``dedup.simhash_buckets``
+also uses — images within hamming distance 3 share at least one 16-bit
+chunk, so candidates come from an equi-join, never a cross join, and
+each pair is emitted once without a dedup exchange.
 
 pHash recipe (public, standard): luminance → 32×32 box-mean resample
 (integral image) → 2-D DCT-II → keep the low-frequency 8×8 corner →
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField
 
 from ..transport import map_pages
+from .dedup import hamming_pairs
 
 _N = 32
 _D32 = np.zeros((_N, _N))
@@ -106,9 +108,10 @@ def phash_near_dup_pairs(
 ) -> DataFrame:
     """Candidate pairing on (64/n_chunks)-bit chunks — the pigeonhole
     guarantees every pair within hamming ≤ n_chunks−1 shares a chunk —
-    then exact hamming verify via bit_count(xor).  Same scale shape as
-    simhash_buckets: equi-join, MERGE-hinted so the exploded sides never
-    broadcast.
+    then exact hamming verify via bit_count(xor).  The join is
+    ``dedup.hamming_pairs``, the one SimHash uses: a SHUFFLE_HASH
+    equi-join that emits each pair once from its first agreeing chunk.
+    Precondition: one signature per id.
 
     Radius/scale tradeoff: wider radii need more (smaller) chunks, and
     bucket occupancy grows ~n/2^chunk_bits — 16-bit chunks (radius 3)
@@ -122,40 +125,9 @@ def phash_near_dup_pairs(
             f"{n_chunks}x{bpc}-bit pigeonhole guarantees only "
             f"hamming <= {n_chunks - 1}"
         )
-    chunks = df.select(
-        F.col(id_col).alias("id"),
-        F.col(hash_col).alias("ph"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk_idx"),
-                        F.shiftright(F.col(hash_col), bpc * i)
-                        .bitwiseAND(F.lit((1 << bpc) - 1))
-                        .alias("chunk"),
-                    )
-                    for i in range(n_chunks)
-                ]
-            )
-        ).alias("c"),
-    ).select("id", "ph", "c.chunk_idx", "c.chunk")
-    a, b = chunks.alias("a").hint("MERGE"), chunks.alias("b").hint("MERGE")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.ph").bitwiseXOR(F.col("b.ph"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    sigs = df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("sig"))
+    return hamming_pairs(sigs, 64, n_chunks).where(
+        F.col("hamming") <= max_hamming
     )
 
 

@@ -3,7 +3,7 @@
 Stage layout (one narrow Arrow stage; shuffle only for the optional salt
 repartition):
 
-1. [optional] salted repartition ``pmod(xxhash64(url, salt), S)`` — defuses
+1. [optional] salted repartition ``pmod(xxhash64(url, 0), S)`` — defuses
    host-level skew before the Arrow stage (BASELINE.json north_rule).
 2. one ``mapInArrow`` kernel (``transport.map_pages``) that, per page, runs
    a. segment: html → page size + flat block arrays
@@ -147,12 +147,11 @@ _EXTRACT_FIELDS = [
 def extract_main_text(
     pages: DataFrame,
     salt_partitions: Optional[int] = None,
-    salt_round: int = 0,
 ) -> DataFrame:
     """pages(url, warc_ts, html, …) → (url, …, extracted_text, n_blocks).
 
     ``salt_partitions`` adds the explicit salted repartition
-    ``pmod(xxhash64(url, salt_round), S)`` before the Arrow stage — on a
+    ``pmod(xxhash64(url, 0), S)`` before the Arrow stage — on a
     real cluster this spreads hot hosts across executors; leave None for
     single-stage narrow execution when the input is already well
     partitioned (e.g. Iceberg ``bucket(N, url)``).
@@ -162,7 +161,7 @@ def extract_main_text(
         df = df.repartition(
             salt_partitions,
             F.pmod(
-                F.xxhash64(F.col("url"), F.lit(salt_round)),
+                F.xxhash64(F.col("url"), F.lit(0)),
                 F.lit(salt_partitions),
             ),
         )

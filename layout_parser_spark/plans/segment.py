@@ -31,9 +31,8 @@ decodes its own payload (``decode_payload``).
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
 from math import isfinite
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -44,7 +43,6 @@ from pyspark.sql.types import (
     StructField,
 )
 
-from ..schema import FIELD_NAMES
 from ..sources.charset import decode_payload
 from ..transport import map_pages
 
@@ -99,79 +97,6 @@ class _Block:
         self.link_chars = 0
 
 
-class _SegmentParser(HTMLParser):
-    """Collect data-box elements; text accrues to the NEAREST enclosing
-    data-box element; anchor text counts toward link density."""
-
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.page_w: Optional[float] = None
-        self.page_h: Optional[float] = None
-        self.blocks: List[_Block] = []
-        self._stack: List[int] = []  # indices into self.blocks
-        self._a_depth = 0
-
-    def handle_starttag(self, tag, attrs):
-        d = dict(attrs)
-        if tag == "html":
-            self.page_w = _dim(d.get("data-w"))
-            self.page_h = _dim(d.get("data-h"))
-            return
-        if tag == "a":
-            self._a_depth += 1
-        coords = _box(d.get("data-box") or "")
-        if coords is not None:
-            parent = self._stack[-1] if self._stack else None
-            blk = _Block(coords, TAG_TYPE.get(tag, "Text"), parent,
-                         len(self.blocks))
-            self.blocks.append(blk)
-            self._stack.append(blk.order)
-
-    def handle_endtag(self, tag):
-        if tag == "a":
-            self._a_depth = max(0, self._a_depth - 1)
-            return
-        # close the innermost open data-box element for structural tags
-        if self._stack and tag in _STRUCTURAL:
-            self._stack.pop()
-
-    def handle_data(self, data):
-        if not self._stack:
-            return
-        blk = self.blocks[self._stack[-1]]
-        blk.chunks.append(data)
-        if self._a_depth > 0:
-            blk.link_chars += len(data)
-
-
-def parse_page(html: str):
-    """Parse one page → (page_w, page_h, [block rows])."""
-    p = _SegmentParser()
-    p.feed(html)
-    rows = []
-    for blk in p.blocks:
-        raw = "".join(blk.chunks)
-        text = " ".join(raw.split())
-        total = len(raw.strip())
-        link_density = (blk.link_chars / total) if total else 0.0
-        x1, y1, x2, y2 = blk.box
-        row = {n: None for n in FIELD_NAMES}
-        row.update(
-            block_type="rectangle",
-            x_1=x1,
-            y_1=y1,
-            x_2=x2,
-            y_2=y2,
-            text=text,
-            id=blk.order,
-            type=blk.type,
-            parent=blk.parent,
-            score=1.0 - link_density,
-        )
-        rows.append(row)
-    return p.page_w, p.page_h, rows
-
-
 import re as _re
 
 # attribute body may contain '>' inside quoted values (legal HTML, and
@@ -211,12 +136,13 @@ _STRUCTURAL = frozenset(
 
 
 class _FastParser:
-    """Hand-rolled tag tokenizer with the exact event semantics the
-    segmentation relies on (same push/pop/text/anchor accounting as
-    ``_SegmentParser``), ~4× faster than html.parser on these pages.
-    Entities in text are unescaped lazily (only when '&' present).
-    Parity with the HTMLParser path is pinned by
-    tests/test_extract.py (engine == independent HTMLParser oracle)."""
+    """Hand-rolled tag tokenizer with the event semantics of an
+    html.parser walk (a data-box element opens a block, a structural end
+    tag closes the innermost one, text goes to the innermost open block,
+    text inside <a> counts as link text), ~4× faster than html.parser on
+    these pages.  Entities in text are unescaped lazily (only when '&'
+    present).  Parity with html.parser is pinned by tests/test_extract.py
+    against the independent oracle ``oracle_blocks``."""
 
     __slots__ = ("page_w", "page_h", "blocks", "_stack", "_a_depth")
 
@@ -230,9 +156,9 @@ class _FastParser:
     def feed(self, html: str) -> None:
         # Hot loop (the whole-corpus CPU bottleneck — BENCH/PLANS.md r5):
         # instance/state lookups are hoisted into locals, the three match
-        # groups come from ONE .groups() call, and the end-tag rule of
-        # ``_SegmentParser.handle_endtag`` is inlined at both call sites
-        # (parity pinned by the engine==HTMLParser-oracle tests).
+        # groups come from ONE .groups() call, and the end-tag rule is
+        # inlined at both call sites (parity pinned by the
+        # engine==HTMLParser-oracle tests).
         from html import unescape
 
         if "<!--" in html:  # comments are not tags; drop them up front
@@ -292,10 +218,10 @@ class _FastParser:
 
 
 def parse_page_arrays(html: str):
-    """Parse one page → (page_w, page_h, column lists).  The flat-array
-    twin of ``parse_page`` used by the page kernels (``segment_pages_arrays``
-    and the extraction kernel), on the fast tag tokenizer; ``parse_page``
-    runs the same walk on html.parser."""
+    """Parse one page → (page_w, page_h, column lists): the segmentation
+    walk of the page kernels (``segment_pages_arrays`` and the extraction
+    kernel), on the fast tag tokenizer.  page_w/page_h are None when the
+    page has no <html> tag."""
     p = _FastParser()
     p.feed(html)
     x1, y1, x2, y2 = [], [], [], []

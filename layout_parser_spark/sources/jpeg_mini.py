@@ -63,10 +63,6 @@ def _idct2_all(blocks: np.ndarray) -> np.ndarray:
     return np.matmul(np.matmul(_C.T, blocks), _C)
 
 
-def _dct2(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
-
-
 # --- Huffman tables ------------------------------------------------------
 
 

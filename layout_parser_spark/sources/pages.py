@@ -32,11 +32,16 @@ DuckDB check.
 from __future__ import annotations
 
 import math
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField
+
+from ..transport import map_pages
+
+#: 2024-01-01T00:00:00Z in unix seconds: ``warc_ts`` of doc_id 0
+_EPOCH_2024 = 1704067200
 
 PAGE_W = 1280
 COL_L = (240, 740)
@@ -158,13 +163,19 @@ def page_url(doc_id: int) -> str:
     return f"https://site{doc_id % 97}.example.com/page/{doc_id}"
 
 
+def _page_row(doc_id: int, text: str):
+    """One document → its (url, html) row (``synth_pages``' kernel)."""
+    return [(page_url(doc_id), render_page_html(doc_id, text).encode("utf-8"))]
+
+
 def synth_pages(documents: DataFrame, replicate: int = 1) -> DataFrame:
     """documents(doc_id, text, lang, …) → pages(url, warc_ts, html BINARY,
     text, lang, doc_id).
 
     ``replicate`` > 1 tiles the corpus deterministically (rep index changes
-    the url + doc_id, not the content) for bench-scale inputs.  Arrow-batched
-    mapInPandas; narrow (no shuffle).
+    the url + doc_id, not the content) for bench-scale inputs.  url and
+    html come from one narrow Arrow stage (``transport.map_pages``);
+    ``warc_ts`` is 2024-01-01T00:00:00Z plus doc_id seconds.  No shuffle.
     """
     base = documents.select("doc_id", "text", "lang")
     if replicate > 1:
@@ -178,29 +189,16 @@ def synth_pages(documents: DataFrame, replicate: int = 1) -> DataFrame:
             "text",
             "lang",
         )
-
-    schema = (
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, doc_id long"
+    pages = map_pages(
+        base, _page_row, ["doc_id", "text"],
+        [StructField("url", StringType()), StructField("html", BinaryType())],
+        keep=("text", "lang", "doc_id"),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "url": [page_url(int(d)) for d in pdf["doc_id"]],
-                    "warc_ts": pd.to_datetime(
-                        pdf["doc_id"].astype("int64"), unit="s", origin="2024-01-01"
-                    ),
-                    "html": [
-                        render_page_html(int(d), t).encode("utf-8")
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                }
-            )
-            yield out
-
-    return base.mapInPandas(gen, schema=schema)
+    return pages.select(
+        "url",
+        F.timestamp_seconds(F.col("doc_id") + _EPOCH_2024).alias("warc_ts"),
+        "html",
+        "text",
+        "lang",
+        F.col("doc_id").cast("long").alias("doc_id"),
+    )

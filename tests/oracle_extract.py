@@ -18,6 +18,7 @@ Byte-equality of engine output vs this oracle is the north-rule gate.
 
 from __future__ import annotations
 
+import math
 from html.parser import HTMLParser
 from typing import List, Optional
 
@@ -58,27 +59,44 @@ _STRUCTURAL = {
 }
 
 
-def oracle_extract(html: str) -> str:
+def _finite(value) -> Optional[float]:
+    """An attribute value as a finite float, else None."""
+    try:
+        v = float(value)
+    except (TypeError, ValueError):
+        return None
+    return v if math.isfinite(v) else None
+
+
+def oracle_blocks(html: str):
+    """The segmentation reference: html → (page_w, page_h, blocks), each
+    block a dict of box, type, parent, text and score (1 − link density);
+    a block's id is its list index.  page_w/page_h are None without an
+    <html> tag, and a data-w/data-h that is not a finite number reads as
+    0.0; a data-box that is not 4 finite numbers opens no block."""
     t = _Tok()
     t.feed(html)
 
-    page_w = page_h = 0.0
-    blocks = []  # dicts: box, type, text chunks, link chars
+    page_w = page_h = None
+    blocks = []  # dicts: box, type, parent, text chunks, link chars
     stack: List[int] = []
     a_depth = 0
     for kind, a, b in t.events:
         if kind == "open":
             if a == "html":
-                page_w = float(b.get("data-w", 0))
-                page_h = float(b.get("data-h", 0))
-            elif a == "a":
+                w, h = _finite(b.get("data-w")), _finite(b.get("data-h"))
+                page_w = 0.0 if w is None else w
+                page_h = 0.0 if h is None else h
+                continue
+            if a == "a":
                 a_depth += 1
-            if b and "data-box" in b:
-                x1, y1, x2, y2 = (float(v) for v in b["data-box"].split(","))
+            box = [_finite(v) for v in (b.get("data-box") or "").split(",")]
+            if len(box) == 4 and None not in box:
                 blocks.append(
                     {
-                        "box": (x1, y1, x2, y2),
+                        "box": tuple(box),
                         "type": _TYPES.get(a, "Text"),
+                        "parent": stack[-1] if stack else None,
                         "chunks": [],
                         "link": 0,
                     }
@@ -86,7 +104,7 @@ def oracle_extract(html: str) -> str:
                 stack.append(len(blocks) - 1)
         elif kind == "close":
             if a == "a":
-                a_depth -= 1
+                a_depth = max(0, a_depth - 1)
             elif a in _STRUCTURAL and stack:
                 stack.pop()
         else:  # text
@@ -98,10 +116,16 @@ def oracle_extract(html: str) -> str:
 
     # finalize text + link density
     for blk in blocks:
-        raw = "".join(blk["chunks"])
+        raw = "".join(blk.pop("chunks"))
         blk["text"] = " ".join(raw.split())
         total = len(raw.strip())
-        blk["ld"] = blk["link"] / total if total else 0.0
+        blk["score"] = 1.0 - (blk.pop("link") / total if total else 0.0)
+    return page_w, page_h, blocks
+
+
+def oracle_extract(html: str) -> str:
+    page_w, page_h, blocks = oracle_blocks(html)
+    page_w, page_h = page_w or 0.0, page_h or 0.0
 
     figures = [blk for blk in blocks if blk["type"] == "Figure"]
 
@@ -117,7 +141,7 @@ def oracle_extract(html: str) -> str:
     for blk in blocks:
         if blk["type"] in ("Header", "Footer", "Nav", "Aside", "Figure"):
             continue
-        if blk["ld"] > 0.5:
+        if blk["score"] < 0.5:
             continue
         x1, y1, x2, y2 = blk["box"]
         if (x2 - x1) >= 0.9 * page_w and (

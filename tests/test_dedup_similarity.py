@@ -1063,6 +1063,85 @@ def test_simhash_buckets_first_match_uniqueness(spark):
             assert r.hamming == 0
 
 
+_U64 = (1 << 64) - 1
+
+
+def _flip(sig, positions):
+    """``sig`` with the bits at ``positions`` flipped, as a signed long."""
+    u = sig & _U64
+    for p in positions:
+        u ^= 1 << p
+    return u - (1 << 64) if u >> 63 else u
+
+
+def _random_sigs(seed, bits, n_chunks):
+    """Seeded (id, sig) rows: random bases (signed 64-bit, negative ones
+    included, or non-negative 60-bit) and per base variants at hamming
+    0–3, n_chunks − 1, n_chunks and n_chunks + 1, plus one with 3 flips
+    inside a single chunk (it agrees with its base on every other
+    chunk)."""
+    rng = random.Random(seed)
+    bpc = bits // n_chunks
+    sigs = []
+    for _ in range(25):
+        base = rng.getrandbits(bits)
+        if bits == 64:
+            base = _flip(base, [])
+        sigs.append(base)
+        for k in sorted({0, 1, 2, 3, n_chunks - 1, n_chunks, n_chunks + 1}):
+            sigs.append(_flip(base, rng.sample(range(bits), k)))
+        c = rng.randrange(n_chunks)
+        sigs.append(_flip(base, rng.sample(range(c * bpc, (c + 1) * bpc), 3)))
+    return list(enumerate(sigs))
+
+
+def _ref_pairs(rows, keep):
+    """Plain-Python all pairs: (id_a, id_b, hamming) for id_a < id_b where
+    ``keep(u_a, u_b, hamming)`` holds on the unsigned 64-bit values."""
+    out = []
+    for i, (ia, sa) in enumerate(rows):
+        for ib, sb in rows[i + 1:]:
+            ua, ub = sa & _U64, sb & _U64
+            out.append((min(ia, ib), max(ia, ib), bin(ua ^ ub).count("1"), ua, ub))
+    return sorted((a, b, h) for a, b, h, ua, ub in out if keep(ua, ub, h))
+
+
+def test_hamming_pairs_match_all_pairs_reference(spark):
+    """``hamming_pairs`` (the one pigeonhole join of SimHash, pHash and
+    the audio fingerprints) equals a plain-Python all-pairs scan: every
+    pair sharing a chunk, each exactly once, with its exact hamming; and
+    ``phash_near_dup_pairs`` keeps exactly the pairs at hamming ≤
+    max_hamming (pairs at max_hamming and max_hamming + 1 are in the
+    data)."""
+    from layout_parser_spark.operators.dedup import hamming_pairs
+    from layout_parser_spark.operators.phash import phash_near_dup_pairs
+
+    for seed, bits, n_chunks in ((1, 60, 4), (2, 64, 4), (3, 64, 8), (4, 64, 1)):
+        rows = _random_sigs(seed, bits, n_chunks)
+        assert bits == 60 or any(s < 0 for _, s in rows)
+        df = spark.createDataFrame(rows, "id long, sig long")
+        bpc, mask = bits // n_chunks, (1 << (bits // n_chunks)) - 1
+
+        def shares_chunk(ua, ub, _h):
+            return any(
+                (ua >> (bpc * i)) & mask == (ub >> (bpc * i)) & mask
+                for i in range(n_chunks)
+            )
+
+        got = sorted(tuple(r) for r in hamming_pairs(df, bits, n_chunks).collect())
+        assert got == _ref_pairs(rows, shares_chunk), (bits, n_chunks)
+        if bits == 64:
+            for max_h in {min(2, n_chunks - 1), n_chunks - 1}:
+                pairs = phash_near_dup_pairs(
+                    df, hash_col="sig", id_col="id",
+                    max_hamming=max_h, n_chunks=n_chunks,
+                )
+                want = _ref_pairs(rows, lambda ua, ub, h: h <= max_h)
+                assert sorted(tuple(r) for r in pairs.collect()) == want
+                assert any(h == max_h for _, _, h in want)
+                assert _ref_pairs(rows, lambda ua, ub, h: h == max_h + 1)
+
+
 def test_simhash_kernel_property_random_arrays(spark):
     """Seeded sweep: on 300 random texts (even and odd token counts, so
     exact half votes occur) both fused kernels equal the plain-Python

@@ -11,9 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from layout_parser_spark.plans import extract_main_text, xy_cut_indices
-from layout_parser_spark.plans.segment import parse_page
 from layout_parser_spark.sources import render_page_html, synth_pages
-from oracle_extract import oracle_extract
+from oracle_extract import oracle_blocks, oracle_extract
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -31,18 +30,21 @@ def test_oracle_vs_renderer_roundtrip():
 def test_segmentation_parses_blocks():
     html = render_page_html(3, "one two three four five six seven eight "
                                "nine ten eleven twelve")
-    w, h, rows = parse_page(html)
+    w, h, rows = oracle_blocks(html)
     assert w == 1280 and h >= 1000
     types = [r["type"] for r in rows]
     assert "Header" in types and "Footer" in types and "Nav" in types
     assert "Figure" in types
     # caption block has parent set to the figure block id
-    fig_id = next(r["id"] for r in rows if r["type"] == "Figure")
+    fig_id = types.index("Figure")
     caption = [r for r in rows if r["parent"] == fig_id]
     assert len(caption) == 1
     # ad block: all-anchor text → score 0
-    ad = [r for r in rows if r["score"] is not None and r["score"] < 0.5]
+    ad = [r for r in rows if r["score"] < 0.5]
     assert len(ad) >= 2  # nav + ad
+    from layout_parser_spark.plans.segment import parse_page_arrays
+
+    assert parse_page_arrays(html) == _page_columns(html)
 
 
 def test_xy_cut_two_columns():
@@ -249,16 +251,17 @@ MALFORMED_PAGES = [
 
 
 def _page_columns(html):
-    """``parse_page`` output in ``parse_page_arrays``' column layout."""
-    w, h, rows = parse_page(html)
-    keys = ("x_1", "y_1", "x_2", "y_2", "text", "type", "parent", "score")
-    return w, h, tuple([r[k] for r in rows] for k in keys)
+    """``oracle_blocks`` output in ``parse_page_arrays``' column layout."""
+    w, h, rows = oracle_blocks(html)
+    boxes = [[r["box"][i] for r in rows] for i in range(4)]
+    keys = ("text", "type", "parent", "score")
+    return w, h, tuple(boxes + [[r[k] for r in rows] for k in keys])
 
 
 def test_malformed_attributes_parse_like_html_parser():
     """A non-numeric or non-finite data-w/data-h reads as 0.0 and a
-    data-box that is not 4 finite numbers opens no block, in both
-    parsers."""
+    data-box that is not 4 finite numbers opens no block, in the engine's
+    tokenizer as in the html.parser reference (``oracle_blocks``)."""
     from layout_parser_spark.plans.segment import parse_page_arrays
 
     for html in MALFORMED_PAGES:

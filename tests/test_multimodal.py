@@ -68,6 +68,34 @@ def test_decode_image_real_histogram():
     assert feats[15] == 1.0 and sum(feats) == pytest.approx(1.0)
 
 
+def test_native_decoders_run_before_pil(monkeypatch):
+    """JPEG and GIF bytes decode to the same pixels whether or not PIL is
+    installed: the native decoders run first, PIL reads only what they
+    return None for."""
+    import layout_parser_spark.operators.multimodal as mm
+    from layout_parser_spark.sources.gif_mini import decode_gif, encode_gif
+    from layout_parser_spark.sources.jpeg_mini import decode_jpeg, encode_jpeg
+
+    other = np.zeros((2, 2, 3), dtype=np.uint8)
+
+    class _StubImage:
+        @staticmethod
+        def open(_buf):
+            return _StubImage()
+
+        def convert(self, _mode):
+            return other
+
+    monkeypatch.setattr(mm, "HAVE_PIL", True)
+    monkeypatch.setattr(mm, "Image", _StubImage, raising=False)
+    img = _grad(16, 24)
+    jpeg, gif = encode_jpeg(img, quality=90), encode_gif((img >> 6) << 6)
+    assert np.array_equal(decode_pixels(jpeg), decode_jpeg(jpeg))
+    assert np.array_equal(decode_pixels(gif), decode_gif(gif))
+    # bytes no native decoder reads still go to PIL
+    assert np.array_equal(decode_pixels(b"\x00not an image"), other)
+
+
 def test_decode_image_falls_back_on_unknown_format():
     h, w, feats = decode_image(b"\x89PNG\r\n\x1a\nnot really")
     assert h is not None and len(feats) == 16  # deterministic fake

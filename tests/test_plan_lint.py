@@ -165,9 +165,6 @@ ARROW_TRANSPORT_EXCEPTIONS = {
     ("operators/grouping.py", "_per_document_cca"):
         "a per-partition kernel over whole documents: it concatenates "
         "its partition and groups it by key, which is no per-row map",
-    ("sources/pages.py", "synth_pages"):
-        "the columnar synthetic-page generator on the benchmark's set-up "
-        "path: vectorized pandas columns, no per-row kernel",
 }
 TRANSPORT_MODULE = "transport.py"
 _CROSSINGS = ("mapInPandas", "mapInArrow", "iterrows")

@@ -169,6 +169,35 @@ def test_roundtrips_quad_perspective(spark):
     assert_points_close(row.i_q, list(row.i_on_q_expected.points))
 
 
+def test_degenerate_quad_reads_null(spark):
+    """A degenerate quadrilateral `other` (collinear points: its 8×8
+    system is singular) gives NULL points on its own row; the good row of
+    the same Arrow batch keeps its value.  The reference raises there."""
+    df = spark.createDataFrame(
+        [(0, [2.0, 2.0, 6.0, 2.0, 6.0, 7.0, 2.0, 5.0]),
+         (1, [0.0, 0.0, 5.0, 0.0, 10.0, 0.0, 15.0, 0.0])],
+        "k int, pts array<double>",
+    ).coalesce(1)
+    q = S.quadrilateral(F.col("pts"))
+    R = S.rectangle(3, 3, 5, 6)
+    rows = sorted(
+        df.select(
+            "k", condition_on_any(R, q).alias("c"),
+            relative_to_any(R, q).alias("r"),
+        ).collect()
+    )
+    assert rows[0].c.points == [
+        4.571428571428572, 4.571428571428572, 8.0, 5.6000000000000005,
+        8.0, 9.200000000000001, 4.571428571428572, 7.142857142857144,
+    ]
+    assert rows[0].r.points == [
+        1.428571428571429, 1.4285714285714286, 3.333333333333334,
+        1.1111111111111112, 3.333333333333334, 4.444444444444445,
+        1.428571428571429, 5.714285714285714,
+    ]
+    assert rows[1].c.points is None and rows[1].r.points is None
+
+
 def _shapes():
     return (
         S.interval(1, 2, axis="y", canvas_height=30, canvas_width=400),
