@@ -2554,10 +2554,10 @@ def _queries_df(spark, sf: str):
 def q_dedup_embedding_cosine(spark, sf: str) -> DataFrame:
     from layout_parser_spark.operators.dedup import embedding_near_dup_pairs
 
-    # spread OFF since the r6 applyInPandas restructure: the pairwise
-    # work now runs after the groupBy(label) hash exchange, so scan-side
-    # parallelism no longer matters and the round-robin pass is pure
-    # cost (A/B at sf0.1: 0.77 -> 0.57 s; flat at pseudo-sf1).  The LSH
+    # spread OFF: the pairwise work runs after the groupBy(label) hash
+    # exchange, so scan-side parallelism does not matter and the
+    # round-robin pass is pure cost (A/B at sf0.1: 0.77 -> 0.57 s; flat
+    # at pseudo-sf1).  The LSH
     # twin below KEEPS spread: its 24 hyperplane dot folds per vector
     # run scan-side, before any exchange.
     return embedding_near_dup_pairs(

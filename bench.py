@@ -746,8 +746,12 @@ scale-invariant; AQE may fuse differently at volume but the JOIN
 STRATEGY and exchange count shown here are what the optimizer commits
 to).  CartesianProduct must be 0 everywhere; BNLJ only against O(1)
 broadcast sides (see tests/test_plan_lint.py's allow-list).  Python
-stages are the designed Arrow slots (the page kernels, perspective,
-media decode) — everything else is JVM codegen.
+stages are the designed Arrow slots: the ``transport.map_pages`` kernels
+(page, media decode, PDF/WARC/OCR, the MinHash/SimHash signatures, the
+repetition counts, NFC, the per-document CCA and the embedding pair
+scorer) and the declared exceptions of
+tests/test_plan_lint.py::test_one_arrow_transport (perspective,
+``xy_cut_joined``) — everything else is JVM codegen.
 
 Self-join counts are STATIC-plan counts: for the dedup self-joins
 (minhash_lsh, simhash_buckets) the two sides print the signature

@@ -279,10 +279,6 @@ def is_in(
     return F.when(is_interval(b), i_case).otherwise(rq_case)
 
 
-def _rect(x1, y1, x2, y2) -> Column:
-    return S.make_block(block_type=RECTANGLE, x_1=x1, y_1=y1, x_2=x2, y_2=y2)
-
-
 _QUAD_MSG = (
     "The intersection between a Quadrilateral and other objects might "
     "generate Polygon shapes that are not supported; pass strict=False to "

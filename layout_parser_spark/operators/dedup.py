@@ -31,11 +31,11 @@ DuckDB oracles detect duplicates from the RAW segment/gram text
 instead, so a green row doubles as a collision-freeness certificate
 for the xxhash64 lane.
 
-Python runs in Arrow batches only, never row-at-a-time: the MinHash and
-SimHash signature stages are one fused text → signature kernel each
-(``minhash_signatures_from_text``, ``simhash_from_text_vectorized``), and
-embedding cosine is scored by one ``applyInPandas`` kernel per
-block/bucket.  Everything else is columnar expressions + hash aggregates.
+Python crosses Arrow only through ``transport.map_pages``: the MinHash
+and SimHash signature stages are one fused text → signature kernel each
+(``minhash_signatures``, ``simhash_signatures``), and embedding cosine
+is scored by one kernel per block/bucket over its collected vectors.
+Everything else is columnar expressions + hash aggregates.
 """
 
 from __future__ import annotations
@@ -46,7 +46,10 @@ from typing import List, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField
 from pyspark.storagelevel import StorageLevel
+
+from ..transport import map_pages
 
 #: Mersenne prime 2^31−1: Carter-Wegman universe for minhash permutations.
 #: a·x with a,x < 2^31 stays < 2^62 — no overflow in Spark longs or
@@ -227,12 +230,16 @@ def ngram_jaccard_pairs(
     return pairs
 
 
-def minhash_signatures_from_text(
-    num_hashes: int = 64, n: int = 3
-) -> "Column":
-    """Arrow kernel fusing tokenize → distinct word-n-gram shingles →
-    md5 base lane → Carter-Wegman minima: raw text in, MinHash
-    signature array out, ONE python slot for the whole signature stage.
+def minhash_signatures(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 64,
+    n: int = 3,
+) -> DataFrame:
+    """(id, sig): the MinHash signature of every document, one per-row
+    kernel on ``transport.map_pages`` fusing tokenize → distinct
+    word-n-gram shingles → md5 base lane → Carter-Wegman minima.
 
     Definition (the DuckDB oracle ``_sql_minhash_lsh`` computes the same
     values): tokens are ``str.split(' ')`` (== Spark ``split(text, ' ')``,
@@ -240,11 +247,9 @@ def minhash_signatures_from_text(
     ``' '.join`` of n consecutive tokens, base x = md5 lane of the utf-8
     shingle (``int(hexdigest[:15], 16)`` == ``md5_lane60``) mod p, and
     component i = min over x of (a_i·x + b_i) mod p.  a·x < 2^62 keeps
-    the int64 matrix ``(A·x + B) mod p`` exact; one matrix per chunk of
-    ~200 k flattened shingles bounds batch memory, and
-    ``np.minimum.reduceat`` takes the per-row minima.  NULL text and
-    docs with fewer than n tokens (zero shingles) return the identity
-    [p]*k; ``minhash_lsh_pairs`` excludes them upstream.  A plain-Python
+    the int64 matrix ``(A·x + B) mod p`` exact.  NULL text and docs with
+    fewer than n tokens (zero shingles) return the identity [p]*k;
+    ``minhash_lsh_pairs`` excludes them upstream.  A plain-Python
     reference pins it in tests/test_dedup_similarity.py.
 
     Why one kernel: as Column expressions the shingle, md5 and
@@ -252,61 +257,32 @@ def minhash_signatures_from_text(
     md5/conv, ~100 M boxed ops per 5 k docs at k=64); hashlib + numpy do
     the same integer math in one Arrow slot."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     perms = minhash_perm_consts(num_hashes)
     A = np.array([a for a, _ in perms], dtype=np.int64)[:, None]
     B = np.array([b for _, b in perms], dtype=np.int64)[:, None]
+    empty = [MINHASH_P] * num_hashes
     _md5 = hashlib.md5
 
-    def _kernel(texts):
-        out: list = []
-        n_rows = len(texts)
-        i = 0
-        while i < n_rows:
-            j, tot, lens, rows = i, 0, [], []
-            while j < n_rows and tot < 200_000:
-                t = texts.iloc[j]
-                if t is None:
-                    rows.append(np.zeros(1, dtype=np.int64))
-                    lens.append((1, True))
-                else:
-                    toks = t.split(" ")
-                    if len(toks) < n:
-                        rows.append(np.zeros(1, dtype=np.int64))
-                        lens.append((1, True))
-                    else:
-                        grams = {
-                            " ".join(toks[k : k + n])
-                            for k in range(len(toks) - n + 1)
-                        }
-                        arr = np.fromiter(
-                            (
-                                int(_md5(g.encode()).hexdigest()[:15], 16)
-                                % MINHASH_P
-                                for g in grams
-                            ),
-                            dtype=np.int64,
-                            count=len(grams),
-                        )
-                        rows.append(arr)
-                        lens.append((len(arr), False))
-                tot += len(rows[-1])
-                j += 1
-            flat = np.concatenate(rows)
-            M = (A * flat[None, :] + B) % MINHASH_P
-            offs = np.zeros(len(lens), dtype=np.intp)
-            np.cumsum([l for l, _ in lens[:-1]], out=offs[1:])
-            mins = np.minimum.reduceat(M, offs, axis=1)
-            for r, (_, empty) in enumerate(lens):
-                out.append(
-                    [MINHASH_P] * num_hashes if empty else mins[:, r].tolist()
-                )
-            i = j
-        return pd.Series(out)
+    def kernel(text):
+        toks = [] if text is None else text.split(" ")
+        grams = {" ".join(toks[k : k + n]) for k in range(len(toks) - n + 1)}
+        if not grams:
+            return [(empty,)]
+        x = np.fromiter(
+            (int(_md5(g.encode()).hexdigest()[:15], 16) % MINHASH_P
+             for g in grams),
+            dtype=np.int64,
+            count=len(grams),
+        )
+        return [(((A * x + B) % MINHASH_P).min(axis=1).tolist(),)]
 
-    return pandas_udf(_kernel, "array<long>")
+    return map_pages(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")),
+        kernel,
+        ["_text"],
+        [StructField("sig", ArrayType(LongType()))],
+    )
 
 
 def minhash_lsh_pairs(
@@ -334,14 +310,7 @@ def minhash_lsh_pairs(
     # with content signal
     docs = df.where(F.size(F.split(F.col(text_col), " ")) >= n)
     # ONE fused Arrow kernel: text → shingles → md5 lanes → signature
-    # (bit-identical to the staged Column pipeline — see
-    # minhash_signatures_from_text; equality pinned by test)
-    sig = docs.select(
-        F.col(id_col).alias("id"),
-        minhash_signatures_from_text(num_hashes, n)(
-            F.col(text_col)
-        ).alias("sig"),
-    )
+    sig = minhash_signatures(docs, text_col, id_col, num_hashes, n)
     # The signature table feeds THREE consumers below (the banded
     # self-join's shared exchange and both per-id signature attaches);
     # materialize it once so the fused kernel runs exactly once per
@@ -445,11 +414,12 @@ def minhash_lsh_pairs(
 
 
 def _pairwise_cosine_group_fn(threshold: float):
-    """applyInPandas kernel factory for ``embedding_near_dup_pairs``:
-    one block/bucket of (id, v, …) rows in, the pairs (id_a, id_b, sim)
-    with id_a < id_b and sim ≥ threshold − 1e-6 out (the margin keeps
-    every pair that could still clear the threshold after the JVM-side
-    ROUND(…, 6); the exact filter happens there).
+    """Per-group kernel factory for ``embedding_near_dup_pairs``: one
+    block/bucket's collected ``{id, v}`` members in, one row
+    (id_a, id_b, sim) out per pair with id_a < id_b and
+    sim ≥ threshold − 1e-6 (the margin keeps every pair that could still
+    clear the threshold after the JVM-side ROUND(…, 6); the exact filter
+    happens there).
 
     Bit-identity with the former per-pair Column fold
     (``similarity.cosine`` = aggregate(zip_with(a,b,x*y), 0.0, +) /
@@ -474,29 +444,22 @@ def _pairwise_cosine_group_fn(threshold: float):
     Pinned by tests/test_dedup_similarity.py (group kernel vs fold on
     adversarial vectors) and the oracle rows at three scales."""
     import numpy as np
-    import pandas as pd
 
     margin = threshold - 1e-6
 
-    def _fn(pdf):
-        ids_np = pdf["id"].to_numpy()
-        vs = pdf["v"].to_numpy()
-        out_a: list = []
-        out_b: list = []
-        out_s: list = []
+    def _fn(members):
+        out: list = []
         # same-length partitions: a cross-length pair is NULL under
         # zip_with padding and is never emitted
         by_len: dict = {}
-        for i in range(len(vs)):
-            by_len.setdefault(len(vs[i]), []).append(i)
-        for idx in by_len.values():
-            sub_ids = ids_np[idx]
-            order = np.argsort(sub_ids, kind="stable")
-            sid = sub_ids[order]
-            A = np.vstack(
-                [np.asarray(vs[i], dtype=np.float64) for i in
-                 (idx[o] for o in order)]
-            )
+        for m in members:
+            by_len.setdefault(len(m["v"]), []).append(m)
+        for grp in by_len.values():
+            ids = np.array([m["id"] for m in grp])
+            order = np.argsort(ids, kind="stable")
+            sid = ids[order]
+            sid_py = sid.tolist()
+            A = np.array([grp[o]["v"] for o in order], dtype=np.float64)
             m = A.shape[0]
             z = np.zeros((m, 1))
             # sqrt-fold per vector; x² is never -0.0, so the fold's +0.0
@@ -517,12 +480,12 @@ def _pairwise_cosine_group_fn(threshold: float):
                 with np.errstate(divide="ignore", invalid="ignore"):
                     sims = dots / (norms[i] * norms[j0:])
                 keep = sims >= margin  # NaN compares False, like the fold
-                if keep.any():
-                    kj = np.nonzero(keep)[0]
-                    out_a.extend([sid[i]] * len(kj))
-                    out_b.extend(sid[j0 + kj])
-                    out_s.extend(sims[kj])
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b, "sim": out_s})
+                kj = np.nonzero(keep)[0]
+                out.extend(
+                    (sid_py[i], sid_py[j0 + k], sim)
+                    for k, sim in zip(kj.tolist(), sims[kj].tolist())
+                )
+        return out
 
     return _fn
 
@@ -545,9 +508,9 @@ def embedding_near_dup_pairs(
     never a pair-level shuffle of vector payloads):
 
     * ``block_col`` given — all pairs within the blocking column
-      (label/host), scored per block by one ``applyInPandas`` pairwise
-      kernel; right when blocks are small and near-dups cannot cross
-      blocks.
+      (label/host), scored per block by one pairwise kernel on
+      ``transport.map_pages`` over the block's collected vectors; right
+      when blocks are small and near-dups cannot cross blocks.
     * ``block_col=None`` — multi-table random-hyperplane LSH: each vector
       gets ``n_tables`` signatures (independent plane families via
       ``plane_offset``); candidates share (table, signature) and are
@@ -564,15 +527,26 @@ def embedding_near_dup_pairs(
 
     # A NULL vector has no cosine with anything, so it is dropped before
     # any grouping: ``rh_signature`` reads it as signature 0, which would
-    # pile every NULL row into bucket (tbl, 0) of every table.
+    # pile every NULL row into bucket (tbl, 0) of every table.  A NULL
+    # id pairs with nothing (id_a < id_b never holds), so it goes too.
     v = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
         *([F.col(block_col).alias("blk")] if block_col else []),
-    ).where(F.col("v").isNotNull())
-    id_dt = v.schema["id"].dataType.simpleString()
-    out_schema = f"id_a {id_dt}, id_b {id_dt}, sim double"
+    ).where(F.col("v").isNotNull() & F.col("id").isNotNull())
+    id_t = v.schema["id"].dataType
+    pair_fields = [
+        StructField("id_a", id_t),
+        StructField("id_b", id_t),
+        StructField("sim", DoubleType()),
+    ]
     pair_fn = _pairwise_cosine_group_fn(threshold)
+
+    def _pairs(grouped) -> DataFrame:
+        # one row per group, its members collected; the kernel's pairs
+        # replace it
+        members = grouped.agg(F.collect_list(F.struct("id", "v")).alias("_m"))
+        return map_pages(members, pair_fn, ["_m"], pair_fields, keep=[])
 
     def _finish(near_pairs: DataFrame) -> DataFrame:
         # ROUND and the exact threshold filter stay JVM-side; the group
@@ -583,17 +557,14 @@ def embedding_near_dup_pairs(
         ).where(F.col("cosine_sim") >= threshold)
 
     if block_col:
-        # One applyInPandas slot per block: each VECTOR crosses the
-        # python boundary once (m rows per block), not once per pair
+        # One kernel call per block: each VECTOR crosses the python
+        # boundary once (m members per block), not once per pair
         # (m²/2 rows of 2×dim doubles) — the "decide with small rows"
         # shape.  blk IS NOT NULL mirrors the former inner self-join on
         # blk (null keys never matched).
-        near = (
-            v.where(F.col("blk").isNotNull())
-            .groupBy("blk")
-            .applyInPandas(pair_fn, out_schema)
+        return _finish(
+            _pairs(v.where(F.col("blk").isNotNull()).groupBy("blk"))
         )
-        return _finish(near)
 
     sigs = v.select(
         "id",
@@ -621,80 +592,52 @@ def embedding_near_dup_pairs(
     # buckets is scored once per bucket — identical inputs give a
     # bit-identical score, so dropDuplicates keeping any copy is
     # value-deterministic.
-    near = (
-        sigs.groupBy("tbl", "sig")
-        .applyInPandas(pair_fn, out_schema)
-        .dropDuplicates(["id_a", "id_b"])
+    return _finish(
+        _pairs(sigs.groupBy("tbl", "sig")).dropDuplicates(["id_a", "id_b"])
     )
-    return _finish(near)
 
 
-def simhash_from_text_vectorized() -> "Column":
-    """Arrow kernel fusing tokenize → per-token md5 lane → bit-majority
-    pack: raw text in, 60-bit simhash out, one python slot for the whole
-    signature stage.
+def simhash_signatures(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, sig): the 60-bit SimHash of every document, one per-row
+    kernel on ``transport.map_pages`` fusing tokenize → per-token md5
+    lane → bit-majority pack.
 
     Definition (the DuckDB oracle ``_sql_simhash_buckets`` computes the
     same values): tokens are ``str.split(' ')``, each hashed to its md5
     lane (``int(hexdigest[:15], 16)`` == ``md5_lane60``); bit b of the
     result is set iff 2·(tokens with bit b set) ≥ the token count.  NULL
-    text → 0.  One numpy bit-unpack + ``np.add.reduceat`` per chunk of
-    ~200 k flattened tokens bounds batch memory (~100 MB of 60-row bit
-    matrix).  A plain-Python reference pins it in
+    text → 0.  A plain-Python reference pins it in
     tests/test_dedup_similarity.py.
 
     Why one kernel: as Column expressions the per-token md5/conv
     transform and the 60 per-bit ``filter`` passes evaluate interpreted
     (~1.8 s over the hash staging at sf0.1 before the kernel existed)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
     BITS = np.arange(SIMHASH_BITS, dtype=np.int64)
     WEIGHTS = np.int64(1) << BITS
     _md5 = hashlib.md5
-    MASK = (1 << 60) - 1
 
-    def _kernel(texts):
-        out: list = []
-        n_rows = len(texts)
-        i = 0
-        while i < n_rows:
-            j, tot, rows, null_rows = i, 0, [], []
-            while j < n_rows and tot < 200_000:
-                t = texts.iloc[j]
-                if t is None:
-                    rows.append(np.zeros(1, dtype=np.int64))
-                    null_rows.append(True)
-                else:
-                    toks = t.split(" ")
-                    rows.append(
-                        np.fromiter(
-                            (
-                                int(_md5(tok.encode()).hexdigest()[:15], 16)
-                                for tok in toks
-                            ),
-                            dtype=np.int64,
-                            count=len(toks),
-                        )
-                    )
-                    null_rows.append(False)
-                tot += len(rows[-1])
-                j += 1
-            flat = np.concatenate(rows)
-            bits = (flat[None, :] >> BITS[:, None]) & 1
-            offs = np.zeros(len(rows), dtype=np.intp)
-            np.cumsum([len(r) for r in rows[:-1]], out=offs[1:])
-            cnt = np.add.reduceat(bits, offs, axis=1)
-            lens = np.array([len(r) for r in rows], dtype=np.int64)
-            vote = (2 * cnt) >= lens[None, :]
-            packed = (vote * WEIGHTS[:, None]).sum(axis=0)
-            for r, isnull in enumerate(null_rows):
-                out.append(0 if isnull else int(packed[r]) & MASK)
-            i = j
-        return pd.Series(out)
+    def kernel(text):
+        if text is None:
+            return [(0,)]
+        toks = text.split(" ")
+        h = np.fromiter(
+            (int(_md5(t.encode()).hexdigest()[:15], 16) for t in toks),
+            dtype=np.int64,
+            count=len(toks),
+        )
+        cnt = ((h[None, :] >> BITS[:, None]) & 1).sum(axis=1)
+        return [(int(WEIGHTS[2 * cnt >= len(toks)].sum()),)]
 
-    return pandas_udf(_kernel, "long")
+    return map_pages(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")),
+        kernel,
+        ["_text"],
+        [StructField("sig", LongType())],
+    )
 
 
 def hamming_pairs(sigs: DataFrame, bits: int, n_chunks: int) -> DataFrame:
@@ -764,12 +707,10 @@ def simhash_buckets(
     (pigeonhole), so ``hamming_pairs``' equi-join on (chunk_idx, chunk)
     finds all such pairs, each once, without a cross join or a dedup
     exchange.  The signature stage is ONE fused Arrow kernel
-    (``simhash_from_text_vectorized``).  Precondition: one row per id."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        simhash_from_text_vectorized()(F.col(text_col)).alias("sig"),
+    (``simhash_signatures``).  Precondition: one row per id."""
+    pairs = hamming_pairs(
+        simhash_signatures(df, text_col, id_col), SIMHASH_BITS, 4
     )
-    pairs = hamming_pairs(sh, SIMHASH_BITS, 4)
     return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
 

@@ -4,10 +4,11 @@
 The reference's generalized 1-D connected-component analysis builds an
 O(n²) pairwise score matrix and runs scipy ``connected_components``
 (shape_operations.py:25-77).  ``gcca_apply`` and ``detect_lines`` run the
-SAME per-document algorithm inside one ``mapInPandas`` kernel per
-key-hashed partition — a graph op over one page is exactly the right
-granularity for a Python island, and it is embarrassingly parallel
-across documents.  Line detection stays near-linear on dense pages: its
+SAME per-document algorithm as one kernel per document on
+``transport.map_pages``, over the document's boxes collected by a
+``groupBy`` — a graph op over one page is exactly the right granularity
+for a Python island, and it is embarrassingly parallel across
+documents.  Line detection stays near-linear on dense pages: its
 candidate pairs come from a sweep over sorted y-centres that stops at
 the edge of the y-tolerance band, so a page of n boxes costs
 O(n log n + pairs in the band), not O(n²).  scipy is not a dependency: an
@@ -18,16 +19,18 @@ index) and element order within a component is original sequence order.
 Quirk replicated on purpose: ``simple_line_detection`` SWAPS the tolerance
 kwargs at its call site — ``y_tolerance=x_tolerance, x_tolerance=
 y_tolerance`` (shape_operations.py:126-130).  With both defaults = 10 the
-swap is invisible; we pass it through verbatim for parity (compat flag).
+swap is invisible; we pass it through verbatim for parity.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Iterable, List, Optional, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField
+
+from ..transport import map_pages
 
 
 def connected_components_1d(
@@ -159,59 +162,67 @@ def _per_document_cca(
     count_col: str,
     x1: str, y1: str, x2: str, y2: str,
 ) -> DataFrame:
-    """The kernel frame of ``gcca_apply`` and ``detect_lines``:
-    repartition by key, then ONE ``mapInPandas`` kernel per partition
-    with a pandas groupby inside — not per-group ``applyInPandas``, whose
-    per-group Arrow framing dominates when documents are small (measured
-    ~2× on 1 500 ≈10-row groups).  Memory note: the kernel concatenates
-    its whole partition into one frame, so partitions must fit executor
-    memory — which key-hash repartitioning of bounded-size documents
-    guarantees.
+    """The kernel frame of ``gcca_apply`` and ``detect_lines``: one
+    ``groupBy(key_cols).agg(collect_list(…))`` row per document, then
+    one per-document kernel on ``transport.map_pages`` that returns the
+    document's components.  The keys pass through as JVM values, exact
+    at any width.  Rows with a NULL (or NaN) key are dropped: they
+    belong to no document.
 
-    ``components`` maps one document's (x_1, y_1, x_2, y_2) tuples, in
-    ascending ``id_col`` order (hence the reference's first-appearance
-    component order), to its components as index lists.  Aggregation =
-    union-reduce (min/max corners) + member count.
+    ``components`` maps one document's (x_1, y_1, x_2, y_2) tuples of
+    floats (a NULL coordinate is NaN), in ascending ``id_col`` order
+    with NULL ids last (hence the reference's first-appearance component
+    order), to its components as index lists.  Aggregation =
+    union-reduce (min/max corners; a NaN corner comes out NULL) + member
+    count.
 
     Output: key_cols + (comp_col, x_1, y_1, x_2, y_2, count_col)."""
-    # plan-build-time validation (a missing key_cols name would silently
-    # drop from the schema string and fail as an opaque Arrow mismatch)
-    fields = {f.name: f for f in df.schema}
-    missing = [c for c in key_cols if c not in fields]
+    # plan-build-time validation with the operator's own message
+    missing = [c for c in key_cols if c not in df.columns]
     if missing:
         raise ValueError(
-            f"key_cols {missing} not in input schema (have: {sorted(fields)})"
+            f"key_cols {missing} not in input schema (have: {sorted(df.columns)})"
         )
-    ktypes = ", ".join(
-        f"{c} {fields[c].dataType.simpleString()}" for c in key_cols
-    )
-    schema = (
-        f"{ktypes}, {comp_col} int, x_1 double, y_1 double, "
-        f"x_2 double, y_2 double, {count_col} int"
-    )
-    keys = list(key_cols)
-    out_cols = [*keys, comp_col, "x_1", "y_1", "x_2", "y_2", count_col]
+    nan = float("nan")
+    corners = ("x1", "y1", "x2", "y2")
 
-    def gen(batches):
-        chunks = [c for c in batches if len(c)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
+    def kernel(members):
+        members.sort(
+            key=lambda m: (m["id"] is None, 0 if m["id"] is None else m["id"])
+        )
+        boxes = [
+            tuple(nan if m[c] is None else m[c] for c in corners)
+            for m in members
+        ]
         out = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            g = g.sort_values(id_col)
-            boxes = list(zip(g[x1], g[y1], g[x2], g[y2]))
-            for ci, comp in enumerate(components(boxes)):
-                u = _union_boxes([boxes[i] for i in comp])
-                out.append((*kv, ci, *u, len(comp)))
-        yield pd.DataFrame(out, columns=out_cols)
+        for ci, comp in enumerate(components(boxes)):
+            u = _union_boxes([boxes[i] for i in comp])
+            out.append((ci, *[None if v != v else v for v in u], len(comp)))
+        return out
 
-    parted = df.select(
-        *keys, id_col, x1, y1, x2, y2
-    ).repartition(*[F.col(c) for c in keys])
-    return parted.mapInPandas(gen, schema=schema)
+    docs = (
+        df.dropna(subset=list(key_cols))
+        .groupBy(*key_cols)
+        .agg(
+            F.collect_list(
+                F.struct(
+                    F.col(id_col).alias("id"),
+                    *[F.col(c).cast("double").alias(n)
+                      for c, n in zip((x1, y1, x2, y2), corners)],
+                )
+            ).alias("_boxes")
+        )
+    )
+    return map_pages(
+        docs,
+        kernel,
+        ["_boxes"],
+        [
+            StructField(comp_col, IntegerType()),
+            *[StructField(c, DoubleType()) for c in ("x_1", "y_1", "x_2", "y_2")],
+            StructField(count_col, IntegerType()),
+        ],
+    )
 
 
 def gcca_apply(
@@ -226,7 +237,9 @@ def gcca_apply(
     (reference shape_operations.py:25-77) with an ARBITRARY Python
     scoring function — the generic slot: ``gcca_1d``'s union-find over
     every pair of a document's (x_1, y_1, x_2, y_2) tuples, run in the
-    per-document kernel shared with ``detect_lines``.
+    per-document kernel shared with ``detect_lines``.  ``scoring_func``
+    gets the coordinates as floats, a NULL one as NaN.  A row with a
+    NULL key column yields no row.
 
     Output: key_cols + (comp_id, x_1, y_1, x_2, y_2, n_blocks)."""
 
@@ -255,7 +268,10 @@ def detect_lines(
     document, tolerance swap included, in the kernel shared with
     ``gcca_apply``; the candidate pairs come from the y-centre sweep, so
     a dense page stays near-linear.  Per document it equals
-    ``detect_lines_local`` (lines in the same order).
+    ``detect_lines_local`` (lines in the same order).  Coordinates reach
+    the kernel as floats, a NULL one as NaN: a box with a NULL y
+    coordinate has a NaN centre, stays out of the sweep and is a line of
+    its own.  A row with a NULL key column yields no row.
 
     Output: key_cols + (line_id, x_1, y_1, x_2, y_2, n_tokens)."""
     return _per_document_cca(

@@ -1,14 +1,19 @@
 """Text-analysis operators for a large-scale training-data pipeline:
 language ID, quality scoring, token stats, document fingerprinting.
 
-All pure Column expressions (JVM-side, codegen) over a text column — no
-UDFs.  Each has an exact ANSI-SQL twin in ``__spark_entry__.oracle_sql``.
+Column expressions (JVM-side, codegen) over a text column, except two
+per-row Python kernels on ``transport.map_pages``: the repetition counts
+(``repetition_stats_batched``) and NFC (``nfc_normalize_text``).  Each
+query has an exact ANSI-SQL twin in ``__spark_entry__.oracle_sql``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StringType, StructField
+
+from ..transport import map_pages
 
 #: tiny per-language stopword lists (n-gram heuristic lexicons — public
 #: common function words).  Deliberately small: the heuristic's quality is
@@ -211,10 +216,14 @@ def repetition_stats(toks: Column) -> "dict[str, Column]":
     }
 
 
-def repetition_counts_vectorized() -> "Column":
-    """Arrow-kernel twin of the INTEGER counts behind
-    ``repetition_stats``: per document (n_tokens, n_distinct,
-    max_token_count, max_bigram_count) from the raw text.
+def repetition_stats_batched(
+    df, text_col: str = "text", id_col: str = "doc_id"
+):
+    """``repetition_stats`` with its INTEGER counts from a per-row
+    kernel on ``transport.map_pages``: per document (n_tokens,
+    n_distinct, max_token_count, max_bigram_count) from the raw text,
+    then the ratios and ROUND in the JVM — value-identical output,
+    map-only, no shuffle.
 
     Why a designed Python slot: the Column form is three interpreted
     higher-order-function folds per row (aggregate with a struct
@@ -233,57 +242,33 @@ def repetition_counts_vectorized() -> "Column":
     directly is identical."""
     from collections import Counter
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    def counts(text):
+        if text is None:
+            return [(None, None, None, None)]
+        toks = text.split(" ")
+        c = Counter(toks)
+        mb = max(Counter(zip(toks, toks[1:])).values()) if len(toks) > 1 else 0
+        return [(len(toks), len(c), max(c.values()), mb)]
 
-    def _kernel(texts):
-        n_out, d_out, mx_out, mb_out = [], [], [], []
-        for t in texts:
-            if t is None:
-                n_out.append(None); d_out.append(None)
-                mx_out.append(None); mb_out.append(None)
-                continue
-            toks = t.split(" ")
-            n = len(toks)
-            c = Counter(toks)
-            n_out.append(n)
-            d_out.append(len(c))
-            mx_out.append(max(c.values()))
-            mb_out.append(
-                max(Counter(zip(toks, toks[1:])).values()) if n > 1 else 0
-            )
-        return pd.DataFrame(
-            {"n": n_out, "d": d_out, "mx": mx_out, "mb": mb_out}
-        )
-
-    return pandas_udf(
-        _kernel, "struct<n:bigint,d:bigint,mx:bigint,mb:bigint>"
+    cnt = map_pages(
+        df.select(id_col, F.col(text_col).alias("_text")),
+        counts,
+        ["_text"],
+        [StructField(c, LongType()) for c in ("_n", "_d", "_mx", "_mb")],
     )
-
-
-def repetition_stats_batched(
-    df, text_col: str = "text", id_col: str = "doc_id"
-):
-    """``repetition_stats`` computed via the Arrow counting kernel —
-    value-identical output (ratios/ROUND still JVM-side over the exact
-    integers), map-only, no shuffle."""
-    cnt = df.select(
-        F.col(id_col).alias(id_col),
-        repetition_counts_vectorized()(F.col(text_col)).alias("_c"),
-    )
-    n = F.col("_c.n")
+    n = F.col("_n")
     return cnt.select(
         id_col,
         n.alias("n_tokens"),
-        F.round(F.col("_c.d") / F.greatest(n, F.lit(1)), 6).alias(
+        F.round(F.col("_d") / F.greatest(n, F.lit(1)), 6).alias(
             "distinct_ratio"
         ),
-        F.round(F.col("_c.mx") / F.greatest(n, F.lit(1)), 6).alias(
+        F.round(F.col("_mx") / F.greatest(n, F.lit(1)), 6).alias(
             "top_token_frac"
         ),
-        F.round(
-            F.col("_c.mb") / F.greatest(n - 1, F.lit(1)), 6
-        ).alias("top_bigram_frac"),
+        F.round(F.col("_mb") / F.greatest(n - 1, F.lit(1)), 6).alias(
+            "top_bigram_frac"
+        ),
     )
 
 
@@ -601,38 +586,24 @@ def nfc_normalize_text(df, text_col: str = "text", id_col: str = "doc_id"):
     pipeline runs before hashing/dedup — 'café' as e+combining-acute and
     precomposed 'café' must collide, not survive as distinct docs).
 
-    Spark has no built-in normalizer, so this is an Arrow-batched pandas
-    UDF over ``unicodedata.normalize`` — a genuine table-lookup
-    transform with no columnar equivalent; UCD parity with DuckDB's
-    ``nfc_normalize`` is what makes the driver oracle exact.
+    Spark has no built-in normalizer, so this is a per-row kernel on
+    ``transport.map_pages`` over ``unicodedata.normalize`` — a genuine
+    table-lookup transform with no columnar equivalent; UCD parity with
+    DuckDB's ``nfc_normalize`` is what makes the driver oracle exact.
 
-    Returns (id, norm_text, changed)."""
+    Returns (id, norm_text, changed); NULL text gives NULL for both."""
     import unicodedata
 
-    from pyspark.sql.functions import pandas_udf
+    def nfc(text):
+        if text is None:
+            return [(None, None)]
+        norm = unicodedata.normalize("NFC", text)
+        return [(norm, norm != text)]
 
-    # NB: this module has `from __future__ import annotations`, which
-    # stringifies type hints and breaks pandas_udf's hint inference —
-    # so the eval type is pinned via ``useArrow=False``-free legacy
-    # scalar form (no hints, returnType only)
-    def _nfc_fn(s):
-        return s.map(
-            lambda x: unicodedata.normalize("NFC", x)
-            if x is not None
-            else None
-        )
-
-    _nfc = pandas_udf(_nfc_fn, "string")
-
-    # stage the UDF result once — referencing _nfc(text) twice in one
-    # projection evaluates the python stage twice per row
-    staged = df.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("_t"),
-        _nfc(F.col(text_col)).alias("norm_text"),
-    )
-    return staged.select(
-        "id",
-        "norm_text",
-        (F.col("norm_text") != F.col("_t")).alias("changed"),
+    return map_pages(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_text")),
+        nfc,
+        ["_text"],
+        [StructField("norm_text", StringType()),
+         StructField("changed", BooleanType())],
     )

@@ -202,10 +202,6 @@ def _coerce(v, name: str) -> Column:
     return col.cast(StringType())
 
 
-def _as_col(v, name: str) -> Column:
-    return _coerce(v, name)
-
-
 def make_block(**kwargs) -> Column:
     """Build a TEXTBLOCK struct Column with the given fields set, all other
     fields NULL.  ``block_type`` is required.
@@ -221,7 +217,7 @@ def make_block(**kwargs) -> Column:
         if v is None or isinstance(v, (str, int, float, bool)):
             cols.append(_const_field(n, v))
         else:
-            cols.append(_as_col(v, n).alias(n))
+            cols.append(_coerce(v, n).alias(n))
     return F.struct(*cols)
 
 
@@ -270,32 +266,6 @@ def quadrilateral(points, height=None, width=None, **meta) -> Column:
         width=width,
         **meta,
     )
-
-
-def textblock(
-    block: Column,
-    text=None,
-    id=None,  # noqa: A002 - mirrors reference kwarg
-    type=None,  # noqa: A002
-    parent=None,
-    next=None,  # noqa: A002
-    score=None,
-) -> Column:
-    """Attach TextBlock metadata to an existing block struct — the Spark
-    analogue of ``TextBlock(block, text=…, …)``
-    (layout_elements.py:1195-1210)."""
-    out = block
-    for name, v in (
-        ("text", text),
-        ("id", id),
-        ("type", type),
-        ("parent", parent),
-        ("next", next),
-        ("score", score),
-    ):
-        if v is not None:
-            out = out.withField(name, _as_col(v, name))
-    return out
 
 
 def with_meta(block: Column, src: Column) -> Column:

@@ -3,8 +3,12 @@
 Every operator whose per-row work is Python crosses Arrow through
 ``map_pages``: the flagship's page kernels (segmentation, extraction),
 the media kernels (pHash, audio features and fingerprints, header
-metadata, image features, crops, sampled frames), the PDF and WARC
-sources and the OCR acquisition slot.  It is one narrow ``mapInArrow``
+metadata, image features, crops, sampled frames), the PDF, WARC and
+synthetic page sources, the OCR acquisition slot, the text kernels
+(MinHash and SimHash signatures, repetition counts, NFC) and the
+grouped kernels, whose row is one group collected by a ``groupBy`` (the
+per-document connected components of ``gcca_apply``/``detect_lines``,
+the embedding pair scorer).  It is one narrow ``mapInArrow``
 stage — per-row python inside an Arrow batch, never a row-at-a-time
 Spark UDF.  The operators keep their per-payload functions, their output
 schemas and their bad-payload rules (NULL payloads included); the batch

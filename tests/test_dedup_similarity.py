@@ -18,10 +18,10 @@ from layout_parser_spark.operators.dedup import (
     SIMHASH_BITS,
     minhash_lsh_pairs,
     minhash_perm_consts,
-    minhash_signatures_from_text,
+    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_buckets,
-    simhash_from_text_vectorized,
+    simhash_signatures,
 )
 from layout_parser_spark.operators.grouping import (
     _line_close,
@@ -83,12 +83,12 @@ def _random_texts(seed, count):
     ]
 
 
-def _kernel_outputs(spark, texts, kernel):
+def _kernel_outputs(spark, texts, stage, **kw):
+    """{id: sig} from the Spark signature stage ``stage`` over ``texts``."""
     df = spark.createDataFrame(
         list(enumerate(texts)), "id long, text string"
     )
-    out = df.select("id", kernel(F.col("text")).alias("s")).collect()
-    return {r.id: r.s for r in out}
+    return {r.id: r.sig for r in stage(df, "text", "id", **kw).collect()}
 
 
 @pytest.fixture(scope="module")
@@ -325,6 +325,61 @@ def test_gcca_apply_missing_key_col_raises(spark):
         gcca_apply(df, ["nope"], lambda a, b: 1)
 
 
+def test_cca_keys_exact_next_to_null_keys(spark):
+    """``gcca_apply`` and ``detect_lines`` keep a long document key
+    exact when a NULL-key row shares its partition: keys 2^53 and
+    2^53+1 stay two documents (as float64 they would be one, and their
+    two boxes 2 apart one line).  NULL-key rows yield no row, and a NULL
+    coordinate reaches the kernel as a float NaN: the box with a NULL
+    y_1 stays out of the sweep, a line of its own, whose NaN corner
+    comes out NULL."""
+    from layout_parser_spark.operators.grouping import gcca_apply
+
+    big = 2**53
+    rows = [
+        (big, 0, 0.0, 0.0, 10.0, 10.0),
+        (big + 1, 0, 12.0, 0.0, 22.0, 10.0),
+        (None, 0, 0.0, 0.0, 10.0, 10.0),
+        (None, 1, 5.0, 0.0, 15.0, 10.0),
+        (7, 2, 0.0, None, 10.0, 10.0),
+        (7, 0, 0.0, 0.0, 10.0, 10.0),
+        (7, 1, 12.0, 0.0, 22.0, 10.0),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "doc long, block_id long, x_1 double, y_1 double, "
+        "x_2 double, y_2 double",
+    )
+
+    def floats_only(a, b):
+        assert all(isinstance(v, float) for v in a + b), (a, b)
+        return 1 if abs(a[0] - b[0]) <= 15 else 0
+
+    def norm(out):
+        return sorted(
+            (tuple(r) for r in out.collect()), key=lambda r: (r[0], r[1])
+        )
+
+    docs = [
+        (big, 0, 0.0, 0.0, 10.0, 10.0, 1),
+        (big + 1, 0, 12.0, 0.0, 22.0, 10.0, 1),
+    ]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        lines = detect_lines(df, ["doc"], id_col="block_id")
+        comps = gcca_apply(df, ["doc"], floats_only, id_col="block_id")
+        assert norm(lines) == [
+            (7, 0, 0.0, 0.0, 22.0, 10.0, 2),
+            (7, 1, 0.0, None, 10.0, 10.0, 1),
+            *docs,
+        ]
+        # the x test joins the NaN-y box; min(0.0, 0.0, nan) is 0.0
+        assert norm(comps) == [(7, 0, 0.0, 0.0, 22.0, 10.0, 3), *docs]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_embedding_near_dup_lsh_path_recall(spark):
     """Unblocked embedding_near_dup_pairs must use LSH candidates (an
     equi-join, never a cross join) and recover most true near-dup pairs;
@@ -364,13 +419,15 @@ def test_embedding_null_vectors_filtered_before_grouping(spark):
     """NULL vectors leave the plan before bucketing/blocking: the random-
     hyperplane signature of a NULL vector is 0, so without the filter
     every NULL row would land in bucket (tbl, 0) of every table.  Pairs
-    are unchanged by 50 added NULL rows, and the optimized plan carries
-    the null filter on the vector column."""
+    are unchanged by 50 added NULL rows and by rows with a NULL id (which
+    pair with nothing), and the optimized plan carries the null filter
+    on the vector column."""
     from layout_parser_spark.operators.dedup import embedding_near_dup_pairs
 
     rng = random.Random(3)
     rows = [(i, "x", [rng.gauss(0, 1) for _ in range(8)]) for i in range(40)]
     nulls = [(100 + i, "x", None) for i in range(50)]
+    nulls += [(None, "x", v) for _, _, v in rows[:3]]
     schema = "vec_id long, label string, embedding array<double>"
     clean = spark.createDataFrame(rows, schema)
     dirty = spark.createDataFrame(rows + nulls, schema)
@@ -1020,7 +1077,7 @@ def test_minhash_fused_text_kernel_equals_staged_pipeline(spark):
     reference ``_ref_minhash`` on adversarial texts, so the signature
     stage cannot drift from the definition the oracle also computes."""
     got = _kernel_outputs(
-        spark, EDGE_TEXTS, minhash_signatures_from_text(16, 3)
+        spark, EDGE_TEXTS, minhash_signatures, num_hashes=16, n=3
     )
     assert got == {i: _ref_minhash(t, 16, 3) for i, t in enumerate(EDGE_TEXTS)}
 
@@ -1030,7 +1087,7 @@ def test_simhash_fused_text_kernel_equals_staged_pipeline(spark):
     bit-majority in one Arrow slot) equals the step-by-step plain-Python
     reference ``_ref_simhash``, incl. NULL text → 0 and texts made of
     empty tokens only."""
-    got = _kernel_outputs(spark, EDGE_TEXTS, simhash_from_text_vectorized())
+    got = _kernel_outputs(spark, EDGE_TEXTS, simhash_signatures)
     assert got == {i: _ref_simhash(t) for i, t in enumerate(EDGE_TEXTS)}
     assert got[0] == 0
 
@@ -1147,14 +1204,16 @@ def test_simhash_kernel_property_random_arrays(spark):
     exact half votes occur) both fused kernels equal the plain-Python
     references."""
     texts = _random_texts(11, 300)
-    sim = _kernel_outputs(spark, texts, simhash_from_text_vectorized())
+    sim = _kernel_outputs(spark, texts, simhash_signatures)
     assert sim == {i: _ref_simhash(t) for i, t in enumerate(texts)}
-    mh = _kernel_outputs(spark, texts, minhash_signatures_from_text(16, 3))
+    mh = _kernel_outputs(
+        spark, texts, minhash_signatures, num_hashes=16, n=3
+    )
     assert mh == {i: _ref_minhash(t, 16, 3) for i, t in enumerate(texts)}
 
 
 def test_pairwise_cosine_group_kernel_bit_identical_to_fold(spark):
-    """The applyInPandas pairwise kernel behind embedding_near_dup_pairs
+    """The per-group pairwise kernel behind embedding_near_dup_pairs
     must emit EXACTLY the pairs (and bit-equal cosine doubles) of the
     former per-pair Column fold construction (self-join + zip_with/
     aggregate cosine + ROUND + filter), which the oracle certifies —

@@ -159,24 +159,46 @@ def test_build_job_budget(spark, name):
 #: Arrow crossings allowed outside ``transport.map_pages``, the one
 #: transport of per-row Python kernels: (module under
 #: ``layout_parser_spark/``, top-level function) → why it keeps its own.
-#: Any other ``mapInPandas``/``mapInArrow`` call or ``iterrows`` in the
-#: package fails ``test_one_arrow_transport``.
+#: Any other ``_CROSSINGS`` call or decorator in the package fails
+#: ``test_one_arrow_transport``.
 ARROW_TRANSPORT_EXCEPTIONS = {
-    ("operators/grouping.py", "_per_document_cca"):
-        "a per-partition kernel over whole documents: it concatenates "
-        "its partition and groups it by key, which is no per-row map",
+    ("functions/perspective.py", "_make_transform_udf"):
+        "a Column UDF: the perspective transform is a branch inside the "
+        "geometry functions' `when` trees, which no DataFrame stage can be",
+    ("plans/reading_order.py", "xy_cut_joined"):
+        "a Column UDF that the struct API (`segment_pages` → "
+        "`drop_boilerplate` → `xy_cut_joined`) and perfbench's probe "
+        "compose into their own projections",
+    ("streaming/stateful.py", "host_session_stats"):
+        "keeps keyed state across streaming micro-batches, which a "
+        "stateless map cannot",
 }
 TRANSPORT_MODULE = "transport.py"
-_CROSSINGS = ("mapInPandas", "mapInArrow", "iterrows")
+_CROSSINGS = (
+    "mapInPandas",
+    "mapInArrow",
+    "iterrows",
+    "pandas_udf",
+    "applyInPandas",
+    "applyInPandasWithState",
+)
 
 
 def _arrow_crossings():
-    """(module, top-level function, method) for every call of a
-    ``_CROSSINGS`` method in ``layout_parser_spark/``."""
+    """(module, top-level function, name) for every call of a
+    ``_CROSSINGS`` name in ``layout_parser_spark/`` — a method
+    (``df.mapInPandas(…)``), a plain name (``pandas_udf(…)``) or a
+    decorator, called (``@pandas_udf(…)``) or bare (``@pandas_udf``)."""
     import ast
 
+    def callee(node):
+        f = node.func if isinstance(node, ast.Call) else node
+        if isinstance(f, ast.Attribute):
+            return f.attr
+        return getattr(f, "id", None)
+
     pkg = os.path.join(REPO, "layout_parser_spark")
-    found = []
+    found = set()
     for dirpath, _, files in os.walk(pkg):
         for fname in sorted(f for f in files if f.endswith(".py")):
             path = os.path.join(dirpath, fname)
@@ -184,21 +206,23 @@ def _arrow_crossings():
             with open(path) as f:
                 tree = ast.parse(f.read())
             for top in tree.body:
+                nodes = []
                 for node in ast.walk(top):
-                    if (
-                        isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr in _CROSSINGS
-                    ):
+                    if isinstance(node, ast.Call):
+                        nodes.append(node)
+                    nodes += getattr(node, "decorator_list", [])
+                for node in nodes:
+                    if callee(node) in _CROSSINGS:
                         name = getattr(top, "name", "<module>")
-                        found.append((rel, name, node.func.attr))
-    return found
+                        found.add((rel, name, callee(node)))
+    return sorted(found)
 
 
 def test_one_arrow_transport():
     """Per-row Python crosses Arrow only through ``transport.map_pages``
-    (or a declared exception): a new hand-rolled batch loop fails here,
-    and so does an exception whose call is gone."""
+    (or a declared exception): a new hand-rolled batch loop, scalar
+    pandas UDF or grouped pandas map fails here, and so does an
+    exception whose call is gone."""
     found = _arrow_crossings()
     offenders = sorted(
         {
@@ -214,7 +238,54 @@ def test_one_arrow_transport():
     )
     stale = set(ARROW_TRANSPORT_EXCEPTIONS) - {c[:2] for c in found}
     assert not stale, f"declared exceptions with no crossing: {stale}"
-    assert (TRANSPORT_MODULE, "map_pages", "mapInArrow") in found
+    assert [c for c in found if c[0] == TRANSPORT_MODULE] == [
+        (TRANSPORT_MODULE, "map_pages", "mapInArrow")
+    ]
+
+
+def _repo_python_files():
+    """The Python files that may name a package definition: the
+    package, ``__spark_entry__.py``, ``job.py``, ``bench*.py``,
+    ``perfbench/`` and ``tests/``."""
+    import glob
+
+    files = glob.glob(os.path.join(REPO, "bench*.py"))
+    files += [os.path.join(REPO, f) for f in ("__spark_entry__.py", "job.py")]
+    for d in ("layout_parser_spark", "perfbench", "tests"):
+        for dirpath, _, names in os.walk(os.path.join(REPO, d)):
+            files += [
+                os.path.join(dirpath, n) for n in names if n.endswith(".py")
+            ]
+    return files
+
+
+def test_no_unreferenced_definitions():
+    """Every top-level def or class of ``layout_parser_spark/`` is named
+    somewhere besides its own ``def``/``class`` line — by another file of
+    ``_repo_python_files`` or elsewhere in its own module (a call, an
+    import, ``__all__``, a docstring).  A definition that nothing names
+    is dead code: delete it."""
+    import ast
+    import collections
+    import re
+
+    words = collections.Counter()
+    defs = []
+    for path in _repo_python_files():
+        with open(path) as f:
+            src = f.read()
+        words.update(re.findall(r"\w+", src))
+        rel = os.path.relpath(path, REPO).replace(os.sep, "/")
+        if rel.startswith("layout_parser_spark/"):
+            defs += [
+                (rel, top.name)
+                for top in ast.parse(src).body
+                if isinstance(
+                    top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+            ]
+    unnamed = sorted((rel, name) for rel, name in defs if words[name] < 2)
+    assert unnamed == [], f"definitions nothing names: {unnamed}"
 
 
 def test_baseline_appendix_preserved_on_headline_rewrite():
